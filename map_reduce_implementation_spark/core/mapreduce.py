@@ -12,7 +12,8 @@ mapreduce.c:165). The faithful Spark analogue:
 
 - one split            → one RDD partition (line-aligned, built-in)
 - map_func             → ``mapPartitions`` (partition-in, iterator-out)
-- intermediate files   → implicit Spark shuffle (never materialized by us)
+- intermediate files   → none: the narrow ``coalesce`` streams map output
+                         straight into the reduce task, with no shuffle
 - single gang reducer  → ``coalesce(1).mapPartitions`` (numPartitions=1)
 - usr_data             → closure capture
 
@@ -52,10 +53,10 @@ class MapReduceSpec:
     # map and becomes the reducer, blocking on a pipe until the parent
     # signals — an overlap/pipelining experiment whose OUTPUT contract
     # is identical to mapreduce.c. Under Spark the flag changes nothing
-    # at runtime because the overlap already happens: reduce tasks
-    # fetch finished map outputs while later map tasks still run, and
-    # the scheduler launches stages as soon as their parents allow —
-    # exactly the concurrency mapreduce2.c hand-builds with fork+pipe.
+    # at runtime because the overlap already happens: the narrow
+    # ``coalesce`` streams each map split's output into the reduce
+    # function inside the same task — the hand-off mapreduce2.c builds
+    # with fork+pipe.
     # Accepted (and tested result-identical) so a mapreduce2 caller can
     # switch without an API delta. mapreduce2.c's fixed-up child-write
     # wart (result fields written in the child, lost to the parent,
@@ -86,9 +87,15 @@ def run_mapreduce(
 ) -> MapReduceResult:
     """Execute the two-phase map/reduce lifecycle (mapreduce.c:99-191).
 
-    Unlike the reference, map tasks run in parallel (the reference
-    ``waitpid``s inside its fork loop, mapreduce.c:136 — its main
-    performance defect, deliberately not reproduced).
+    ``coalesce`` is narrow, so the map splits are not separate tasks: each
+    of the ``reduce_parallelism`` reduce tasks runs its share of the map
+    splits one after another, then reduces them. At the default
+    ``reduce_parallelism=1`` that is one task for the whole job, like the
+    reference, which ``waitpid``s inside its fork loop (mapreduce.c:136);
+    a traced 4-core run reads a busy ratio of 0.20–0.23. It is kept
+    because it preserves input order: the finder's lines come out as the
+    reference writes them to mr.rst. ``reduce_parallelism > 1`` runs that
+    many tasks in parallel, for a key-partitionable reduce function.
     """
     t0 = time.monotonic_ns()
     sc = spark.sparkContext

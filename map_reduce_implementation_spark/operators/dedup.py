@@ -87,6 +87,16 @@ def _np_murmur3_long(x, h1):
     return (h1 ^ (h1 >> np.uint32(16))).astype(np.uint32)
 
 
+def _list_offsets(n: int, width: int):
+    """Arrow ``ListArray`` offsets ``0, width, …, n·width``, built in int64.
+    The cast to Arrow's int32 list offsets is checked, so a batch past
+    2**31 values raises ``ArrowInvalid`` instead of wrapping."""
+    import numpy as np
+    import pyarrow as pa
+
+    return pa.array(np.arange(0, (n + 1) * width, width, dtype=np.int64)).cast(pa.int32())
+
+
 def minhash_signatures_arrow(
     shingles: DataFrame, num_perm: int = 128, bands: int | None = None
 ) -> DataFrame:
@@ -118,6 +128,8 @@ def minhash_signatures_arrow(
     import numpy as np
     import pyarrow as pa
 
+    if bands is not None and bands <= 0:
+        raise ValueError(f"bands must be positive, got {bands}")
     if bands is not None and num_perm % bands:
         raise ValueError("num_perm must be divisible by bands")
     rows_per_band = num_perm // bands if bands else 0
@@ -164,10 +176,7 @@ def minhash_signatures_arrow(
         arrays = [
             pa.array(doc_all),
             pa.ListArray.from_arrays(
-                pa.array(
-                    np.arange(0, (n + 1) * num_perm, num_perm, dtype=np.int32)
-                ),
-                pa.array(mins_all.ravel()),
+                _list_offsets(n, num_perm), pa.array(mins_all.ravel())
             ),
         ]
         names = ["doc_id", "sig"]
@@ -181,10 +190,7 @@ def minhash_signatures_arrow(
                 buckets[:, b] = h
             arrays.append(
                 pa.ListArray.from_arrays(
-                    pa.array(
-                        np.arange(0, (n + 1) * bands, bands, dtype=np.int32)
-                    ),
-                    pa.array(buckets.view(np.int32).ravel()),
+                    _list_offsets(n, bands), pa.array(buckets.view(np.int32).ravel())
                 )
             )
             names.append("bands")
@@ -222,8 +228,6 @@ def minhash_lsh_pairs(
     narrow banding). At 100 TB the exchange volume dominates, so the
     narrow shape wins despite the extra local joins.
     """
-    if num_perm % bands:
-        raise ValueError("num_perm must be divisible by bands")
     sig = minhash_signatures_arrow(shingles, num_perm, bands=bands).cache()
 
     # band bucket = murmur3 over the band's signature slice hashed AS AN

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from map_reduce_implementation_spark.session import get_spark
@@ -7,6 +9,12 @@ from map_reduce_implementation_spark.session import get_spark
 SF0001 = "/root/testdata/sf0.001"
 SF001 = "/root/testdata/sf0.01"
 REF_CORPUS_DIR = "/root/reference/proj_2_base"
+
+# goldens captured from the reference binary (FIXTURES.md §3) need its corpora
+requires_ref_corpus = pytest.mark.skipif(
+    not os.path.isdir(REF_CORPUS_DIR),
+    reason=f"reference corpora not present at {REF_CORPUS_DIR}",
+)
 
 
 @pytest.fixture(scope="session")

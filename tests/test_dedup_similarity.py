@@ -515,3 +515,31 @@ def test_minhash_arrow_bands_match_jvm_hash(spark):
         ).collect()
     }
     assert {d: b for d, (_, b) in arrow.items()} == jvm_bands
+
+
+@pytest.mark.parametrize("bands", [0, -4])
+def test_minhash_nonpositive_bands_raise_value_error(spark, bands):
+    from map_reduce_implementation_spark.operators.dedup import (
+        minhash_lsh_pairs,
+        minhash_signatures_arrow,
+    )
+
+    sh = spark.createDataFrame([(1, "ab"), (2, "ab")], "doc_id long, shingle string")
+    with pytest.raises(ValueError, match="bands must be positive"):
+        minhash_signatures_arrow(sh, 128, bands=bands)
+    with pytest.raises(ValueError, match="bands must be positive"):
+        minhash_lsh_pairs(sh, 128, bands=bands)
+
+
+def test_minhash_list_offsets_fail_loudly_past_int32():
+    """The signature and band ``ListArray`` offsets are built in int64 and
+    cast to Arrow's int32 list offsets with a check: a batch past 2**31
+    values raises instead of wrapping into corrupt lists."""
+    import pyarrow as pa
+
+    from map_reduce_implementation_spark.operators.dedup import _list_offsets
+
+    offsets = _list_offsets(3, 128)
+    assert offsets.type == pa.int32() and offsets.to_pylist() == [0, 128, 256, 384]
+    with pytest.raises(pa.ArrowInvalid):
+        _list_offsets(2, 2**30)  # last offset 2**31

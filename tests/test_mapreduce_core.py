@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import random
+
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -13,8 +16,9 @@ from map_reduce_implementation_spark.core.mapreduce import (
     run_mapreduce,
     word_finder_map,
 )
+from map_reduce_implementation_spark.jobs.word_finder import word_finder_python
 
-from .conftest import REF_CORPUS_DIR
+from .conftest import REF_CORPUS_DIR, requires_ref_corpus
 
 ALICE = f"{REF_CORPUS_DIR}/input-alice30.txt"
 
@@ -23,6 +27,39 @@ def _parse_counts(lines):
     return {ln.split()[0]: int(ln.split()[1]) for ln in lines}
 
 
+def _python_counts(lines):
+    want = {chr(65 + i): 0 for i in range(26)}
+    for line in lines:
+        for ch in line:
+            if ch.isascii() and ch.isalpha():
+                want[ch.upper()] += 1
+    return want
+
+
+@pytest.fixture(scope="module")
+def generated_corpus(tmp_path_factory):
+    """Seeded ASCII corpus shaped like FIXTURES.md §1: lines of at most 80
+    characters, mixed case, apostrophes, backticks, and words next to
+    ``_`` or digits (boundary cases for the finder)."""
+    rng = random.Random(20261017)
+    words = ["Alice", "alice", "the", "The", "moon", "rabbit", "x", "queen",
+             "theme", "other", "Alice's", "a1ice"]
+    seps = [" ", " ", " ", "'", "`", "_", "-", ", ", ". ", "7", "?"]
+    lines = []
+    for _ in range(3000):
+        line = ""
+        while True:
+            tok = rng.choice(words) + rng.choice(seps)
+            if len(line) + len(tok) > rng.randint(0, 80):
+                break
+            line += tok
+        lines.append(line.rstrip())
+    path = tmp_path_factory.mktemp("corpus") / "generated.txt"
+    path.write_text("\n".join(lines) + "\n")
+    return str(path), lines
+
+
+@requires_ref_corpus
 def test_mapreduce_letter_counter_matches_dataframe_job(spark):
     from map_reduce_implementation_spark.jobs import letter_counter
 
@@ -34,10 +71,49 @@ def test_mapreduce_letter_counter_matches_dataframe_job(spark):
     assert got == want
 
 
+@requires_ref_corpus
 def test_mapreduce_word_finder(spark):
     spec = MapReduceSpec(ALICE, 4, word_finder_map, identity_reduce, usr_data="Alice")
     result = run_mapreduce(spark, spec)
     assert len(result.lines) == 392  # FIXTURES.md golden
+
+
+@pytest.mark.parametrize("split_num", range(1, 7))
+def test_mapreduce_letter_counter_generated_corpus(spark, generated_corpus, split_num):
+    """Generated-corpus twin of the alice counter test: the totals equal a
+    pure-Python count at every split count and the DataFrame job."""
+    from map_reduce_implementation_spark.jobs import letter_counter
+
+    path, lines = generated_corpus
+    spec = MapReduceSpec(path, split_num, letter_counter_map, letter_counter_reduce)
+    result = run_mapreduce(spark, spec)
+    assert result.map_partitions >= split_num
+    assert [ln.split()[0] for ln in result.lines] == [chr(65 + i) for i in range(26)]
+    got = _parse_counts(result.lines)
+    assert got == _python_counts(lines)
+    if split_num == 1:
+        assert got == {r.letter: r.cnt for r in letter_counter(spark, path).collect()}
+
+
+@pytest.mark.parametrize("word", ["Alice", "the", "moon", "x"])
+def test_mapreduce_word_finder_generated_corpus(spark, generated_corpus, word):
+    """Generated-corpus twin of the alice finder golden: the matched lines,
+    in input order, equal the pure-Python boundary-rule oracle."""
+    path, lines = generated_corpus
+    spec = MapReduceSpec(path, 4, word_finder_map, identity_reduce, usr_data=word)
+    want = word_finder_python(lines, word)
+    assert want, f"corpus has no whole-word {word!r}"
+    assert run_mapreduce(spark, spec).lines == want
+
+
+def test_overlap_variant_generated_corpus(spark, generated_corpus):
+    """Generated-corpus twin of the mapreduce2.c overlap parity test."""
+    path, _ = generated_corpus
+    base = MapReduceSpec(path, 4, letter_counter_map, letter_counter_reduce)
+    over = MapReduceSpec(path, 4, letter_counter_map, letter_counter_reduce, overlap=True)
+    a, b = run_mapreduce(spark, base), run_mapreduce(spark, over)
+    assert a.lines == b.lines and len(a.lines) == 26
+    assert b.map_partitions == a.map_partitions
 
 
 @settings(max_examples=20, deadline=None)
@@ -59,13 +135,7 @@ def test_letter_counter_map_reduce_property(text, nsplits):
     chunks = [text[i::nsplits] for i in range(nsplits)]
     partials = [list(letter_counter_map(iter(c), None)) for c in chunks]
     merged = list(letter_counter_reduce(iter([ln for p in partials for ln in p]), None))
-    got = _parse_counts(merged)
-    want = {chr(65 + i): 0 for i in range(26)}
-    for line in text:
-        for ch in line:
-            if ch.isascii() and ch.isalpha():
-                want[ch.upper()] += 1
-    assert got == want
+    assert _parse_counts(merged) == _python_counts(text)
 
 
 @settings(max_examples=30, deadline=None)
@@ -91,6 +161,7 @@ def test_word_finder_map_matches_regex_oracle(lines, word):
     assert got == want
 
 
+@requires_ref_corpus
 def test_overlap_variant_results_identical(spark):
     """mapreduce2.c parity (mapreduce2.c:135-196): the overlap topology
     changes scheduling, never output — a spec with overlap=True must be

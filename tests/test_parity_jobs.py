@@ -6,7 +6,7 @@ import pytest
 
 from map_reduce_implementation_spark.jobs import letter_counter, word_finder
 
-from .conftest import REF_CORPUS_DIR
+from .conftest import REF_CORPUS_DIR, requires_ref_corpus
 
 ALICE = f"{REF_CORPUS_DIR}/input-alice30.txt"
 MOON = f"{REF_CORPUS_DIR}/input-moon10.txt"
@@ -28,24 +28,28 @@ TINY_GOLDEN = {
 }
 
 
+@requires_ref_corpus
 def test_letter_counter_alice_golden(spark):
     rows = letter_counter(spark, ALICE).collect()
     assert [r.letter for r in rows] == [chr(65 + i) for i in range(26)]
     assert {r.letter: r.cnt for r in rows} == ALICE_GOLDEN
 
 
+@requires_ref_corpus
 def test_letter_counter_zero_fill_tiny(spark):
     rows = letter_counter(spark, TINY).collect()
     assert len(rows) == 26  # zeros included (usr_functions.c:102-106)
     assert {r.letter: r.cnt for r in rows} == TINY_GOLDEN
 
 
+@requires_ref_corpus
 @pytest.mark.parametrize("n", [1, 4, 8])
 def test_letter_counter_split_invariant(spark, n):
     rows = letter_counter(spark, ALICE, min_partitions=n).collect()
     assert {r.letter: r.cnt for r in rows} == ALICE_GOLDEN
 
 
+@requires_ref_corpus
 @pytest.mark.parametrize(
     ("path", "word", "expected"),
     [
@@ -62,6 +66,7 @@ def test_word_finder_goldens(spark, path, word, expected):
     assert word_finder(spark, path, word).count() == expected
 
 
+@requires_ref_corpus
 def test_word_finder_exact_lines_tiny(spark):
     got = sorted(r.value for r in word_finder(spark, TINY, "Alice").collect())
     assert got == sorted(
@@ -80,6 +85,7 @@ def test_word_finder_underscore_is_boundary(spark):
     # '_' is NOT alnum in the reference → boundary (usr_functions.c:168-169)
     assert got == {"foo_the_bar", "the quick"}
 
+@requires_ref_corpus
 def test_counter_paths_agree(spark):
     """The Arrow histogram path, the 26-replace JVM path, and the
     explode+agg path are three implementations of one semantic — all

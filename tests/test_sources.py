@@ -16,7 +16,7 @@ from map_reduce_implementation_spark.sources.tables import (
     write_single_text_file,
 )
 
-from .conftest import SF0001
+from .conftest import REF_CORPUS_DIR, SF0001, requires_ref_corpus
 
 
 def _nation(spark):
@@ -54,10 +54,11 @@ def test_partitioned_parquet_prunes(spark, tmp_path):
     assert q.count() == want
 
 
+@requires_ref_corpus
 def test_single_text_file_sink(spark, tmp_path):
     from map_reduce_implementation_spark.jobs import letter_counter
 
-    df = letter_counter(spark, "/root/reference/proj_2_base/input.txt")
+    df = letter_counter(spark, f"{REF_CORPUS_DIR}/input.txt")
     out = str(tmp_path / "mr_rst")
     write_single_text_file(df.selectExpr("concat(letter, ' ', cnt) AS value"), out)
     import glob

@@ -16,6 +16,9 @@ import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+
+from tools.scan_audit import formatted_plan  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 ROUND = os.environ.get("SPARK_GRAFT_PLAN_ROUND", "r13")
 OUT_DIR = os.path.join(REPO, "plans", ROUND)
@@ -39,8 +42,6 @@ def main() -> int:
             continue
         try:
             df = q.build(spark, SF_DIR)
-            from scan_audit import formatted_plan
-
             plan = formatted_plan(df)
         except Exception as exc:  # noqa: BLE001
             plan = f"ERROR: {exc}"

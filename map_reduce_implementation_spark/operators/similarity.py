@@ -23,8 +23,23 @@ from pyspark.sql import functions as F
 
 
 def _as_double(col) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.transform(c, lambda x: x.cast("double"))
+    """``col`` (a plain column name or a Column) cast to array<double>. A
+    name is built as one SQL expression: one py4j call instead of a round
+    trip per Python lambda, with the same ``Cast`` inside."""
+    if isinstance(col, str):
+        return F.expr(_doubles_sql(col))
+    return F.transform(col, lambda x: x.cast("double"))
+
+
+def _doubles_sql(col: str) -> str:
+    """SQL text of ``_as_double`` for a plain column name."""
+    return f"transform({col}, x -> CAST(x AS DOUBLE))"
+
+
+def _fold_sql(a: str, b: str) -> str:
+    """SQL text of ``dot`` over two array<double> columns named ``a`` and
+    ``b``: the same ``zip_with`` products and left fold from 0.0."""
+    return f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0D, (acc, x) -> acc + x)"
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -252,6 +267,86 @@ def cosine_pairs(
     )
 
 
+def _spread(corpus: DataFrame) -> DataFrame:
+    """``corpus`` round-robin repartitioned to ``defaultParallelism`` when
+    its scan would stream on fewer partitions than cores, else unchanged.
+
+    The test is the optimizer's size estimate (file bytes for a parquet
+    scan; it runs no job) against ``spark.sql.files.maxPartitionBytes``
+    × parallelism. A scan at or above that size already splits into at
+    least one task per core, and at corpus scale a repartition would be a
+    full corpus shuffle, so such a corpus is never reshuffled. Below it the
+    scan may give a single task (one file with one row group does), and
+    shuffling at most ``maxPartitionBytes`` per core is cheap next to the
+    |queries|-fold score work it spreads. Tables of the test and benchmark
+    sizes stay below the bound at any core count, so their plan shape does
+    not depend on the host."""
+    spark = corpus.sparkSession
+    cores = spark.sparkContext.defaultParallelism
+    jspark = spark._jsparkSession  # noqa: SLF001
+    split = jspark.sessionState().conf().filesMaxPartitionBytes()
+    stats = corpus._jdf.queryExecution().optimizedPlan().stats()  # noqa: SLF001
+    if int(str(stats.sizeInBytes())) >= split * cores:
+        return corpus
+    return corpus.repartition(cores)
+
+
+def exact_scores(
+    queries: DataFrame,
+    corpus: DataFrame,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    query_cols: tuple = (),
+    corpus_cols: tuple = (),
+    keep: Column | str | None = None,
+) -> DataFrame:
+    """The exact cosine score of every (query, corpus) pair: the one score
+    pass behind ``knn_join`` and the suite's hard-negative miner. Returns
+    DataFrame[query_id, neighbor_id, sim, q_<query_cols>, c_<corpus_cols>];
+    ``keep``, a predicate over those columns (a Column or SQL text), drops
+    pairs before scoring.
+
+    Plan: the queries are **broadcast** into a nested-loop pass over the
+    corpus (replicate the queries, partition the data), so one corpus scan
+    scores every query and the corpus is never joined by key. Three
+    choices keep it fast without changing a bit of output:
+
+    - each norm is computed once per row, as a column (``cn`` per corpus
+      row before the join, ``qn`` per query row in the broadcast side),
+      and the pair expression is ``round(dot(cv, qv) / (cn * qn), 9)``:
+      the same double operations in the same order as
+      ``round(cosine(cv, qv), 9)``, one fold per pair instead of three;
+    - a corpus small enough to stream on fewer partitions than cores is
+      spread to ``defaultParallelism`` first (see ``_spread``); a large
+      corpus is never reshuffled;
+    - the projections are SQL text, one expression per column: built
+      with the Column API and Python lambdas, each function, alias and
+      lambda node costs py4j round trips at plan-build time.
+
+    A zero-norm vector divides by zero exactly as ``cosine`` does (under
+    ANSI mode, Spark 4's default, the action raises)."""
+    q = queries.selectExpr(
+        f"{id_col} AS query_id",
+        f"{_doubles_sql(vec_col)} AS qv",
+        *[f"{c} AS q_{c}" for c in query_cols],
+    ).selectExpr("*", f"sqrt({_fold_sql('qv', 'qv')}) AS qn")
+    c = _spread(corpus).selectExpr(
+        f"{id_col} AS neighbor_id",
+        f"{_doubles_sql(vec_col)} AS cv",
+        *[f"{c} AS c_{c}" for c in corpus_cols],
+    ).selectExpr("*", f"sqrt({_fold_sql('cv', 'cv')}) AS cn")
+    pairs = c.crossJoin(F.broadcast(q))
+    if keep is not None:
+        pairs = pairs.filter(keep)
+    return pairs.selectExpr(
+        "query_id",
+        "neighbor_id",
+        f"round({_fold_sql('cv', 'qv')} / (cn * qn), 9) AS sim",
+        *[f"q_{c}" for c in query_cols],
+        *[f"c_{c}" for c in corpus_cols],
+    )
+
+
 def knn_join(
     queries: DataFrame,
     corpus: DataFrame,
@@ -264,9 +359,15 @@ def knn_join(
     """Exact k-NN join: for EVERY query vector, its top-k cosine
     neighbors in the corpus (vs ``cosine_topk``'s single literal query).
 
-    Plan shape: the query set is **broadcast** (query batches are
-    MB-sized; the corpus is the 100 TB side) into a nested-loop score
-    pass — one corpus scan scores all queries, no corpus shuffle. The
+    Plan shape: ``exact_scores`` — the query set is **broadcast** (query
+    batches are MB-sized; the corpus is the 100 TB side) into a
+    nested-loop score pass, one corpus scan for all queries, with each
+    norm computed once per row. A corpus below
+    ``spark.sql.files.maxPartitionBytes`` × parallelism (by the
+    optimizer's size estimate) is round-robin spread to one partition per
+    core first, so the score pass runs on every core even when the scan
+    gives one split; a larger corpus already splits that far and is never
+    reshuffled, since at scale that would shuffle the whole corpus. The
     per-query top-k is a rank-filtered window, which Spark 3.5+ rewrites
     with WindowGroupLimit: each map task keeps only k rows per query
     BEFORE the exchange, so the shuffle carries O(|Q|·k·partitions)
@@ -280,22 +381,8 @@ def knn_join(
     the window still orders by (sim DESC, neighbor_id ASC) only."""
     from pyspark.sql import Window
 
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        _as_double(vec_col).alias("qv"),
-        *[F.col(c).alias(f"q_{c}") for c in query_cols],
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        _as_double(vec_col).alias("cv"),
-        *[F.col(c).alias(f"c_{c}") for c in corpus_cols],
-    )
-    scored = c.crossJoin(F.broadcast(q)).select(
-        "query_id",
-        "neighbor_id",
-        F.round(cosine(F.col("cv"), F.col("qv")), 9).alias("sim"),
-        *[f"q_{c}" for c in query_cols],
-        *[f"c_{c}" for c in corpus_cols],
+    scored = exact_scores(
+        queries, corpus, id_col, vec_col, query_cols, corpus_cols
     )
     w = Window.partitionBy("query_id").orderBy(
         F.desc("sim"), F.asc("neighbor_id")

@@ -49,7 +49,8 @@ def _trade_edges(
         # ``materialize=False`` keeps the fully lazy plan for
         # operators/graph.py::pagerank, whose loop-invariant edge memo
         # is keyed on plan identity (a fresh checkpoint RDD per build
-        # would defeat it).
+        # would defeat it), and for callers that checkpoint the whole
+        # edge list themselves (q_graph_shortest_paths).
         pairs = pairs.localCheckpoint(eager=True)
     fwd = pairs.select(F.col("s").alias("src"), F.col("c").alias("dst"))
     rev = pairs.select(F.col("c").alias("src"), F.col("s").alias("dst"))
@@ -254,8 +255,11 @@ def q_graph_shortest_paths(spark: SparkSession, sf: str) -> DataFrame:
     makes). At sf0.1 the win is modest (2.5 → ~2.2 s warm: the graph
     saturates by hop 3, so the hop-3-frontier × edge-list expansion
     dominates, not the edge build) — at 100 TB the edge build is the
-    corpus-sized part and replaying it per round would dominate."""
-    edges = _trade_edges(spark, sf).localCheckpoint(eager=True)
+    corpus-sized part and replaying it per round would dominate. The
+    lazy edge build is checkpointed as a whole, so the union's two
+    branches share one join+distinct exchange and the build is one job,
+    not a pairs checkpoint plus an edge checkpoint."""
+    edges = _trade_edges(spark, sf, materialize=False).localCheckpoint(eager=True)
     dist = spark.range(1).select(
         F.lit(_BFS_SOURCE).cast("long").alias("node"),
         F.lit(0).alias("hops"),

@@ -807,37 +807,34 @@ def q_similarity_hard_negatives(spark: SparkSession, sf: str) -> DataFrame:
     the near-misses that make a contrastive loss learn boundaries
     instead of memorizing easy negatives.
 
-    Plan: the anchor batch is broadcast into one corpus scan (the
-    ``knn_join`` shape); the label-mismatch filter runs BEFORE the
+    Plan: ``knn_join``'s score pass (``operators/similarity.py::
+    exact_scores``): the anchor batch is broadcast into one corpus scan,
+    each vector's norm is computed once per row rather than per pair,
+    and a corpus below ``spark.sql.files.maxPartitionBytes`` ×
+    parallelism is round-robin spread to one partition per core so the
+    pass runs on every core (a larger corpus already splits that far and
+    is never reshuffled). The label-mismatch filter runs BEFORE the
     per-anchor rank window, so WindowGroupLimit keeps only {HN_K} rows
     per anchor per map task ahead of the exchange — the shuffle
     carries O(|anchors|·k·partitions) rows, never |anchors|×|corpus|.
     Sims follow the proven sequential-fold + ROUND 9 + vec_id
     tie-break recipe, so the mined set is deterministic and the whole
     pipeline hash-grades."""
-    from ..operators.similarity import _as_double, cosine
+    from ..operators.similarity import exact_scores
 
     e = table(spark, sf, "embeddings")
-    q = e.filter(F.col("vec_id") % HN_SAMPLE_MOD == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("label").alias("anchor_label"),
-        _as_double("embedding").alias("qv"),
-    )
-    c = e.filter(F.col("vec_id") % HN_SAMPLE_MOD != 0).select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("label").alias("neighbor_label"),
-        _as_double("embedding").alias("cv"),
-    )
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("neighbor_label") != F.col("anchor_label"))
-        .select(
-            "query_id",
-            "anchor_label",
-            "neighbor_id",
-            "neighbor_label",
-            F.round(cosine(F.col("cv"), F.col("qv")), 9).alias("sim"),
-        )
+    scored = exact_scores(
+        e.filter(f"vec_id % {HN_SAMPLE_MOD} = 0"),
+        e.filter(f"vec_id % {HN_SAMPLE_MOD} <> 0"),
+        query_cols=("label",),
+        corpus_cols=("label",),
+        keep="c_label <> q_label",
+    ).selectExpr(
+        "query_id",
+        "q_label AS anchor_label",
+        "neighbor_id",
+        "c_label AS neighbor_label",
+        "sim",
     )
     w = Window.partitionBy("query_id").orderBy(
         F.desc("sim"), F.asc("neighbor_id")

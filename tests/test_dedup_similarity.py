@@ -543,3 +543,182 @@ def test_minhash_list_offsets_fail_loudly_past_int32():
     assert offsets.type == pa.int32() and offsets.to_pylist() == [0, 128, 256, 384]
     with pytest.raises(pa.ArrowInvalid):
         _list_offsets(2, 2**30)  # last offset 2**31
+
+
+def _score_pass_vectors(n: int, dim: int, seed: int) -> list[list[float]]:
+    """Seeded float32 vectors (exact as Python floats) with planted ties:
+    every 7th vector repeats an earlier one and every 11th is a scaled
+    copy, so equal sims exercise the (sim DESC, id ASC) tie-break."""
+    import numpy as np
+
+    rng = np.random.default_rng(seed)
+    vecs = rng.standard_normal((n, dim)).astype(np.float32)
+    for i in range(7, n, 7):
+        vecs[i] = vecs[i - 7]
+    for i in range(11, n, 11):
+        vecs[i] = vecs[i - 1] * np.float32(2.0)
+    return [[float(x) for x in v] for v in vecs]
+
+
+def _python_sim(a: list[float], b: list[float]) -> float:
+    """The score pass in plain Python: left folds from 0.0 over doubles,
+    then Spark's ``round(·, 9)`` (HALF_UP on the shortest decimal)."""
+    import math
+    from decimal import ROUND_HALF_UP, Decimal
+
+    def fold(u, v):
+        acc = 0.0
+        for x, y in zip(u, v):
+            acc = acc + x * y
+        return acc
+
+    s = fold(a, b) / (math.sqrt(fold(a, a)) * math.sqrt(fold(b, b)))
+    return float(Decimal(repr(s)).quantize(Decimal("1e-9"), ROUND_HALF_UP))
+
+
+def _old_scores(queries, corpus):
+    """The score expression the pass replaced: three folds per pair, built
+    with the Column API and Python lambdas."""
+    from map_reduce_implementation_spark.operators.similarity import (
+        _as_double,
+        cosine,
+    )
+
+    q = queries.select(
+        F.col("vec_id").alias("query_id"),
+        _as_double(F.col("embedding")).alias("qv"),
+    )
+    c = corpus.select(
+        F.col("vec_id").alias("neighbor_id"),
+        _as_double(F.col("embedding")).alias("cv"),
+    )
+    return c.crossJoin(F.broadcast(q)).select(
+        "query_id",
+        "neighbor_id",
+        F.round(cosine(F.col("cv"), F.col("qv")), 9).alias("sim"),
+    )
+
+
+def test_score_pass_is_bit_identical_to_three_fold_cosine(spark):
+    """Hoisting the norms out of the pair expression changes no bit: every
+    (query, neighbor) sim equals ``round(cosine(cv, qv), 9)``, and
+    ``knn_join``'s top-k equals a pure-Python sequential fold ranked by
+    (sim DESC, neighbor_id ASC)."""
+    from map_reduce_implementation_spark.operators.similarity import (
+        exact_scores,
+        knn_join,
+    )
+
+    vecs = _score_pass_vectors(240, 24, seed=5)
+    rows = [(i, v) for i, v in enumerate(vecs)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    queries = df.filter(F.col("vec_id") % 20 == 0)
+    corpus = df.filter(F.col("vec_id") % 20 != 0)
+
+    new = {(r[0], r[1]): r[2] for r in exact_scores(queries, corpus).collect()}
+    old = {(r[0], r[1]): r[2] for r in _old_scores(queries, corpus).collect()}
+    assert len(new) == 12 * 228 and new == old
+
+    k = 4
+    got = {}
+    for r in knn_join(queries, corpus, k=k).collect():
+        got.setdefault(r.query_id, []).append((r.knn_rank, r.neighbor_id, r.sim))
+    want = {}
+    for qi in range(0, 240, 20):
+        ranked = sorted(
+            ((-_python_sim(vecs[ci], vecs[qi]), ci) for ci in range(240) if ci % 20),
+        )[:k]
+        want[qi] = [(rank, ci, -neg) for rank, (neg, ci) in enumerate(ranked, 1)]
+    assert {q: sorted(v) for q, v in got.items()} == want
+
+
+def test_score_pass_zero_norm_matches_cosine(spark):
+    """A zero-norm vector divides by zero exactly as ``cosine`` does: under
+    ANSI mode (Spark 4's default) both raise; with ANSI off both give a
+    NULL sim for every pair that touches it."""
+    from pyspark.errors.exceptions.captured import ArithmeticException
+
+    from map_reduce_implementation_spark.operators.similarity import (
+        exact_scores,
+        knn_join,
+    )
+
+    rows = [(0, [1.0, 2.0]), (1, [0.0, 0.0]), (2, [2.0, -1.0]), (3, [0.5, 0.5])]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    queries = df.filter(F.col("vec_id") != 2)
+    corpus = df
+    with pytest.raises(ArithmeticException):
+        _old_scores(queries, corpus).collect()
+    with pytest.raises(ArithmeticException):
+        knn_join(queries, corpus, k=2).collect()
+
+    key = "spark.sql.ansi.enabled"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        new = {(r[0], r[1]): r[2] for r in exact_scores(queries, corpus).collect()}
+        old = {(r[0], r[1]): r[2] for r in _old_scores(queries, corpus).collect()}
+    finally:
+        spark.conf.set(key, before)
+    assert new == old and new[(0, 1)] is None and new[(1, 3)] is None
+
+
+def test_score_pass_spreads_a_one_file_corpus(spark, tmp_path):
+    """A corpus that scans as one split runs the score stage in at least
+    ``defaultParallelism`` partitions."""
+    from map_reduce_implementation_spark.operators.similarity import exact_scores
+
+    rows = [(i, v) for i, v in enumerate(_score_pass_vectors(400, 16, seed=9))]
+    path = str(tmp_path / "corpus")
+    spark.createDataFrame(rows, "vec_id long, embedding array<float>").coalesce(
+        1
+    ).write.parquet(path)
+    corpus = spark.read.parquet(path)
+    cores = spark.sparkContext.defaultParallelism
+    assert corpus.rdd.getNumPartitions() == 1 < cores
+    scored = exact_scores(corpus.filter(F.col("vec_id") % 40 == 0), corpus)
+    assert scored.rdd.getNumPartitions() >= cores
+
+
+def test_score_pass_keeps_a_split_corpus_unshuffled(spark, tmp_path):
+    """A corpus whose scan already gives at least one split per core is
+    never reshuffled: its score pass has no exchange besides the query
+    broadcast, and its sims equal those of the spread pass."""
+    import os
+
+    from map_reduce_implementation_spark.operators.similarity import exact_scores
+    from map_reduce_implementation_spark.plans import explain_str
+    from tools.plan_snapshot import fingerprint
+
+    rows = [(i, v) for i, v in enumerate(_score_pass_vectors(400, 16, seed=9))]
+    path = str(tmp_path / "corpus")
+    cores = spark.sparkContext.defaultParallelism
+    spark.createDataFrame(rows, "vec_id long, embedding array<float>").repartition(
+        2 * cores
+    ).write.parquet(path)
+    nbytes = sum(
+        os.path.getsize(os.path.join(path, f))
+        for f in os.listdir(path)
+        if f.endswith(".parquet")
+    )
+    spread = exact_scores(
+        spark.read.parquet(path).filter(F.col("vec_id") % 40 == 0),
+        spark.read.parquet(path),
+    )
+    assert fingerprint(explain_str(spread, "formatted"))["shuffles"] == 1
+    spread_rows = sorted(map(tuple, spread.collect()))
+
+    key = "spark.sql.files.maxPartitionBytes"
+    before = spark.conf.get(key)
+    # a split size at which the scan already has one split per core
+    spark.conf.set(key, str(nbytes // cores))
+    try:
+        corpus = spark.read.parquet(path)
+        assert corpus.rdd.getNumPartitions() >= cores
+        scored = exact_scores(corpus.filter(F.col("vec_id") % 40 == 0), corpus)
+        fp = fingerprint(explain_str(scored, "formatted"))
+        scored_rows = sorted(map(tuple, scored.collect()))
+    finally:
+        spark.conf.set(key, before)
+    assert fp["shuffles"] == 0 and fp["broadcasts"] == 1
+    assert scored_rows == spread_rows

@@ -37,6 +37,10 @@ LIVE_CHECK = [
     "pipeline_curation",
     "agg_extras",
     "listagg",
+    # the exact top-k score pass: its corpus spread adds one exchange
+    "similarity_knn_join",
+    "similarity_hard_negatives",
+    "embedding_label_noise",
 ]
 
 

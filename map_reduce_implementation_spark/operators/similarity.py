@@ -23,12 +23,8 @@ from pyspark.sql import functions as F
 
 
 def _as_double(col) -> Column:
-    """``col`` (a plain column name or a Column) cast to array<double>. A
-    name is built as one SQL expression: one py4j call instead of a round
-    trip per Python lambda, with the same ``Cast`` inside."""
-    if isinstance(col, str):
-        return F.expr(_doubles_sql(col))
-    return F.transform(col, lambda x: x.cast("double"))
+    c = F.col(col) if isinstance(col, str) else col
+    return F.transform(c, lambda x: x.cast("double"))
 
 
 def _doubles_sql(col: str) -> str:
@@ -38,12 +34,15 @@ def _doubles_sql(col: str) -> str:
 
 def _fold_sql(a: str, b: str) -> str:
     """SQL text of ``dot`` over two array<double> columns named ``a`` and
-    ``b``: the same ``zip_with`` products and left fold from 0.0."""
+    ``b``: the same ``zip_with`` products and left fold from 0.0. Keep it
+    the same fold as ``dot``: ``exact_scores``'s sims are bit-identical to
+    ``cosine``'s only while the two agree."""
     return f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0D, (acc, x) -> acc + x)"
 
 
 def dot(a: Column, b: Column) -> Column:
-    """Sequential-fold dot product (deterministic order → oracle-stable)."""
+    """Sequential-fold dot product (deterministic order → oracle-stable).
+    ``_fold_sql`` is the same fold as SQL text; change both or neither."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
     )
@@ -267,26 +266,64 @@ def cosine_pairs(
     )
 
 
+def _plan_stats(df: DataFrame):
+    """Catalyst's statistics for ``df``'s optimized plan (size and, when
+    known, row count, from file metadata and size heuristics). Reading
+    them runs no job."""
+    return df._jdf.queryExecution().optimizedPlan().stats()  # noqa: SLF001
+
+
+def _scan_partitions(df: DataFrame) -> int | None:
+    """The number of partitions ``df`` streams on when its physical plan is
+    projections and filters over one file or RDD scan (for a parquet scan,
+    its planned file splits); None for any other plan. It plans the scan's
+    input RDD and runs no job."""
+    node = df._jdf.queryExecution().sparkPlan()  # noqa: SLF001
+    while node.getClass().getSimpleName() in ("ProjectExec", "FilterExec"):
+        node = node.child()
+    if node.getClass().getSimpleName() not in ("FileSourceScanExec", "RDDScanExec"):
+        return None
+    return node.inputRDDs().head().getNumPartitions()
+
+
 def _spread(corpus: DataFrame) -> DataFrame:
     """``corpus`` round-robin repartitioned to ``defaultParallelism`` when
-    its scan would stream on fewer partitions than cores, else unchanged.
+    it would stream on fewer partitions than cores, else unchanged.
 
-    The test is the optimizer's size estimate (file bytes for a parquet
-    scan; it runs no job) against ``spark.sql.files.maxPartitionBytes``
-    × parallelism. A scan at or above that size already splits into at
-    least one task per core, and at corpus scale a repartition would be a
-    full corpus shuffle, so such a corpus is never reshuffled. Below it the
-    scan may give a single task (one file with one row group does), and
-    shuffling at most ``maxPartitionBytes`` per core is cheap next to the
-    |queries|-fold score work it spreads. Tables of the test and benchmark
-    sizes stay below the bound at any core count, so their plan shape does
-    not depend on the host."""
+    A corpus that already has at least one partition per core is never
+    reshuffled; at corpus scale that would be a full corpus shuffle. The
+    decision runs no job and stays cheap:
+
+    - with one core there is nothing to spread;
+    - a corpus whose optimizer size estimate is at least
+      ``spark.sql.files.maxPartitionBytes`` × parallelism is kept without
+      further probing: a scan that large plans at least one split per
+      core, and a larger corpus is never shuffled for the score pass;
+    - below that, a plain scan (projections and filters over one file or
+      RDD scan) is kept when its planned partition count reaches the core
+      count (``_scan_partitions``: about 15 ms for a parquet scan on a
+      4-core host, against 40-80 ms for
+      ``DataFrame.rdd.getNumPartitions()``). A small file scans as one
+      split, and so does one file with one row group;
+    - any other corpus below the bound (a join or aggregate output, whose
+      partition count is only fixed at run time) is spread. Shuffling at
+      most ``maxPartitionBytes`` per core is cheap next to the
+      |queries|-fold score work it spreads.
+
+    ``_scan_partitions`` counts splits, not row groups: a file larger than
+    the split size but written as one row group plans several splits, and
+    all but one of them read nothing, so that corpus is kept as it is and
+    streams on one core."""
     spark = corpus.sparkSession
     cores = spark.sparkContext.defaultParallelism
+    if cores < 2:
+        return corpus
     jspark = spark._jsparkSession  # noqa: SLF001
     split = jspark.sessionState().conf().filesMaxPartitionBytes()
-    stats = corpus._jdf.queryExecution().optimizedPlan().stats()  # noqa: SLF001
-    if int(str(stats.sizeInBytes())) >= split * cores:
+    if int(str(_plan_stats(corpus).sizeInBytes())) >= split * cores:
+        return corpus
+    planned = _scan_partitions(corpus)
+    if planned is not None and planned >= cores:
         return corpus
     return corpus.repartition(cores)
 
@@ -298,13 +335,13 @@ def exact_scores(
     vec_col: str = "embedding",
     query_cols: tuple = (),
     corpus_cols: tuple = (),
-    keep: Column | str | None = None,
+    keep: str | None = None,
 ) -> DataFrame:
     """The exact cosine score of every (query, corpus) pair: the one score
     pass behind ``knn_join`` and the suite's hard-negative miner. Returns
     DataFrame[query_id, neighbor_id, sim, q_<query_cols>, c_<corpus_cols>];
-    ``keep``, a predicate over those columns (a Column or SQL text), drops
-    pairs before scoring.
+    ``keep``, a SQL predicate over those columns, drops pairs before
+    scoring.
 
     Plan: the queries are **broadcast** into a nested-loop pass over the
     corpus (replicate the queries, partition the data), so one corpus scan
@@ -316,9 +353,10 @@ def exact_scores(
       and the pair expression is ``round(dot(cv, qv) / (cn * qn), 9)``:
       the same double operations in the same order as
       ``round(cosine(cv, qv), 9)``, one fold per pair instead of three;
-    - a corpus small enough to stream on fewer partitions than cores is
-      spread to ``defaultParallelism`` first (see ``_spread``); a large
-      corpus is never reshuffled;
+    - a corpus that would stream on fewer partitions than cores is
+      spread to ``defaultParallelism`` first (see ``_spread``); one that
+      already has a partition per core, and any corpus at or above
+      ``maxPartitionBytes`` × parallelism, is never reshuffled;
     - the projections are SQL text, one expression per column: built
       with the Column API and Python lambdas, each function, alias and
       lambda node costs py4j round trips at plan-build time.
@@ -362,11 +400,12 @@ def knn_join(
     Plan shape: ``exact_scores`` — the query set is **broadcast** (query
     batches are MB-sized; the corpus is the 100 TB side) into a
     nested-loop score pass, one corpus scan for all queries, with each
-    norm computed once per row. A corpus below
-    ``spark.sql.files.maxPartitionBytes`` × parallelism (by the
-    optimizer's size estimate) is round-robin spread to one partition per
-    core first, so the score pass runs on every core even when the scan
-    gives one split; a larger corpus already splits that far and is never
+    norm computed once per row. A corpus that would stream on fewer
+    partitions than cores (a small parquet file scans as one split) is
+    round-robin spread to one partition per core first, so the score pass
+    runs on every core. A corpus that already has a partition per core,
+    or whose size estimate is at least
+    ``spark.sql.files.maxPartitionBytes`` × parallelism, is never
     reshuffled, since at scale that would shuffle the whole corpus. The
     per-query top-k is a rank-filtered window, which Spark 3.5+ rewrites
     with WindowGroupLimit: each map task keeps only k rows per query
@@ -641,7 +680,7 @@ def similarity_topk(
 def estimated_rows(df: DataFrame) -> int | None:
     """Catalyst's row-count estimate from the optimized plan's statistics
     (file metadata / size-based heuristics — no execution)."""
-    stats = df._jdf.queryExecution().optimizedPlan().stats()  # noqa: SLF001
+    stats = _plan_stats(df)
     opt = stats.rowCount()
     if opt.isDefined():
         return int(str(opt.get()))

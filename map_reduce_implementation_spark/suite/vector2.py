@@ -810,10 +810,12 @@ def q_similarity_hard_negatives(spark: SparkSession, sf: str) -> DataFrame:
     Plan: ``knn_join``'s score pass (``operators/similarity.py::
     exact_scores``): the anchor batch is broadcast into one corpus scan,
     each vector's norm is computed once per row rather than per pair,
-    and a corpus below ``spark.sql.files.maxPartitionBytes`` ×
-    parallelism is round-robin spread to one partition per core so the
-    pass runs on every core (a larger corpus already splits that far and
-    is never reshuffled). The label-mismatch filter runs BEFORE the
+    and a corpus that would stream on fewer partitions than cores (the
+    embeddings table is one small file, one split) is round-robin spread
+    to one partition per core so the pass runs on every core. A corpus
+    that already has a partition per core, or is at least
+    ``spark.sql.files.maxPartitionBytes`` × parallelism, is never
+    reshuffled. The label-mismatch filter runs BEFORE the
     per-anchor rank window, so WindowGroupLimit keeps only {HN_K} rows
     per anchor per map task ahead of the exchange — the shuffle
     carries O(|anchors|·k·partitions) rows, never |anchors|×|corpus|.

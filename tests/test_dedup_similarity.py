@@ -663,62 +663,98 @@ def test_score_pass_zero_norm_matches_cosine(spark):
     assert new == old and new[(0, 1)] is None and new[(1, 3)] is None
 
 
+def _write_corpus(spark, path: str, files: int) -> None:
+    rows = [(i, v) for i, v in enumerate(_score_pass_vectors(400, 16, seed=9))]
+    spark.createDataFrame(rows, "vec_id long, embedding array<float>").repartition(
+        files
+    ).write.parquet(path)
+
+
+def _shuffles(df) -> dict:
+    from map_reduce_implementation_spark.plans import explain_str
+    from tools.plan_snapshot import fingerprint
+
+    fp = fingerprint(explain_str(df, "formatted"))
+    return {k: fp[k] for k in ("shuffles", "broadcasts")}
+
+
 def test_score_pass_spreads_a_one_file_corpus(spark, tmp_path):
     """A corpus that scans as one split runs the score stage in at least
     ``defaultParallelism`` partitions."""
-    from map_reduce_implementation_spark.operators.similarity import exact_scores
+    from map_reduce_implementation_spark.operators.similarity import (
+        _scan_partitions,
+        exact_scores,
+    )
 
-    rows = [(i, v) for i, v in enumerate(_score_pass_vectors(400, 16, seed=9))]
     path = str(tmp_path / "corpus")
-    spark.createDataFrame(rows, "vec_id long, embedding array<float>").coalesce(
-        1
-    ).write.parquet(path)
+    _write_corpus(spark, path, files=1)
     corpus = spark.read.parquet(path)
     cores = spark.sparkContext.defaultParallelism
-    assert corpus.rdd.getNumPartitions() == 1 < cores
+    assert _scan_partitions(corpus) == corpus.rdd.getNumPartitions() == 1 < cores
     scored = exact_scores(corpus.filter(F.col("vec_id") % 40 == 0), corpus)
+    assert _shuffles(scored) == {"shuffles": 1, "broadcasts": 1}
     assert scored.rdd.getNumPartitions() >= cores
 
 
 def test_score_pass_keeps_a_split_corpus_unshuffled(spark, tmp_path):
-    """A corpus whose scan already gives at least one split per core is
-    never reshuffled: its score pass has no exchange besides the query
-    broadcast, and its sims equal those of the spread pass."""
+    """A corpus whose scan already plans at least one split per core, at
+    the default split size, gets no exchange besides the query broadcast,
+    and its sims equal those of the spread one-file corpus."""
+    from map_reduce_implementation_spark.operators.similarity import (
+        _scan_partitions,
+        exact_scores,
+    )
+
+    cores = spark.sparkContext.defaultParallelism
+    one, split = str(tmp_path / "one"), str(tmp_path / "split")
+    _write_corpus(spark, one, files=1)
+    _write_corpus(spark, split, files=2 * cores)
+
+    def scores(path):
+        corpus = spark.read.parquet(path)
+        return exact_scores(corpus.filter(F.col("vec_id") % 40 == 0), corpus)
+
+    corpus = spark.read.parquet(split).filter(F.col("vec_id") % 40 != 0)
+    assert _scan_partitions(corpus) == corpus.rdd.getNumPartitions() >= cores
+    assert _shuffles(scores(one))["shuffles"] == 1
+    assert _shuffles(scores(split)) == {"shuffles": 0, "broadcasts": 1}
+    assert sorted(map(tuple, scores(split).collect())) == sorted(
+        map(tuple, scores(one).collect())
+    )
+
+
+def test_score_pass_keeps_a_corpus_above_the_size_bound(spark, tmp_path):
+    """A corpus whose size estimate is at least ``maxPartitionBytes`` ×
+    parallelism is never reshuffled, even when its plan gives no partition
+    count to read (here an aggregate over the scan)."""
     import os
 
-    from map_reduce_implementation_spark.operators.similarity import exact_scores
-    from map_reduce_implementation_spark.plans import explain_str
-    from tools.plan_snapshot import fingerprint
+    from map_reduce_implementation_spark.operators.similarity import (
+        _scan_partitions,
+        exact_scores,
+    )
 
-    rows = [(i, v) for i, v in enumerate(_score_pass_vectors(400, 16, seed=9))]
     path = str(tmp_path / "corpus")
-    cores = spark.sparkContext.defaultParallelism
-    spark.createDataFrame(rows, "vec_id long, embedding array<float>").repartition(
-        2 * cores
-    ).write.parquet(path)
+    _write_corpus(spark, path, files=1)
     nbytes = sum(
         os.path.getsize(os.path.join(path, f))
         for f in os.listdir(path)
         if f.endswith(".parquet")
     )
-    spread = exact_scores(
-        spark.read.parquet(path).filter(F.col("vec_id") % 40 == 0),
-        spark.read.parquet(path),
-    )
-    assert fingerprint(explain_str(spread, "formatted"))["shuffles"] == 1
-    spread_rows = sorted(map(tuple, spread.collect()))
+    cores = spark.sparkContext.defaultParallelism
 
+    def scores():
+        queries = spark.read.parquet(path).filter(F.col("vec_id") % 40 == 0)
+        corpus = spark.read.parquet(path).dropDuplicates(["vec_id"])
+        assert _scan_partitions(corpus) is None
+        return exact_scores(queries, corpus)
+
+    # below the bound: the aggregate's exchange, then the spread
+    assert _shuffles(scores())["shuffles"] == 2
     key = "spark.sql.files.maxPartitionBytes"
     before = spark.conf.get(key)
-    # a split size at which the scan already has one split per core
     spark.conf.set(key, str(nbytes // cores))
     try:
-        corpus = spark.read.parquet(path)
-        assert corpus.rdd.getNumPartitions() >= cores
-        scored = exact_scores(corpus.filter(F.col("vec_id") % 40 == 0), corpus)
-        fp = fingerprint(explain_str(scored, "formatted"))
-        scored_rows = sorted(map(tuple, scored.collect()))
+        assert _shuffles(scores())["shuffles"] == 1
     finally:
         spark.conf.set(key, before)
-    assert fp["shuffles"] == 0 and fp["broadcasts"] == 1
-    assert scored_rows == spread_rows

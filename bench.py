@@ -757,8 +757,9 @@ def _skew_join_df(spark, li_dir: str, orders_dir: str):
     the hot key's 25% of rows spread over 8 (key, salt) reducer slots
     instead of one. The priced trade-off is the dim-side explode (the
     orders shuffle grows 8×) — the cost a production salt pays to kill
-    the straggler; tools/skew_probe.py measures the straggler itself
-    (plain-join max-task-time vs salted) for the README paragraph."""
+    the straggler; bench_runs/skew_probe.json measures the straggler
+    itself (plain-join max-task-time vs salted) for the README paragraph,
+    recorded by tools/skew_probe.py (removed; git history keeps it)."""
     from pyspark.sql import functions as F
 
     from map_reduce_implementation_spark.operators.skew import salted_join
@@ -1171,7 +1172,8 @@ def main() -> int:
             # hash-green operator but no measured slope. Auto-broadcast
             # off for both points (both-sides-large regime — see
             # _no_auto_broadcast); the straggler-vs-salt evidence
-            # itself lives in tools/skew_probe.py + README.
+            # itself lives in bench_runs/skew_probe.json + README (its
+            # tool, tools/skew_probe.py, is removed; git history keeps it).
             skew1 = _ensure_skew_xn(spark, 1, "skew_x1")
             skew10 = _ensure_skew_xn(spark, 10, "skew_x10")
             if skew1 and skew10:

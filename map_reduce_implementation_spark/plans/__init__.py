@@ -1,3 +1,3 @@
-from .audit import audit_plan, explain_str
+from .audit import PYTHON_OK, PlanAudit, audit_plan, fingerprint, formatted_plan
 
-__all__ = ["audit_plan", "explain_str"]
+__all__ = ["PYTHON_OK", "PlanAudit", "audit_plan", "fingerprint", "formatted_plan"]

@@ -50,7 +50,8 @@ def _trade_edges(
         # operators/graph.py::pagerank, whose loop-invariant edge memo
         # is keyed on plan identity (a fresh checkpoint RDD per build
         # would defeat it), and for callers that checkpoint the whole
-        # edge list themselves (q_graph_shortest_paths).
+        # edge list themselves (q_graph_shortest_paths,
+        # stats4.q_graph_assortativity).
         pairs = pairs.localCheckpoint(eager=True)
     fwd = pairs.select(F.col("s").alias("src"), F.col("c").alias("dst"))
     rev = pairs.select(F.col("c").alias("src"), F.col("s").alias("dst"))

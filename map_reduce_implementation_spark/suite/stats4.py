@@ -238,7 +238,7 @@ def q_graph_assortativity(spark: SparkSession, sf: str) -> DataFrame:
     scans / 48 exchanges at sf0.01) — at 100 TB that is eight fact
     scans for one statistic. Materialized: 2 scans, and the degree
     joins run against a node-sized frame (the BFS/CC precedent)."""
-    edges = _trade_edges(spark, sf).localCheckpoint(eager=True)
+    edges = _trade_edges(spark, sf, materialize=False).localCheckpoint(eager=True)
     deg = (
         edges.groupBy("src")
         .agg(F.count(F.lit(1)).alias("deg"))

@@ -671,10 +671,9 @@ def _write_corpus(spark, path: str, files: int) -> None:
 
 
 def _shuffles(df) -> dict:
-    from map_reduce_implementation_spark.plans import explain_str
-    from tools.plan_snapshot import fingerprint
+    from map_reduce_implementation_spark.plans import fingerprint, formatted_plan
 
-    fp = fingerprint(explain_str(df, "formatted"))
+    fp = fingerprint(formatted_plan(df))
     return {k: fp[k] for k in ("shuffles", "broadcasts")}
 
 

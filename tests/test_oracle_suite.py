@@ -1,16 +1,16 @@
 """The local mirror of the driver's t2 correctness gate: run every suite
-query on Spark AND its DuckDB oracle at sf0.01, compare row count,
-column names, and order-insensitive values."""
+query on Spark AND its DuckDB oracle at sf0.01 and compare them with the
+strict comparator of ``tools/check_values.py`` — scalar output columns,
+same pandas dtype kinds, same column names, cell-exact rows."""
 
 from __future__ import annotations
-
-import math
 
 import duckdb
 import pytest
 
 from map_reduce_implementation_spark.sources import TABLES
 from map_reduce_implementation_spark.suite import all_queries
+from tools.check_values import _unhashable_cols, compare_frames
 
 from .conftest import SF001
 
@@ -27,42 +27,27 @@ def duck():
     return con
 
 
-def _norm(v):
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        return round(v, 6)
-    return v
-
-
-def _rows_key(rows, cols):
-    # order-insensitive: sort columns by name, then sort rows (by repr so
-    # None/mixed types are comparable)
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    return sorted(
-        (tuple(_norm(r[i]) for i in order) for r in rows), key=repr
-    )
-
-
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_query_matches_oracle(spark, duck, name):
     q = QUERIES[name]
     sdf = q.build(spark, SF001)
-    srows = sdf.collect()
     scols = sdf.columns
     assert len(scols) == len(set(scols)), f"{name}: duplicate column names"
+    s_pdf = sdf.toPandas()
+    # rows-only entries too: a pandas sort over all columns crashes on non-scalar cells
+    assert not _unhashable_cols(s_pdf), f"{name}: non-scalar output columns"
     if q.oracle is None:
-        # rows-only check, like the driver's weak mode
-        assert len(srows) >= 0
         return
-    ores = duck.execute(q.oracle)
-    ocols = [d[0] for d in ores.description]
-    orows = ores.fetchall()
-    assert sorted(scols) == sorted(ocols), f"{name}: column names differ"
-    assert len(srows) == len(orows), f"{name}: row count {len(srows)} vs {len(orows)}"
-    skey = _rows_key([[r[c] for c in scols] for r in srows], scols)
-    okey = _rows_key(orows, ocols)
-    mismatches = [
-        (a, b) for a, b in zip(skey, okey) if a != b
-    ]
-    assert not mismatches, f"{name}: first mismatches {mismatches[:3]}"
+    verdict, detail = compare_frames(s_pdf, duck.execute(q.oracle).df())
+    assert verdict == "exact", f"{name}: {verdict}: {detail}"
+
+
+def test_comparator_is_strict():
+    """Row order is free; a last-digit float difference and an int-vs-float
+    dtype are not, because the value hash sees both."""
+    import pandas as pd
+
+    base = pd.DataFrame({"k": [1, 2], "v": [0.1, 0.2]})
+    assert compare_frames(base, base[::-1].reset_index(drop=True))[0] == "exact"
+    assert compare_frames(base, base.assign(v=[0.1, 0.2 + 1e-12]))[0] == "tol"
+    assert compare_frames(base, base.assign(k=[1.0, 2.0]))[0] == "failed"

@@ -8,7 +8,7 @@ Two layers:
    fallback), this fails even though values still match.
 
 Regenerate after an INTENTIONAL plan change:
-    python tools/plan_snapshot.py
+    python tools/plans.py snapshot
 """
 
 from __future__ import annotations
@@ -18,7 +18,8 @@ import os
 
 import pytest
 
-from tools.plan_snapshot import PYTHON_OK, SNAPSHOT_PATH, fingerprint
+from map_reduce_implementation_spark.plans import PYTHON_OK, fingerprint, formatted_plan
+from tools.plans import SNAPSHOT_PATH
 
 # cheap-to-plan queries covering scans, joins, aggs, windows, dedup, text
 LIVE_CHECK = [
@@ -80,13 +81,12 @@ def test_no_row_at_a_time_python(snapshot):
 
 def test_live_fingerprints_match_snapshot(spark, snapshot):
     import __spark_entry__ as entry
-    from map_reduce_implementation_spark.plans import explain_str
 
     sf_dir = os.environ.get("SPARK_GRAFT_SNAPSHOT_SF", "/root/testdata/sf0.01")
     qs = entry.queries()
     diffs = {}
     for name in LIVE_CHECK:
-        got = fingerprint(explain_str(qs[name](spark, sf_dir), "formatted"))
+        got = fingerprint(formatted_plan(qs[name](spark, sf_dir)))
         want = snapshot[name]
         if got != want:
             diffs[name] = {k: (want.get(k), got.get(k)) for k in got if got.get(k) != want.get(k)}

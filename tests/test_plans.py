@@ -5,6 +5,7 @@ can't see these; at 100 TB they ARE the difference."""
 from __future__ import annotations
 
 from map_reduce_implementation_spark.plans import audit_plan
+from map_reduce_implementation_spark.sources import table
 from map_reduce_implementation_spark.suite.parity import q_letter_counter
 from map_reduce_implementation_spark.suite.relational import (
     q_broadcast_join,
@@ -28,6 +29,7 @@ def test_filter_project_pushdown(spark):
     ), f"scan reads too much: {a.read_schemas}"
     assert a.whole_stage_codegen
     assert not a.has_python_udf
+    assert a.table_scans == {"lineitem": 1} and a.redundant_scans == 0
 
 
 def test_pricing_summary_partial_agg(spark):
@@ -111,3 +113,13 @@ def test_runtime_bloom_filter_injected(spark):
         assert got == want and len(got) > 0
     finally:
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+
+
+def test_table_scans_count_a_self_join_twice(spark):
+    li = table(spark, SF001, "lineitem")
+    pairs = li.select("l_orderkey", "l_partkey").join(
+        li.select("l_orderkey", "l_suppkey"), "l_orderkey"
+    )
+    a = audit_plan(pairs)
+    assert a.table_scans == {"lineitem": 2}
+    assert a.redundant_scans == 1

@@ -12,7 +12,6 @@ Usage: python tools/check_values.py [sf_dir]
 
 from __future__ import annotations
 
-import math
 import os
 import sys
 
@@ -118,6 +117,34 @@ def _unhashable_cols(pdf) -> list[str]:
     return bad
 
 
+def compare_frames(s_pdf, d_pdf) -> tuple[str, str]:
+    """Compare a Spark result with its DuckDB twin, both as pandas frames,
+    as strictly as the value-hash gate this file mirrors: same dtype
+    kinds, same column names, cell-exact rows after sorting. Returns
+    ``(verdict, detail)``: verdict ``"exact"``, ``"tol"`` (equal at 1e-9
+    relative, not bit-exact) or ``"failed"``; detail says why it is not
+    exact."""
+    bad_dtypes = _dtype_mismatches(s_pdf, d_pdf)
+    if bad_dtypes:
+        return "failed", "pandas dtype mismatch (value hash would differ): " + "; ".join(bad_dtypes)
+    s_cols, d_cols = list(s_pdf.columns), list(d_pdf.columns)
+    if sorted(s_cols) != sorted(d_cols):
+        return "failed", f"columns differ spark={sorted(s_cols)} duck={sorted(d_cols)}"
+    rows = lambda df: [tuple(r) for r in df.itertuples(index=False, name=None)]  # noqa: E731
+    a = _rows_sorted(s_cols, rows(s_pdf))
+    b = _rows_sorted(d_cols, rows(d_pdf))
+    exact, tol, dev = _compare(a, b)
+    if exact:
+        return "exact", ""
+    if tol:
+        return "tol", f"values match at 1e-9 but NOT bit-exact (max rel dev {dev:.2e})"
+    detail = f"value mismatch (max rel dev {dev:.2e}, rows {len(a)} vs {len(b)})"
+    first = next(((ra, rb) for ra, rb in zip(a, b) if ra != rb), None)
+    if first:
+        detail += f"\n  spark: {first[0]}\n  duck : {first[1]}"
+    return "failed", detail
+
+
 def main() -> int:
     sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only: set[str] | None = None
@@ -160,9 +187,7 @@ def main() -> int:
             continue
         if verbose:
             print(f"... {name}", flush=True)
-        sdf = fn(spark, sf)
-        s_cols = sdf.columns
-        s_pdf = sdf.toPandas()
+        s_pdf = fn(spark, sf).toPandas()
         unhash = _unhashable_cols(s_pdf)
         if unhash:
             print(f"FAIL {name}: non-scalar output columns (driver canon would "
@@ -174,41 +199,16 @@ def main() -> int:
             n_rows_only += 1
             verdicts[name] = "rows_only"
             continue
-        s_rows = [tuple(r) for r in s_pdf.itertuples(index=False, name=None)]
-        rel = con.execute(osql[name])
-        d_cols = [d[0] for d in rel.description]
-        d_pdf = rel.df()
-        d_rows = [tuple(r) for r in d_pdf.itertuples(index=False, name=None)]
-        bad_dtypes = _dtype_mismatches(s_pdf, d_pdf)
-        if bad_dtypes:
-            print(f"FAIL {name}: pandas dtype mismatch (driver hash would differ): "
-                  + "; ".join(bad_dtypes))
-            n_bad += 1
-            verdicts[name] = "failed"
-            continue
-        if sorted(s_cols) != sorted(d_cols):
-            print(f"FAIL {name}: columns differ spark={sorted(s_cols)} duck={sorted(d_cols)}")
-            n_bad += 1
-            verdicts[name] = "failed"
-            continue
-        a = _rows_sorted(s_cols, s_rows)
-        b = _rows_sorted(d_cols, d_rows)
-        exact, tol, dev = _compare(a, b)
-        if exact:
+        verdict, detail = compare_frames(s_pdf, con.execute(osql[name]).df())
+        verdicts[name] = verdict
+        if verdict == "exact":
             n_exact += 1
-            verdicts[name] = "exact"
-        elif tol:
+        elif verdict == "tol":
             n_tol += 1
-            verdicts[name] = "tol"
-            print(f"TOL  {name}: values match at 1e-9 but NOT bit-exact (max rel dev {dev:.2e})")
+            print(f"TOL  {name}: {detail}")
         else:
             n_bad += 1
-            verdicts[name] = "failed"
-            print(f"FAIL {name}: value mismatch (max rel dev {dev:.2e}, rows {len(a)} vs {len(b)})")
-            for ra, rb in list(zip(a, b))[:200]:
-                if ra != rb:
-                    print(f"  spark: {ra}\n  duck : {rb}")
-                    break
+            print(f"FAIL {name}: {detail}")
     print(
         f"\n{n_exact} exact, {n_tol} within-tolerance, {n_bad} FAILED, "
         f"{n_rows_only} rows-only (no oracle)"

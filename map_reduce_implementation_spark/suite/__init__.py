@@ -55,328 +55,36 @@ from . import (
 )
 
 
-# The external driver canonicality-checks queries() in registry order with a
-# bounded window (round 1: first 50 of 104). Round 1 checked the relational/
-# stats/parity head and left all 54 LLM-pipeline queries unverified, so the
-# registry front-loads those (pipeline, dedup, similarity, text, events,
-# udfs, maps, multimodal, subqueries, sampling). On top of this static
-# priority, all_queries() rotates by driver history (_driver_history):
-# previously-FAILED entries first, never-checked next, then RE_GRADE_HEAD
-# (green entries whose semantics or plan changed since their last driver
-# check), then the remaining greens ordered OLDEST-CHECKED-FIRST (static
-# order breaks ties) — so each round's window covers new ground, re-grades
-# fixes, and keeps every old verdict fresh instead of letting ~150 entries
-# age past two rounds (VERDICT r05 "What's missing" #2).
+# The external correctness check grades a bounded prefix of queries()
+# (50 entries per round; CORRECTNESS_r*.json), so all_queries() rotates
+# the registry by that history (_driver_history): entries whose last
+# check FAILED first (a fix must be re-graded), never-checked entries
+# next, then RE_GRADE_HEAD, then the remaining greens oldest-checked-
+# first, so each round's window covers new ground and every old verdict
+# stays fresh. Ties keep module merge order.
 #
-# Round-6 heads: the two codec entries gained REAL decode paths + closed-
-# form oracles in round 5 (suite/multimodal.py:129,324) but sat past the
-# full 50-slot window, so their latest driver rows are stale r02/r03
-# no_oracle; graph_pagerank's node-id fix (customer → -(custkey+1)) also
-# changed values and was pushed past slot 50; similarity_cosine_pairs now
-# takes the gemm-candidate + exact-verify path (bit-identical, re-grade
-# anyway).
-#
-# Round-7: all four round-6 heads were re-graded hash-exact by the r06
-# driver run (CORRECTNESS_r06), so the head list is EMPTY again — they
-# rejoin the oldest-first green tail with a fresh last-checked round and
-# the 4 freed slots go to the oldest (r02-vintage) greens. Add names here
-# ONLY when a green entry's semantics or plan changed since its last
-# driver check.
-RE_GRADE_HEAD: tuple[str, ...] = ()
-
-DRIVER_PRIORITY: tuple[str, ...] = (
-    # round-5 re-grade head (driver-green again in r05; with the round-6
-    # oldest-first rotation this static head is now only a tie-break)
-    "dedup_fuzzy_levenshtein",
-    "dedup_fuzzy_clusters",
-    "multimodal_resize",
-    "multimodal_audio_decode",
-    "similarity_cosine_pairs",
-    "graph_pagerank",
-    "pipeline_curation",
-    "dedup_exact",
-    "dedup_keep_first",
-    "dedup_clusters",
-    "dedup_ngram_jaccard",
-    "dedup_ngram_jaccard_capped",
+# RE_GRADE_HEAD: green entries whose plan or semantics changed after their
+# last external check. Remove a name once a later round re-grades it.
+RE_GRADE_HEAD: tuple[str, ...] = (
+    # exact score pass on every core (operators/similarity.exact_scores)
+    "similarity_knn_join",
+    "similarity_hard_negatives",
+    "embedding_label_noise",
+    # edge list checkpointed once
+    "graph_shortest_paths",
+    "graph_assortativity",
+    # numpy MinHash/SimHash kernels with in-kernel LSH band hashing
     "dedup_minhash_lsh",
     "dedup_simhash",
-    "dedup_embedding_cosine",
-    "similarity_cosine_topk",
-    "similarity_ann_lsh",
-    "similarity_ann_ivf",
-    "embedding_norms",
-    "text_token_count",
-    "text_quality_score",
-    "text_lang_id",
-    "text_fingerprint",
-    "text_winnow_fingerprint",
-    "text_repetition_score",
-    "text_top_bigrams",
-    "events_tumbling_window",
-    "events_sliding_window",
-    "events_session_window",
-    "events_hypertable_rollup",
-    "events_gap_fill",
-    "events_click_attribution",
-    "events_recursive_chains",
-    "events_json_extract",
-    "events_variant_extract",
-    "events_type_stats",
-    "udaf_geomean",
-    "grouped_map_centroids",
-    "udtf_sentences",
-    "map_functions",
-    "struct_functions",
-    "multimodal_metadata",
-    "multimodal_typed_metadata",
-    "multimodal_png_roundtrip",
-    "multimodal_wav_roundtrip",
-    "multimodal_frame_sample",
-    "scalar_subquery",
-    "in_subquery",
-    "exists_subquery",
-    "not_exists_subquery",
-    "conditional_functions",
-    "sample_deterministic",
-    "sample_stratified",
-    # window boundary — below here sat past slot 50 in round 2
-    "decontaminate",
-    "pii_redact",
-    "quota_sample",
-    "sequence_pack",
-    "tfidf_top_terms",
-    "train_shuffle",
-    "sample_weighted",
-    "multimodal_features",
-    "unpivot",
-    "union_by_name",
-    "explode_tokens",
-    "sample_rng",
-    # round-2 late additions — rotate into the window in later rounds
-    "graph_pagerank",
-    "events_funnel",
-    "quality_outliers",
-    "domain_mix_report",
-    "text_unigram_logprob",
-    "similarity_knn_join",
-    "events_transition_matrix",
-    "events_retention",
-    "join_nation_volume",
-    "join_returned_customers",
-    "market_basket",
-    "approx_distinct_rollup",
-    "forecast_revenue",
-    "promo_revenue_share",
-    # round-2 TPC-H correlated/disjunctive depth (suite/tpch2.py)
-    "small_quantity_revenue",
-    "large_volume_customers",
-    "disjunctive_filter",
-    "dormant_customers",
-    "waiting_suppliers",
-    # round-2 LLM-pipeline depth (suite/pipeline2.py)
-    "chunk_documents",
-    "cms_heavy_hitters",
-    "upsert_snapshot",
-    "text_bm25_topk",
-    "hybrid_rrf_topk",
-    "events_scd2_intervals",
-    "equi_depth_histogram",
-    "rate_limit_per_key",
-    "merge_upsert",
-    "text_bigram_logprob",
-    "dedup_semantic",
-    "revenue_seasonality",
-    # round-3 additions — MUST stay after the 47 round-2 unchecked names
-    # so the driver's 50-slot window covers 47 + exactly these 3
-    "similarity_ann_recall",
-    "similarity_ann_ivf_recall",
-    "multimodal_decode_dispatch",
-    # past slot 50 — graded by the rotation in round 4+
-    "order_priority_check",
-    "market_share",
-    "nation_profit",
-    "top_supplier_revenue",
-    "important_part_value",
-    "part_supplier_variety",
-    "dominant_suppliers",
-    "window_rank_functions",
-    "text_novelty_score",
-    "dedup_containment",
-    "token_vocab_coverage",
-    "customer_rfm_segments",
-    "dedup_repeated_substrings",
-    "events_cohort_ltv",
-    # round-4 additions — keep new names AFTER every older unchecked
-    # entry so the driver's 50-slot window grades the backlog first
-    "dedup_semantic_graded",
-    "min_cost_supplier",
-    "late_shipment_priority",
-    "domain_temperature_resample",
-    "nearest_centroid_confusion",
-    "perplexity_bucket_sample",
-    "integrity_audit",
-    "dataset_profile",
-    # round-4 wave 2 — graded sketch twins + corpus profiling; still
-    # after every older unchecked entry (window: 22 backlog + 8 wave-2)
-    "dedup_minhash_graded",
-    "dedup_simhash_graded",
-    "text_winnow_graded",
-    "gopher_quality_gate",
-    "embedding_dim_stats",
-    "tokenizer_fertility",
-    "embedding_linear_probe",
-    "embedding_pca_power",
-    "graph_triangle_count",
-    "bloom_decontaminate",
-    "events_path_topk",
-    "sink_roundtrip",
-    "text_lang_confusion",
-    "events_watermark_audit",
-    "events_active_users",
-    # round-4 wave 3 — PQ/int8 vector storage, BPE training, span cuts,
-    # reproducible splits; still after every older unchecked entry
-    # (window: 37 backlog + 5 wave-3 = 42 <= 50)
-    "similarity_ann_pq_recall",
-    "embedding_quantize_int8",
-    "tokenizer_bpe_train",
-    "dedup_span_removal",
-    "dataset_split",
-    "text_char_entropy",
-    "join_skew_audit",
-    # round-4 wave 4 — HLL graded twin, MaxSim late interaction,
-    # MinHash accuracy audit, fuzzy-cluster pipeline; still after every
-    # older unchecked entry (window: 44 backlog + 4 = 48 <= 50)
-    "hll_distinct_graded",
-    "similarity_maxsim_topk",
-    "dedup_minhash_jaccard_est",
-    # round-5 wave — C4 segment dedup, n-gram eval decontamination,
-    # MATTR lexical diversity, MAD anomaly gate, centroid outliers.
-    # Window math: every registry entry has a green driver verdict, so
-    # the rotation is [unchecked new] + [greens in static order]; these
-    # 5 new names enter the window first and the 4 re-grade heads
-    # (fuzzy x2 + multimodal x2) follow at green positions 1-4 — all 9
-    # round-5 deltas inside the 50-slot window.
-    "dedup_line_level",
-    "decontaminate_ngram_overlap",
-    "text_mattr",
-    "events_anomaly_mad",
-    "embedding_centroid_outliers",
-    # round-5 wave 2 — batched two-stage retrieval, whitening, burst
-    # detection (window: 8 new + 4 re-grade heads = 12 deltas <= 50)
-    "similarity_two_stage_retrieval",
-    "embedding_whitening",
-    "events_burst_zscore",
-    # round-5 wave 3 — BPE inference half (train -> apply loop closed)
-    "tokenizer_bpe_apply",
-    "events_conversion_lag",
-    "dedup_incremental",
-    # round-5 wave 4 — pipeline observability (curation6) + the linear-
-    # probe apply half (window: 17 new + 4 re-grade heads = 21 <= 50)
-    "filter_cascade_report",
-    "token_budget_mix",
-    "boilerplate_removal",
-    "dedup_cluster_stats",
-    "similarity_threshold_sweep",
-    "quality_classifier_apply",
-    # round-5 wave 5 — LSH S-curve priced on the corpus's measured
-    # pair-Jaccard distribution (window: 18 new + 4 re-grades <= 50)
-    "minhash_band_analysis",
-    # round-5 wave 6 — distribution-drift monitoring between the time
-    # halves (window: 20 new + 4 re-grades = 24 <= 50)
-    "events_drift_psi",
-    "events_drift_ks",
-    # round-5 wave 6b — probe calibration (ECE) on the shared GD loop
-    "quality_calibration_report",
-    # round-5 wave 6c — incremental IVF maintenance (delta assignment)
-    "similarity_index_delta",
-    # round-5 wave 6d — Matryoshka prefix-truncation recall table
-    "similarity_matryoshka_recall",
-    # round-5 wave 7 — governance audits: cross-split leakage,
-    # k-anonymity, kNN label noise (window: 26 new + 5 re-grade heads
-    # = 31 <= 50; the three new names are unchecked and enter first)
-    "split_leakage_audit",
-    "k_anonymity_audit",
-    "embedding_label_noise",
-    # round-5 wave 8 — DSIR importance resampling (data selection)
-    # (window: 27 new + 5 re-grade heads = 32 <= 50)
-    "dsir_importance_sample",
-    # round-5 wave 9 — corpus health (cross-source overlap matrix,
-    # Kneser-Ney LM, Zipf fit), BFS shortest paths, hard-negative
-    # mining (window: 32 new + 5 re-grade heads = 37 <= 50)
-    "cross_source_overlap",
-    "text_kneser_ney_logprob",
-    "text_zipf_fit",
-    "graph_shortest_paths",
-    "similarity_hard_negatives",
-    # round-5 wave 10 — TextRank keywords, lang-ID kappa, BLEU
-    # precision, Markov stationary distribution, l-diversity
-    # (window: 37 new + 5 re-grade heads = 42 <= 50)
-    "text_textrank_keywords",
-    "text_lang_id_kappa",
-    "text_bleu_precision",
-    "events_markov_stationary",
-    "l_diversity_audit",
-    # round-5 wave 11 — lossless prefix-filter similarity join,
-    # greedy k-center coreset, n-gram saturation curve
-    "dedup_prefix_filter_pairs",
-    "coreset_kcenter",
-    "token_ngram_saturation",
-    # round-5 wave 12 — gate-ensemble agreement, hapax richness, HHI
-    # concentration, Mahalanobis outliers. Window arithmetic at end of
-    # round 5: 44 unchecked + 6 re-grade heads (incl. graph_pagerank,
-    # node-id fix) = 50 <= 50 — exactly full
-    "quality_gate_agreement",
-    "text_hapax_ratio",
-    "market_concentration_hhi",
-    "embedding_outlier_mahalanobis",
-    # round-5 wave 13 — PAST the full window: these two sit beyond
-    # slot 50 this round and rotate into the round-6 window as
-    # unchecked-first (the round-2/3 late-addition precedent); both
-    # are check_values-exact at sf0.01+sf0.1 meanwhile
-    "corpus_mutual_information",
-    "events_autocorrelation",
-    "events_changepoint_cusum",
-    "text_collocations_pmi",
-    # round-6 waves 14-15 (new entries enter the window unchecked-first
-    # regardless of position)
-    "quality_benford_audit",
-    "revenue_gini",
-    "events_ema_hourly",
-    "events_interarrival",
-    "corpus_jsd_sources",
-    "corpus_good_turing",
-    "text_readability",
-    "decontaminate_semantic",
-    "quality_winsorized_stats",
-    "graph_degree_stats",
-    # round-6 wave 16
-    "pareto_skyline",
-    "dedup_cluster_representatives",
-    "term_burstiness",
-    "events_value_moments",
-    # round-6 wave 17
-    "text_conditional_entropy",
-    "fulfillment_latency",
-    "graph_assortativity",
-    "orders_seasonal_index",
-    # round-6 wave 18
-    "embedding_centroid_drift",
-    "dedup_inflation_report",
-    "events_churn_hazard",
 )
 
 
 def _driver_history() -> tuple[set[str], set[str], dict[str, int]]:
     """(green, red, last_checked_round) from past CORRECTNESS files.
 
-    The driver canonicality-checks only a bounded prefix of ``queries()``
-    (50 entries per round), so the registry rotates the window: queries
-    whose last driver check FAILED come first (a fix must be re-graded),
-    then queries never checked, then the already-green tail ordered
-    oldest-checked-first so every verdict stays fresh. Green = a
-    value-hash match, or a rows-only pass for oracle-less entries.
-    Falls back to the static order when no correctness files are readable.
+    Green = a value-hash match, or a rows-only pass for oracle-less
+    entries. With no readable correctness files every entry is
+    unchecked and all_queries() keeps module merge order.
 
     Historical names that were since renamed out of the registry can
     linger in these sets (one exists: ``multimodal_decode``, the pre-r05
@@ -475,22 +183,20 @@ def all_queries() -> dict[str, Query]:
             if name in merged:
                 raise ValueError(f"duplicate query name {name!r}")
             merged[name] = q
-    missing = [n for n in DRIVER_PRIORITY if n not in merged]
+    missing = [n for n in RE_GRADE_HEAD if n not in merged]
     if missing:
-        raise ValueError(f"DRIVER_PRIORITY names not in registry: {missing}")
+        raise ValueError(f"RE_GRADE_HEAD names not in registry: {missing}")
     green, red, last = _driver_history()
-    static = list(DRIVER_PRIORITY) + [n for n in merged if n not in set(DRIVER_PRIORITY)]
-    pos = {n: i for i, n in enumerate(static)}
     heads = [n for n in RE_GRADE_HEAD if n in green]
-    green_tail = sorted(
-        (n for n in static if n in green and n not in heads),
-        key=lambda n: (last.get(n, 0), pos[n]),
-    )
     rotated = (
-        [n for n in static if n in red]
-        + [n for n in static if n not in red and n not in green]
+        [n for n in merged if n in red]
+        + [n for n in merged if n not in red and n not in green]
         + heads
-        + green_tail
+        # sorted() is stable: equal rounds keep merge order
+        + sorted(
+            (n for n in merged if n in green and n not in heads),
+            key=lambda n: last.get(n, 0),
+        )
     )
     return {n: merged[n] for n in rotated}
 

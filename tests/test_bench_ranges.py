@@ -136,19 +136,19 @@ def test_all_driver_bench_artifacts_inside_quoted_ranges():
     assert not errors, "\n".join(errors)
 
 
-def test_x100_spec_families_match_banded_families():
-    """Every family carrying a 100x band must have a per-family fresh-JVM
-    spec in bench._x100_specs and vice versa — a family added to one
-    side without the other either goes unmeasured or unchecked."""
+def test_family_table_matches_banded_families():
+    """bench.FAMILIES drives both the 10× and the 100× points, so its
+    names, in record order, must be exactly the families banded for both
+    slopes — a family added to one side without the other either goes
+    unmeasured or unchecked."""
     import bench
 
-    spec_names = [n for n, _ in bench._x100_specs({})]
     banded = [
         f
         for f, fs in _ranges()["families"].items()
-        if "slope_x100_vs_linear" in fs
+        if "slope_vs_linear" in fs and "slope_x100_vs_linear" in fs
     ]
-    assert sorted(spec_names) == sorted(banded)
+    assert [f.name for f in bench.FAMILIES] == banded
 
 
 def test_load_snapshot_shape():

@@ -4,7 +4,7 @@ can't see these; at 100 TB they ARE the difference."""
 
 from __future__ import annotations
 
-from map_reduce_implementation_spark.plans import audit_plan
+from map_reduce_implementation_spark.plans import audit_plan, formatted_plan
 from map_reduce_implementation_spark.sources import table
 from map_reduce_implementation_spark.suite.parity import q_letter_counter
 from map_reduce_implementation_spark.suite.relational import (
@@ -104,10 +104,10 @@ def test_runtime_bloom_filter_injected(spark):
     try:
         with runtime_bloom(spark):
             filtered = build()
-            plan = filtered._jdf.queryExecution().executedPlan().toString()
+            plan = formatted_plan(filtered)
             assert "bloom_filter_agg" in plan, "bloom filter not injected"
             want = sorted(map(tuple, build().collect()))
-        plain_plan = build()._jdf.queryExecution().executedPlan().toString()
+        plain_plan = formatted_plan(build())
         assert "bloom_filter_agg" not in plain_plan, "conf leak: bloom stayed on"
         got = sorted(map(tuple, filtered.collect()))
         assert got == want and len(got) > 0

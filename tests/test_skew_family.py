@@ -12,9 +12,11 @@ under the standard config.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import functions as F
+
+from map_reduce_implementation_spark.plans import audit_plan
+
+from .conftest import SF0001
 
 
 def _skewed_frames(spark, tmp_path):
@@ -62,26 +64,23 @@ def test_salted_join_identity_on_skewed_corpus_no_broadcast(spark, tmp_path):
 
     with bench._no_auto_broadcast(spark):
         salted = salted_join(fact, dim, "okey", n_salts=8)
-        plan = salted._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastHashJoin" not in plan
+        assert not audit_plan(salted).has_broadcast_join
         got = sorted(tuple(r) for r in salted.collect())
     want = sorted(tuple(r) for r in fact.join(dim, "okey").collect())
     assert got == want
 
 
-def test_skew_corpus_builder_hot_fraction(spark):
-    """The committed .bench_data skew corpora (if present on this
-    machine) carry the designed ~25% hot fraction at every scale; skip
-    cleanly where bench corpora were never built."""
-    import pytest
-
+def test_skew_corpus_builder_hot_fraction(spark, tmp_path, monkeypatch):
+    """The skew corpus builder gives the hot key the designed ~25% of
+    rows at every scale (built from sf0.001 under a temporary root)."""
     import bench
 
-    for dirname in ("skew_x1", "skew_x10"):
-        path = os.path.join(bench.REPO, ".bench_data", dirname, "lineitem.parquet")
-        if not os.path.exists(path):
-            pytest.skip("bench skew corpora not built on this machine")
-        df = spark.read.parquet(path)
-        n = df.count()
+    monkeypatch.setattr(bench, "REPO", str(tmp_path))
+    monkeypatch.setattr(bench, "SF_DIR", SF0001)
+    for n in (1, 2):
+        out = bench._ensure_skew_xn(spark, n)
+        assert out == str(tmp_path / ".bench_data" / f"skew_x{n}")
+        df = spark.read.parquet(f"{out}/lineitem.parquet")
+        rows = df.count()
         hot = df.filter("l_orderkey = 0").count()
-        assert 0.22 < hot / n < 0.28, (dirname, hot / n)
+        assert 0.22 < hot / rows < 0.28, (n, hot / rows)

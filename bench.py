@@ -295,7 +295,7 @@ def _two_stage_scale_df(spark, corpus_dir: str, n: int):
     from pyspark.sql import functions as F
 
     from map_reduce_implementation_spark.operators.similarity import _as_double
-    from map_reduce_implementation_spark.suite.pipeline3 import (
+    from map_reduce_implementation_spark.suite.similarity import (
         TS_QMOD,
         TS_QREM,
         two_stage_retrieval,

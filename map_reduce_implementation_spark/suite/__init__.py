@@ -10,48 +10,20 @@ from __future__ import annotations
 
 from .base import Query
 from . import (
+    corpus,
     curation,
-    curation2,
-    curation3,
-    curation4,
-    curation5,
-    corpus2,
-    corpus3,
-    corpus4,
-    curation6,
-    curation7,
-    curation8,
     dedup,
-    drift,
-    drift2,
+    embeddings,
     events,
-    governance,
     graph,
-    joins2,
-    maps,
-    mlprobe,
     multimodal,
     parity,
-    pipeline2,
-    pipeline3,
     quality,
-    quality2,
-    relational,
-    scalars2,
     similarity,
-    sinks,
-    sketches3,
+    sql,
     stats,
-    stats2,
-    stats3,
-    stats4,
     text,
-    tpch2,
-    tpch3,
-    tpch4,
-    tuning,
-    udfs,
-    vector2,
+    tpch,
 )
 
 
@@ -137,47 +109,19 @@ def all_queries() -> dict[str, Query]:
     merged: dict[str, Query] = {}
     for mod in (
         parity,
-        curation,
-        curation2,
-        curation3,
-        curation4,
-        curation5,
-        corpus2,
-        corpus3,
-        corpus4,
-        curation6,
-        curation7,
-        curation8,
-        drift,
-        drift2,
-        governance,
-        sketches3,
-        graph,
-        tpch3,
-        tpch4,
-        relational,
-        joins2,
+        tpch,
+        sql,
         stats,
-        scalars2,
-        maps,
-        mlprobe,
-        events,
-        text,
         dedup,
-        similarity,
-        multimodal,
-        udfs,
-        sinks,
-        tpch2,
-        pipeline2,
-        pipeline3,
+        text,
+        corpus,
+        curation,
         quality,
-        quality2,
-        stats2,
-        stats3,
-        stats4,
-        tuning,
-        vector2,
+        events,
+        similarity,
+        embeddings,
+        graph,
+        multimodal,
     ):
         for name, q in mod.QUERIES.items():
             if name in merged:

@@ -1,20 +1,105 @@
-"""Event-stream operator suite — batch twins of the streaming surface
-(SURVEY.md §2.9; EXT — the reference has no streaming at all).
+"""Event-stream queries: funnels, retention, cohorts, attribution,
+sessions, tumbling/sliding windows, gap fill, watermarks, SCD2
+intervals, JSON and variant extraction, upserts, rate limits, and the
+time-series monitors (autocorrelation, CUSUM, EMA, inter-arrival fits,
+burst z-scores, churn hazard).
 
-These run the SAME window expressions the streaming module uses
-(streaming/windows.py); Structured Streaming incrementalizes them with
-watermark state. Batch execution here gives the DuckDB oracle a target.
+These are batch twins of the streaming surface (``streaming/windows.py``
+runs the same window expressions incrementally under a watermark); batch
+execution gives the DuckDB oracle a target. Series statistics aggregate
+exact integers (hourly counts, integer-second gaps) and join lags on the
+hour timestamp, not on position, so gap hours do not shift a lag.
+Variances come from exact integer power sums, never engine-native
+STDDEV, whose update order differs between engines.
 """
 
 from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources import table
 from .base import Query, dec
+
+HAZARD_THRESHOLDS_S = (3600, 86400, 259200)
+
+
+def q_events_churn_hazard(spark: SparkSession, sf: str) -> DataFrame:
+    """Gap-exceedance curve at {HAZARD_THRESHOLDS_S} seconds (1 h /
+    1 d / 3 d): of all per-user inter-arrival gaps, the share
+    exceeding each threshold — the empirical basis for session
+    timeouts and the 'inactive user' cutoff. Shares are single
+    divisions of exact integers.
+
+    Plan: the ``events_interarrival`` gap frame (one user-keyed lag
+    window) aggregated ONCE with one conditional counter per
+    threshold — the threshold sweep costs one scan total, not one
+    per threshold."""
+    ev = table(spark, sf, "events")
+    from pyspark.sql import Window
+
+    u = F.unix_micros(F.col("ts"))
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    gaps = (
+        ev.select(
+            ((u - F.lag(u).over(w)) / F.lit(1000000))
+            .cast("bigint")
+            .alias("g"),
+        )
+        .filter(F.col("g").isNotNull())
+    )
+    # 1-row frame consumed by one branch per threshold — localCheckpoint
+    # so the union does NOT replay the events scan per branch (the
+    # filter_cascade_report lesson)
+    agg = gaps.agg(
+        F.count(F.lit(1)).alias("n"),
+        *[
+            F.count(F.when(F.col("g") > t, 1)).alias(f"x{t}")
+            for t in HAZARD_THRESHOLDS_S
+        ],
+    ).localCheckpoint(eager=True)
+    rows = []
+    for t in HAZARD_THRESHOLDS_S:
+        rows.append(
+            agg.select(
+                F.lit(t).alias("threshold_s"),
+                F.col("n").alias("n_gaps"),
+                F.col(f"x{t}").alias("n_exceed"),
+                (F.col(f"x{t}") / F.col("n")).alias("exceed_share"),
+            )
+        )
+    out = rows[0]
+    for r in rows[1:]:
+        out = out.unionAll(r)
+    return out
+
+
+def _hazard_oracle() -> str:
+    selects = [
+        f"""SELECT {t} AS threshold_s, n AS n_gaps, x{t} AS n_exceed,
+  x{t} * 1.0 / n AS exceed_share FROM agg"""
+        for t in HAZARD_THRESHOLDS_S
+    ]
+    body = "\nUNION ALL\n".join(selects)
+    counters = ",\n    ".join(
+        f"COUNT(CASE WHEN g > {t} THEN 1 END) AS x{t}"
+        for t in HAZARD_THRESHOLDS_S
+    )
+    return f"""
+WITH gaps AS (
+  SELECT (epoch_us(ts) - lag(epoch_us(ts)) OVER
+    (PARTITION BY user_id ORDER BY ts, event_id)) // 1000000 AS g
+  FROM events
+),
+agg AS (
+  SELECT COUNT(*) AS n,
+    {counters}
+  FROM gaps WHERE g IS NOT NULL
+)
+{body}
+"""
 
 
 def q_tumbling_window(spark: SparkSession, sf: str) -> DataFrame:
@@ -278,48 +363,6 @@ JOIN (SELECT * FROM events WHERE event_type = 'purchase') p
 """
 
 
-_RECURSIVE_CHAINS = """
-WITH RECURSIVE nxt AS (
-  SELECT user_id, event_id, ts,
-    LEAD(event_id) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS next_id,
-    LEAD(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS next_ts
-  FROM {src}
-),
-edges AS (
-  SELECT event_id, next_id FROM nxt
-  WHERE next_id IS NOT NULL AND next_ts <= ts + INTERVAL 10 MINUTE
-),
-starts AS (
-  SELECT event_id FROM nxt n
-  WHERE NOT EXISTS (SELECT 1 FROM edges e WHERE e.next_id = n.event_id)
-),
-walk AS (
-  SELECT event_id AS start_id, event_id AS cur, 1 AS len FROM starts
-  UNION ALL
-  SELECT w.start_id, e.next_id, w.len + 1
-  FROM walk w JOIN edges e ON e.event_id = w.cur
-)
-SELECT start_id, CAST(MAX(len) AS INTEGER) AS chain_len FROM walk GROUP BY start_id
-"""
-
-
-def q_recursive_chains(spark: SparkSession, sf: str) -> DataFrame:
-    """Recursive CTE (WITH RECURSIVE, Spark 4.1): sessionization as an
-    explicit chain walk — each event's single LEAD successor within 10
-    minutes forms a linear chain; the recursion walks chains from their
-    starts and reports lengths. Termination is structural (each event
-    has ≤1 successor and time strictly increases — a DAG). Each
-    iteration is one join stage; depth = longest chain, so state is
-    bounded by the data, not the recursion. Complements session_window
-    (declarative) and the iterative connected-components dedup
-    (driver-loop) as the third stateful-traversal idiom."""
-    table(spark, sf, "events").createOrReplaceTempView("events_rc")
-    return spark.sql(_RECURSIVE_CHAINS.format(src="events_rc"))
-
-
-SQL_RECURSIVE_CHAINS = _RECURSIVE_CHAINS.format(src="events")
-
-
 def q_funnel(spark: SparkSession, sf: str) -> DataFrame:
     """Ordered conversion funnel view → click → purchase: per-user
     earliest timestamp of each step via conditional aggregation (ONE
@@ -368,54 +411,6 @@ FROM per_user
 """
 
 
-def q_transition_matrix(spark: SparkSession, sf: str) -> DataFrame:
-    """First-order Markov transition matrix over per-user event
-    sequences: P(next_type | prev_type). One user-keyed window (lag)
-    over the stream, then the count/probability aggregation runs on the
-    TYPE-PAIR key space — 25 cells regardless of data size, so the
-    second shuffle and the probability window are O(|types|²), free at
-    any scale. Deterministic sequence order: (ts, event_id) tie-break."""
-    from pyspark.sql import Window
-
-    ev = table(spark, sf, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = ev.select(
-        "user_id",
-        F.lag("event_type").over(w).alias("prev_type"),
-        F.col("event_type").alias("next_type"),
-    ).filter(F.col("prev_type").isNotNull())
-    cells = seq.groupBy("prev_type", "next_type").agg(
-        F.count("*").alias("n_transitions")
-    )
-    w_prev = Window.partitionBy("prev_type")
-    return cells.select(
-        "prev_type",
-        "next_type",
-        "n_transitions",
-        F.round(
-            F.col("n_transitions") / F.sum("n_transitions").over(w_prev), 6
-        ).alias("prob"),
-    )
-
-
-SQL_TRANSITION_MATRIX = """
-WITH seq AS (
-  SELECT user_id,
-    LAG(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_type,
-    event_type AS next_type
-  FROM events
-),
-cells AS (
-  SELECT prev_type, next_type, COUNT(*) AS n_transitions
-  FROM seq WHERE prev_type IS NOT NULL
-  GROUP BY prev_type, next_type
-)
-SELECT prev_type, next_type, n_transitions,
-  ROUND(n_transitions * 1.0 / SUM(n_transitions) OVER (PARTITION BY prev_type), 6) AS prob
-FROM cells
-"""
-
-
 def q_retention(spark: SparkSession, sf: str) -> DataFrame:
     """Cohort retention: users grouped by first-active day; for each
     (cohort_day, day_offset), how many came back and what fraction of
@@ -426,10 +421,10 @@ def q_retention(spark: SparkSession, sf: str) -> DataFrame:
     ev = table(spark, sf, "events")
     # day stays TIMESTAMP (midnight) — pandas date objects hash as
     # dtype=object and diverge from the oracle's datetime64 canon
-    # Round-12 optimization (guide §2.4): ``acts`` feeds the cohort
-    # aggregate AND the offset join, ``cohort`` feeds the join AND the
-    # size rollup — materialize each once instead of re-scanning and
-    # re-deduping the event stream per consumer (6 scans → 2)
+    # ``acts`` feeds the cohort aggregate AND the offset join, ``cohort``
+    # feeds the join AND the size rollup — materialize each once instead of
+    # re-scanning and re-deduping the event stream per consumer (6 scans →
+    # 2)
     acts = ev.select(
         "user_id", F.date_trunc("day", "ts").alias("day")
     ).distinct().localCheckpoint(eager=True)
@@ -477,10 +472,10 @@ def q_cohort_ltv(spark: SparkSession, sf: str) -> DataFrame:
         F.date_trunc("day", "ts").alias("day"),
         dec("value").alias("v"),
     )
-    # Round-12 optimization (guide §2.4): cohort feeds two consumers
-    # (the cells join + sizes) — lazily each replayed the event-stream
-    # scan + user aggregate; materialize the user-sized frame once
-    # (3 events scans → 2, the first-activity pass + the offsets pass)
+    # cohort feeds two consumers (the cells join + sizes) — lazily each
+    # replayed the event-stream scan + user aggregate; materialize the
+    # user-sized frame once (3 events scans → 2, the first-activity pass +
+    # the offsets pass)
     cohort = acts.groupBy("user_id").agg(
         F.min("day").alias("cohort_day")
     ).localCheckpoint(eager=True)
@@ -595,58 +590,6 @@ SELECT user_id, event_id, event_type, ts AS valid_from,
   lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS valid_to,
   (lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL) AS is_current
 FROM events
-"""
-
-EQUI_DEPTH_PROBS = tuple(round(0.1 * i, 1) for i in range(1, 10))
-
-
-def q_equi_depth_histogram(spark: SparkSession, sf: str) -> DataFrame:
-    """Equi-depth (equal-count) histogram of order totals — the
-    optimizer-statistics shape, and the scale-sane alternative to a
-    global ntile: a global NTILE window would sort ALL rows into one
-    partition; instead the 9 decile boundaries come from one exact
-    ``percentile`` aggregation, are broadcast as a 9-element array, and
-    bucket assignment is a pure map (count of boundaries below the
-    value). Exactness: Spark ``percentile`` ≡ DuckDB ``quantile_cont``
-    (same interpolation), so boundaries are bit-identical.
-    """
-    orders = table(spark, sf, "orders")
-    # ONE percentile call with an array of probs: a single sort buffer
-    # computes all 9 deciles (9 separate percentile() aggregates each
-    # buffer and sort the column independently — measured 3.2 s → 0.9 s
-    # at sf0.1)
-    probs = ", ".join(str(p) for p in EQUI_DEPTH_PROBS)
-    bnds = orders.agg(
-        F.expr(f"percentile(o_totalprice, array({probs}))").alias("bnds")
-    )
-    bucket = F.size(
-        F.filter(F.col("bnds"), lambda x: F.col("o_totalprice") > x)
-    ).cast("int")
-    return (
-        orders.join(F.broadcast(bnds))
-        .groupBy(bucket.alias("bucket"))
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min("o_totalprice").alias("lo"),
-            F.max("o_totalprice").alias("hi"),
-            F.sum(dec("o_totalprice")).cast("double").alias("total"),
-        )
-    )
-
-
-SQL_EQUI_DEPTH_HISTOGRAM = """
-WITH b AS (
-  SELECT [quantile_cont(o_totalprice, 0.1), quantile_cont(o_totalprice, 0.2),
-          quantile_cont(o_totalprice, 0.3), quantile_cont(o_totalprice, 0.4),
-          quantile_cont(o_totalprice, 0.5), quantile_cont(o_totalprice, 0.6),
-          quantile_cont(o_totalprice, 0.7), quantile_cont(o_totalprice, 0.8),
-          quantile_cont(o_totalprice, 0.9)] AS bnds
-  FROM orders
-)
-SELECT CAST(len(list_filter(b.bnds, x -> o_totalprice > x)) AS INTEGER) AS bucket,
-       COUNT(*) AS n, MIN(o_totalprice) AS lo, MAX(o_totalprice) AS hi,
-       CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
-FROM orders, b GROUP BY 1
 """
 
 
@@ -934,10 +877,9 @@ def q_conversion_lag(spark: SparkSession, sf: str) -> DataFrame:
     real scale swap exact `percentile` for `approx_percentile` (the
     documented RFM trade)."""
     ev = table(spark, sf, "events")
-    # Round-12 optimization (guide §2.4): v feeds two consumers (the
-    # conversion join + the left join to base) — materialize the
-    # user-sized first-view frame once instead of replaying the event
-    # scan + aggregate per consumer (3 events scans → 2)
+    # v feeds two consumers (the conversion join + the left join to base) —
+    # materialize the user-sized first-view frame once instead of replaying
+    # the event scan + aggregate per consumer (3 events scans → 2)
     v = (
         ev.filter(F.col("event_type") == "view")
         .groupBy("user_id")
@@ -994,142 +936,466 @@ FROM base GROUP BY cohort_day
 """
 
 
-MK_ITERS = 5  # stationary-distribution power iterations
+BURST_WIN = 24  # trailing observed hourly buckets
+BURST_MIN_K = 12  # baseline must have at least this many buckets
+BURST_Z = 3.0
 
 
-def q_markov_stationary(spark: SparkSession, sf: str) -> DataFrame:
-    """Stationary distribution of the event-type Markov chain:
-    {MK_ITERS} power iterations π_{{k+1}} = π_k·P from the uniform
-    start, over the same row-stochastic transition matrix
-    ``events_transition_matrix`` reports — the long-run share of time
-    the event stream spends in each state (the "where does the funnel
-    settle" number next to the matrix's one-step view).
+def q_events_burst_zscore(spark: SparkSession, sf: str) -> DataFrame:
+    """Hourly burst detection per event type: each (type, hour) bucket's
+    count is z-scored against the mean/std of its trailing
+    {BURST_WIN} OBSERVED buckets (ROWS frame — gap-robust), flagged
+    when z > {BURST_Z} with at least {BURST_MIN_K} baseline buckets.
+    The stream-health monitor a pipeline runs on ingest telemetry;
+    mean/stddev gates on raw values are ``quality_outliers``'s job —
+    this one is about VOLUME anomalies over time.
 
-    Plan: ONE events scan builds the type-pair cell counts
-    (localCheckpoint'd — matrix, state spine, and every iteration
-    derive from the materialized |types|² cells, never re-running the
-    user-keyed lag window); each iteration is one |types|²-cell join
-    + |types|-key aggregate — free at any scale. The LEFT join back
-    to the state spine keeps sink-only states at mass 0 instead of
-    silently dropping them. Summation-order ulps (~1e-16/iteration)
-    are absorbed by the final ROUND 9 — the pagerank convention; the
-    oracle unrolls the identical iterations as a CTE chain."""
+    Determinism: variance from exact integer power sums over the
+    window (SUM(c), SUM(c²), COUNT — never engine-native STDDEV whose
+    Welford update order differs between engines); z is then a fixed
+    chain of IEEE ops. Scale: all window math runs on the (type, hour)
+    aggregate — cardinality types × hours, never raw events; one
+    uniform shuffle to build the cells, one type-keyed window."""
+    ev = table(spark, sf, "events")
+    cells = ev.groupBy(
+        "event_type", F.date_trunc("hour", F.col("ts")).alias("h")
+    ).agg(F.count("*").alias("c"))
+    w = (
+        Window.partitionBy("event_type")
+        .orderBy("h")
+        .rowsBetween(-BURST_WIN, -1)
+    )
+    k = F.count("c").over(w)
+    s1 = F.sum("c").over(w)
+    s2 = F.sum(F.col("c") * F.col("c")).over(w)
+    m = s1.cast("double") / k
+    sd = F.sqrt(
+        F.greatest(s2.cast("double") / k - m * m, F.lit(0.0))
+    )
+    z = F.when((k >= BURST_MIN_K) & (sd > 0), (F.col("c") - m) / sd)
+    zed = cells.select("event_type", z.alias("zv"))
+    return zed.groupBy("event_type").agg(
+        F.count("*").alias("n_buckets"),
+        F.sum(F.when(F.col("zv") > BURST_Z, 1).otherwise(0)).alias("n_bursts"),
+        F.round(F.max("zv"), 6).alias("max_z"),
+    )
+
+
+SQL_EVENTS_BURST_ZSCORE = f"""
+WITH cells AS (
+  SELECT event_type, date_trunc('hour', ts) AS h, COUNT(*) AS c
+  FROM events GROUP BY 1, 2
+),
+wz AS (
+  SELECT event_type, c,
+    COUNT(c) OVER win AS k, SUM(c) OVER win AS s1, SUM(c * c) OVER win AS s2
+  FROM cells
+  WINDOW win AS (PARTITION BY event_type ORDER BY h
+                 ROWS BETWEEN {BURST_WIN} PRECEDING AND 1 PRECEDING)
+),
+z AS (
+  SELECT event_type,
+    CASE WHEN k >= {BURST_MIN_K}
+          AND sqrt(greatest(CAST(s2 AS DOUBLE) / k
+               - (CAST(s1 AS DOUBLE) / k) * (CAST(s1 AS DOUBLE) / k), 0.0)) > 0
+         THEN (c - CAST(s1 AS DOUBLE) / k)
+              / sqrt(greatest(CAST(s2 AS DOUBLE) / k
+                 - (CAST(s1 AS DOUBLE) / k) * (CAST(s1 AS DOUBLE) / k), 0.0))
+    END AS zv
+  FROM wz
+)
+SELECT event_type, COUNT(*) AS n_buckets,
+  CAST(SUM(CASE WHEN zv > {BURST_Z} THEN 1 ELSE 0 END) AS BIGINT) AS n_bursts,
+  ROUND(MAX(zv), 6) AS max_z
+FROM z GROUP BY event_type
+"""
+
+
+ACF_LAGS = (1, 2, 24)
+
+
+def q_events_autocorrelation(spark: SparkSession, sf: str) -> DataFrame:
+    """Sample ACF of the hourly event-count series at lags
+    {ACF_LAGS}: rₖ = Σ(yₜ−ȳ)(yₜ₊ₖ−ȳ) / Σ(yₜ−ȳ)², pairs matched on
+    the CALENDAR hour (t and t+k both observed), mean and denominator
+    over the full observed series — the standard estimator.
+
+    Plan: one events scan to the hour-bucketed count frame (bounded
+    by the stream's time span, not its volume — localCheckpoint'd;
+    the lag joins, the scalar moments, and all three lag rows derive
+    from it with zero further corpus work). The closed form expands
+    the numerator to integer sums (Σyₜyₜ₊ₖ, Σyₜ, Σyₜ₊ₖ, pair count)
+    so both engines do the identical double arithmetic on exact
+    inputs; a constant series (zero variance) yields guarded NULLs."""
+    ev = table(spark, sf, "events")
+    hourly = (
+        ev.groupBy(F.date_trunc("hour", "ts").alias("h"))
+        .agg(F.count(F.lit(1)).alias("y"))
+        .localCheckpoint(eager=True)
+    )
+    # the scalar-moments aggregate is materialized once (it was replayed per
+    # lag branch) and the three per-lag self-joins collapse into ONE join —
+    # the a-side explodes each hour row into its |lags| shifted probes and a
+    # single lag-keyed aggregate yields every lag's exact integer sums. A
+    # literal lag spine left-join keeps zero-pair lags emitting the same
+    # (np=0, NULL acf) row the empty per-lag aggregate produced.
+    spark = ev.sparkSession
+    scalars = hourly.agg(
+        F.count(F.lit(1)).alias("nh"),
+        F.sum("y").alias("s"),
+        F.sum(F.col("y") * F.col("y")).alias("ss"),
+    ).localCheckpoint(eager=True)
+    lag_arr = F.array(*[F.lit(int(k)) for k in ACF_LAGS])
+    # shifted probe hour: h + lag hours (identical addition semantics
+    # to the former per-branch INTERVAL literal under the UTC session)
+    a_exp = hourly.select(
+        F.col("y").alias("y1"),
+        F.explode(lag_arr).alias("lag"),
+        F.col("h").alias("ah"),
+    ).withColumn(
+        "th", F.col("ah") + F.make_interval(hours=F.col("lag"))
+    )
+    grouped = (
+        a_exp.join(hourly.alias("b"), F.col("b.h") == F.col("th"))
+        .groupBy("lag")
+        .agg(
+            F.count(F.lit(1)).alias("np"),
+            F.sum(F.col("y1") * F.col("y")).alias("a12"),
+            F.sum("y1").alias("b1"),
+            F.sum("y").alias("b2"),
+        )
+    )
+    spine = spark.range(1).select(F.explode(lag_arr).alias("lag"))
+    psums = spine.join(grouped, "lag", "left").select(
+        "lag",
+        F.coalesce("np", F.lit(0)).alias("np"),
+        "a12",
+        "b1",
+        "b2",
+    )
+    j = psums.crossJoin(F.broadcast(scalars))
+    ybar = F.col("s").cast("double") / F.col("nh")
+    num = (
+        F.col("a12").cast("double")
+        - ybar * (F.col("b1") + F.col("b2")).cast("double")
+        + F.col("np").cast("double") * ybar * ybar
+    )
+    den = F.col("ss").cast("double") - F.col("nh").cast("double") * ybar * ybar
+    return j.select(
+        "lag",
+        F.col("np").alias("n_pairs"),
+        F.round(F.when(den > 0, num / den), 6).alias("acf"),
+    )
+
+
+def _acf_oracle(lags: tuple[int, ...] = ACF_LAGS) -> str:
+    selects = []
+    for k in lags:
+        selects.append(
+            f"""SELECT {k} AS lag, np AS n_pairs,
+  ROUND(CASE WHEN CAST(ss AS DOUBLE) - CAST(nh AS DOUBLE)
+      * (CAST(s AS DOUBLE) / nh) * (CAST(s AS DOUBLE) / nh) > 0
+    THEN (CAST(a12 AS DOUBLE)
+          - (CAST(s AS DOUBLE) / nh) * CAST(b1 + b2 AS DOUBLE)
+          + CAST(np AS DOUBLE) * (CAST(s AS DOUBLE) / nh)
+            * (CAST(s AS DOUBLE) / nh))
+         / (CAST(ss AS DOUBLE) - CAST(nh AS DOUBLE)
+            * (CAST(s AS DOUBLE) / nh) * (CAST(s AS DOUBLE) / nh))
+    END, 6) AS acf
+FROM (
+  SELECT COUNT(*) AS np,
+    CAST(SUM(a.y * b.y) AS BIGINT) AS a12,
+    CAST(SUM(a.y) AS BIGINT) AS b1, CAST(SUM(b.y) AS BIGINT) AS b2
+  FROM hourly a JOIN hourly b ON b.h = a.h + INTERVAL {k} HOUR
+) CROSS JOIN scalars"""
+        )
+    body = "\nUNION ALL\n".join(selects)
+    return f"""
+WITH hourly AS (
+  SELECT date_trunc('hour', ts) AS h, COUNT(*) AS y FROM events GROUP BY 1
+),
+scalars AS (
+  SELECT COUNT(*) AS nh, CAST(SUM(y) AS BIGINT) AS s,
+    CAST(SUM(y * y) AS BIGINT) AS ss
+  FROM hourly
+)
+{body}
+"""
+
+
+def q_events_changepoint_cusum(spark: SparkSession, sf: str) -> DataFrame:
+    """CUSUM change-point detection (Page 1954) on the hourly
+    event-count series: Sₜ = Σ≤ₜ(yᵢ − ȳ) peaks in magnitude at the
+    most likely level-shift hour. One row: the arg-max hour, the peak
+    CUSUM value, and the mean rate before/after it — the "WHEN did
+    traffic change" localizer next to the drift monitors'
+    "DID the distribution change" (events_drift_psi/ks) and the ACF's
+    "is it periodic".
+
+    Determinism: the comparison key is the INTEGER Dₜ = N·prefixₜ −
+    t·S (= N·Sₜ — same arg-max, no floats), prefix sums over the
+    bounded hourly frame; ties break on the earliest hour; the
+    reported CUSUM and means are single divisions of exact integers.
+    Plan: one events scan to the hour-bounded count frame
+    (localCheckpoint'd — the cumulative window, the arg-max cut, and
+    the before/after aggregate all derive from it), windows run on
+    |hours| rows, the arg-max is a TakeOrderedAndProject(1)."""
     from pyspark.sql import Window
 
     ev = table(spark, sf, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = ev.select(
-        "user_id",
-        F.lag("event_type").over(w).alias("prev_type"),
-        F.col("event_type").alias("next_type"),
-    ).filter(F.col("prev_type").isNotNull())
-    cells = (
-        seq.groupBy("prev_type", "next_type")
-        .agg(F.count(F.lit(1)).alias("nt"))
+    hourly = (
+        ev.groupBy(F.date_trunc("hour", "ts").alias("h"))
+        .agg(F.count(F.lit(1)).alias("y"))
         .localCheckpoint(eager=True)
     )
-    # Round-12 optimization (guide §2.4 + §3.1): rowsum and P are
-    # |types|- and |types|²-row frames referenced by EVERY unrolled
-    # iteration — lazily the rowsum aggregate replayed 6× and the
-    # P join 5× (58 Exchanges in the captured before-plan), and each
-    # tiny iteration join ran as a shuffle pair that AQE had to
-    # re-plan at runtime. Materializing both once and broadcast-
-    # hinting the per-iteration joins statically leaves one exchange
-    # per iteration (the |types|-key flow aggregate). Same cells, same
-    # probabilities, same iteration arithmetic.
-    rowsum = (
-        cells.groupBy("prev_type")
-        .agg(F.sum("nt").alias("row_n"))
-        .localCheckpoint(eager=True)
+    scalars = hourly.agg(
+        F.count(F.lit(1)).alias("nh"), F.sum("y").alias("s")
     )
-    P = (
-        cells.join(F.broadcast(rowsum), "prev_type")
+    w = Window.orderBy("h").rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    cum = hourly.select(
+        "h",
+        F.row_number().over(Window.orderBy("h")).alias("t"),
+        F.sum("y").over(w).alias("prefix"),
+    )
+    d = cum.crossJoin(F.broadcast(scalars)).select(
+        "h",
+        "t",
+        (F.col("nh") * F.col("prefix") - F.col("t") * F.col("s")).alias(
+            "dint"
+        ),
+        "nh",
+        "s",
+    )
+    peak = d.orderBy(F.abs(F.col("dint")).desc(), F.asc("h")).limit(1)
+    before = hourly.crossJoin(F.broadcast(peak.select(F.col("h").alias("ph"))))
+    return (
+        before.groupBy()
+        .agg(
+            F.sum(F.when(F.col("h") <= F.col("ph"), F.col("y"))).alias("sb"),
+            F.count(F.when(F.col("h") <= F.col("ph"), 1)).alias("nb"),
+            F.sum(F.when(F.col("h") > F.col("ph"), F.col("y"))).alias("sa"),
+            F.count(F.when(F.col("h") > F.col("ph"), 1)).alias("na"),
+            F.max("ph").alias("changepoint_hour"),
+        )
+        .crossJoin(F.broadcast(peak.select("dint", "nh")))
         .select(
-            "prev_type",
-            "next_type",
-            (F.col("nt") / F.col("row_n")).alias("prob"),
+            F.col("nh").alias("n_hours"),
+            "changepoint_hour",
+            F.round(
+                F.col("dint").cast("double") / F.col("nh"), 6
+            ).alias("cusum_peak"),
+            F.round(F.col("sb") / F.col("nb"), 6).alias("mean_before"),
+            F.round(
+                F.when(F.col("na") > 0, F.col("sa") / F.col("na")), 6
+            ).alias("mean_after"),
         )
+    )
+
+
+SQL_EVENTS_CHANGEPOINT_CUSUM = """
+WITH hourly AS (
+  SELECT date_trunc('hour', ts) AS h, COUNT(*) AS y FROM events GROUP BY 1
+),
+scalars AS (
+  SELECT COUNT(*) AS nh, CAST(SUM(y) AS BIGINT) AS s FROM hourly
+),
+cum AS (
+  SELECT h,
+    ROW_NUMBER() OVER (ORDER BY h) AS t,
+    CAST(SUM(y) OVER (ORDER BY h ROWS UNBOUNDED PRECEDING) AS BIGINT)
+      AS prefix
+  FROM hourly
+),
+d AS (
+  SELECT h, t, nh * prefix - t * s AS dint, nh, s
+  FROM cum CROSS JOIN scalars
+),
+peak AS (SELECT * FROM d ORDER BY abs(dint) DESC, h ASC LIMIT 1)
+SELECT p.nh AS n_hours,
+  p.h AS changepoint_hour,
+  ROUND(CAST(p.dint AS DOUBLE) / p.nh, 6) AS cusum_peak,
+  ROUND(CAST(SUM(CASE WHEN hourly.h <= p.h THEN y END) AS BIGINT) * 1.0
+        / COUNT(CASE WHEN hourly.h <= p.h THEN 1 END), 6) AS mean_before,
+  ROUND(CASE WHEN COUNT(CASE WHEN hourly.h > p.h THEN 1 END) > 0
+    THEN CAST(SUM(CASE WHEN hourly.h > p.h THEN y END) AS BIGINT) * 1.0
+         / COUNT(CASE WHEN hourly.h > p.h THEN 1 END) END, 6) AS mean_after
+FROM hourly CROSS JOIN peak p
+GROUP BY p.nh, p.h, p.dint
+"""
+
+
+EMA_ALPHA = 0.3
+
+
+def q_events_ema_hourly(spark: SparkSession, sf: str) -> DataFrame:
+    """EMA (α={EMA_ALPHA}) of the hourly event-count series, closed
+    form: the recursion EMAₜ = α·yₜ + (1−α)·EMAₜ₋₁ seeded at y₁
+    unrolls to ONE weighted sum — wₜ = α(1−α)^(n−t) for t ≥ 2 and
+    w₁ = (1−α)^(n−1) — so no sequential fold, no recursive CTE, no
+    collect: a single aggregate over the hour-bounded frame.
+
+    One row: hour count, last observed count, EMA, and the EMA's
+    deviation from the plain mean (the trend signal: EMA ≫ mean says
+    traffic is rising into the present). Plan: one events scan to the
+    hourly frame (bounded by time span, localCheckpoint'd), one
+    ROW_NUMBER over it, one aggregate. Weights are pow() doubles of
+    exact integer exponents — identical in both engines; ROUND 6
+    absorbs summation order."""
+    ev = table(spark, sf, "events")
+    hourly = (
+        ev.groupBy(F.date_trunc("hour", "ts").alias("h"))
+        .agg(F.count(F.lit(1)).alias("y"))
         .localCheckpoint(eager=True)
     )
-    states = rowsum.select(F.col("prev_type").alias("state"))
-    ns = states.agg(F.count(F.lit(1)).alias("n"))
-    pi = states.crossJoin(F.broadcast(ns)).select(
-        "state", (F.lit(1.0) / F.col("n")).alias("p")
+    pos = hourly.select(
+        "y", F.row_number().over(Window.orderBy("h")).alias("t")
     )
-    for _ in range(MK_ITERS):
-        flow = (
-            pi.join(F.broadcast(P), pi["state"] == P["prev_type"])
-            .groupBy("next_type")
-            .agg(F.sum(F.col("p") * F.col("prob")).alias("s"))
+    n = pos.agg(
+        F.count(F.lit(1)).alias("n"), F.sum("y").alias("s")
+    )
+    a = F.lit(float(EMA_ALPHA))
+    w = F.when(
+        F.col("t") == 1, F.pow(F.lit(1.0) - a, F.col("n") - 1)
+    ).otherwise(a * F.pow(F.lit(1.0) - a, F.col("n") - F.col("t")))
+    return (
+        pos.crossJoin(F.broadcast(n))
+        .agg(
+            F.max("n").alias("n_hours"),
+            F.max(F.when(F.col("t") == F.col("n"), F.col("y"))).alias(
+                "y_last"
+            ),
+            F.round(F.sum(w * F.col("y")), 6).alias("ema"),
+            F.round(
+                F.sum(w * F.col("y"))
+                - F.max(F.col("s").cast("double") / F.col("n")),
+                6,
+            ).alias("ema_minus_mean"),
         )
-        pi = states.join(
-            F.broadcast(flow), states["state"] == flow["next_type"], "left"
-        ).select("state", F.coalesce(F.col("s"), F.lit(0.0)).alias("p"))
-    return pi.select(
-        F.col("state").alias("event_type"),
-        F.round("p", 9).alias("stationary_prob"),
     )
 
 
-def _markov_stationary_oracle(iters: int = MK_ITERS) -> str:
-    steps = []
-    for k in range(1, iters + 1):
-        steps.append(
-            f"""pi{k} AS (
-  SELECT s.state, COALESCE(t.s, 0.0) AS p
-  FROM states s
-  LEFT JOIN (
-    SELECT tm.next_type AS state, SUM(p.p * tm.prob) AS s
-    FROM pi{k - 1} p JOIN tm ON p.state = tm.prev_type
-    GROUP BY tm.next_type
-  ) t ON s.state = t.state
-)"""
+SQL_EVENTS_EMA_HOURLY = f"""
+WITH hourly AS (
+  SELECT date_trunc('hour', ts) AS h, COUNT(*) AS y FROM events GROUP BY 1
+),
+pos AS (
+  SELECT y, ROW_NUMBER() OVER (ORDER BY h) AS t FROM hourly
+),
+n AS (
+  SELECT COUNT(*) AS n, CAST(SUM(y) AS BIGINT) AS s FROM pos
+)
+SELECT MAX(n) AS n_hours,
+  MAX(CASE WHEN t = n THEN y END) AS y_last,
+  ROUND(SUM((CASE WHEN t = 1 THEN pow(1.0 - {EMA_ALPHA}, n - 1)
+    ELSE {EMA_ALPHA} * pow(1.0 - {EMA_ALPHA}, n - t) END) * y), 6) AS ema,
+  ROUND(SUM((CASE WHEN t = 1 THEN pow(1.0 - {EMA_ALPHA}, n - 1)
+    ELSE {EMA_ALPHA} * pow(1.0 - {EMA_ALPHA}, n - t) END) * y)
+    - MAX(CAST(s AS DOUBLE) / n), 6) AS ema_minus_mean
+FROM pos CROSS JOIN n
+"""
+
+
+def q_events_interarrival(spark: SparkSession, sf: str) -> DataFrame:
+    """Per-user inter-arrival statistics + exponential-MLE fit, one
+    row: gap count, mean gap (s), coefficient of variation, MLE rate
+    (events/s), and the exponential log-likelihood at the MLE
+    (n·ln(n/Σg) − n). CV ≈ 1 ⇒ Poisson arrivals; CV ≫ 1 ⇒ bursty
+    sessions (and the exponential model is wrong — the number that
+    says whether retention/funnel windows can assume memorylessness).
+
+    Determinism: gaps are exact integer seconds (epoch-microsecond
+    difference, integer-divided by 10⁶ — both engines truncate
+    identically); Σg and Σg² are exact BIGINTs at tested SFs (at
+    extreme scale Σg² moves to decimal(38,0), noted); the variance is
+    the identical two-term double expression, clamped at 0 before the
+    sqrt (float cancellation on a constant series must not produce
+    NaN in one engine only). Plan: one events scan, one user-keyed
+    window for lag, one global aggregate."""
+    ev = table(spark, sf, "events")
+    u = F.unix_micros(F.col("ts"))
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    gaps = (
+        ev.select(
+            "user_id",
+            "ts",
+            "event_id",
+            ((u - F.lag(u).over(w)) / F.lit(1000000))
+            .cast("bigint")
+            .alias("g"),
         )
-    chain = ",\n".join(steps)
-    return f"""
-WITH seq AS (
-  SELECT user_id,
-    LAG(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_type,
-    event_type AS next_type
+        .filter(F.col("g").isNotNull())
+        .select("g")
+    )
+    agg = gaps.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum("g").alias("s"),
+        F.sum(F.col("g") * F.col("g")).alias("ss"),
+    )
+    mean = F.col("s").cast("double") / F.col("n")
+    var = F.greatest(
+        F.lit(0.0),
+        F.col("ss").cast("double") / F.col("n") - mean * mean,
+    )
+    return agg.select(
+        F.col("n").alias("n_gaps"),
+        F.round(mean, 6).alias("mean_gap_s"),
+        F.round(
+            F.when(F.col("s") > 0, F.sqrt(var) / mean), 6
+        ).alias("cv"),
+        F.round(
+            F.when(F.col("s") > 0, F.col("n") / F.col("s").cast("double")),
+            9,
+        ).alias("mle_rate"),
+        F.round(
+            F.when(
+                F.col("s") > 0,
+                F.col("n")
+                * F.log(F.col("n") / F.col("s").cast("double"))
+                - F.col("n"),
+            ),
+            6,
+        ).alias("exp_loglik"),
+    )
+
+
+SQL_EVENTS_INTERARRIVAL = """
+WITH gaps AS (
+  SELECT (epoch_us(ts) - lag(epoch_us(ts)) OVER
+    (PARTITION BY user_id ORDER BY ts, event_id)) // 1000000 AS g
   FROM events
 ),
-cells AS (
-  SELECT prev_type, next_type, COUNT(*) AS nt
-  FROM seq WHERE prev_type IS NOT NULL
-  GROUP BY prev_type, next_type
-),
-rowsum AS (
-  SELECT prev_type, CAST(SUM(nt) AS BIGINT) AS row_n FROM cells GROUP BY 1
-),
-tm AS (
-  SELECT cells.prev_type, cells.next_type, nt * 1.0 / row_n AS prob
-  FROM cells JOIN rowsum ON cells.prev_type = rowsum.prev_type
-),
-states AS (SELECT prev_type AS state FROM rowsum),
-ns AS (SELECT COUNT(*) AS n FROM states),
-pi0 AS (SELECT state, 1.0 / ns.n AS p FROM states CROSS JOIN ns),
-{chain}
-SELECT state AS event_type, ROUND(p, 9) AS stationary_prob FROM pi{iters}
+agg AS (
+  SELECT COUNT(*) AS n, CAST(SUM(g) AS BIGINT) AS s,
+    CAST(SUM(g * g) AS BIGINT) AS ss
+  FROM gaps WHERE g IS NOT NULL
+)
+SELECT n AS n_gaps,
+  ROUND(CAST(s AS DOUBLE) / n, 6) AS mean_gap_s,
+  ROUND(CASE WHEN s > 0 THEN
+    sqrt(greatest(0.0, CAST(ss AS DOUBLE) / n
+      - (CAST(s AS DOUBLE) / n) * (CAST(s AS DOUBLE) / n)))
+    / (CAST(s AS DOUBLE) / n) END, 6) AS cv,
+  ROUND(CASE WHEN s > 0 THEN n / CAST(s AS DOUBLE) END, 9) AS mle_rate,
+  ROUND(CASE WHEN s > 0 THEN
+    n * ln(n / CAST(s AS DOUBLE)) - n END, 6) AS exp_loglik
+FROM agg
 """
 
 
 QUERIES: dict[str, Query] = {
-    "events_markov_stationary": Query(
-        q_markov_stationary, _markov_stationary_oracle()
-    ),
+    "events_churn_hazard": Query(q_events_churn_hazard, _hazard_oracle()),
     "events_funnel": Query(q_funnel, SQL_FUNNEL),
     "events_conversion_lag": Query(q_conversion_lag, SQL_CONVERSION_LAG),
     "events_scd2_intervals": Query(q_scd2_intervals, SQL_SCD2_INTERVALS),
-    "equi_depth_histogram": Query(q_equi_depth_histogram, SQL_EQUI_DEPTH_HISTOGRAM),
     "rate_limit_per_key": Query(q_rate_limit_per_key, SQL_RATE_LIMIT_PER_KEY),
     "merge_upsert": Query(q_merge_upsert, SQL_MERGE_UPSERT),
-    "events_transition_matrix": Query(q_transition_matrix, SQL_TRANSITION_MATRIX),
     "events_retention": Query(q_retention, SQL_RETENTION),
     "events_cohort_ltv": Query(q_cohort_ltv, SQL_COHORT_LTV),
     "events_tumbling_window": Query(q_tumbling_window, SQL_TUMBLING_WINDOW),
     "events_gap_fill": Query(q_gap_fill, SQL_GAP_FILL),
     "events_click_attribution": Query(q_click_attribution, SQL_CLICK_ATTRIBUTION),
-    "events_recursive_chains": Query(q_recursive_chains, SQL_RECURSIVE_CHAINS),
     "events_hypertable_rollup": Query(q_hypertable_rollup, SQL_HYPERTABLE_ROLLUP),
     "events_sliding_window": Query(q_sliding_window, SQL_SLIDING_WINDOW),
     "events_session_window": Query(q_session_window, SQL_SESSION_WINDOW),
@@ -1139,4 +1405,15 @@ QUERIES: dict[str, Query] = {
     "events_path_topk": Query(q_path_topk, SQL_PATH_TOPK),
     "events_watermark_audit": Query(q_watermark_audit, SQL_WATERMARK_AUDIT),
     "events_active_users": Query(q_active_users, SQL_ACTIVE_USERS),
+    "events_burst_zscore": Query(q_events_burst_zscore, SQL_EVENTS_BURST_ZSCORE),
+    "events_autocorrelation": Query(
+        q_events_autocorrelation, _acf_oracle()
+    ),
+    "events_changepoint_cusum": Query(
+        q_events_changepoint_cusum, SQL_EVENTS_CHANGEPOINT_CUSUM
+    ),
+    "events_ema_hourly": Query(q_events_ema_hourly, SQL_EVENTS_EMA_HOURLY),
+    "events_interarrival": Query(
+        q_events_interarrival, SQL_EVENTS_INTERARRIVAL
+    ),
 }

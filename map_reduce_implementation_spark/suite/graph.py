@@ -1,30 +1,176 @@
-"""Graph suite — PageRank over the supplier↔customer trade graph.
+"""Graph and iterative-propagation queries: PageRank, triangles,
+shortest paths, degree census and assortativity over the
+supplier-customer trade graph, TextRank keywords, Markov transition
+matrices and stationary distributions, and recursive event chains.
 
-The graph: one undirected edge per distinct (supplier, customer) pair
-that traded (lineitem ⋈ orders), emitted in both directions so every
-node has out-degree ≥ 1 (no dangling-mass correction needed). Customer
-nodes map to the NEGATIVE range as node = -(custkey + 1): the synthetic
-keys start at 0, so plain negation would merge supplier 0 with
-customer 0 at node 0 (caught round 5 when a 10× scale corpus returned
-159,989 nodes instead of 10×15,998); the +1 keeps the two id spaces
-disjoint for ALL keys ≥ 0 and at ANY scale factor — unlike a fixed
-additive offset, which collides once supplier count outgrows it.
-
-The oracle is the SAME fixed-point iteration unrolled into one CTE per
-step (standard SQL cannot aggregate inside a recursive CTE, so the
-driver-side loop Spark runs is expressed as generated CTE chain here —
-both engines execute the identical arithmetic, only double-summation
-order differs, absorbed by ROUND 9).
+The trade graph has one undirected edge per (supplier, customer) pair
+that traded, emitted in both directions so every node has out-degree
+≥ 1. Customer nodes map to ``-(custkey + 1)``: the synthetic keys start
+at 0, so plain negation would merge supplier 0 with customer 0, and a
+fixed offset collides once the supplier count outgrows it. Oracles
+unroll the same fixed-point iteration into one CTE per step (SQL cannot
+aggregate inside a recursive CTE); only summation order differs, and
+ROUND 9 absorbs it.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions import tokens as _tokens
 from ..operators.graph import pagerank
 from ..sources import table
-from .base import Query
+from .base import SQL_TOKENS, Query
+
+TR_ITERS = 3  # TextRank power iterations (the pagerank default)
+TR_DAMPING = 0.85
+TR_TOP_K = 20  # keywords reported
+
+
+def _word_pairs(spark: SparkSession, sf: str) -> DataFrame:
+    """DataFrame[prev, cur] — adjacent-token pairs per document (the
+    zip_with idiom shared with ``text.q_bigram_logprob``)."""
+    d = table(spark, sf, "documents")
+    ts = _tokens(F.col("text"))
+    n = F.size(ts)
+    pair_structs = F.zip_with(
+        F.slice(ts, 1, F.greatest(n - 1, F.lit(0))),
+        F.slice(ts, 2, F.greatest(n - 1, F.lit(0))),
+        lambda a, b: F.struct(a.alias("prev"), b.alias("cur")),
+    )
+    return d.select(F.explode(pair_structs).alias("b")).select(
+        "b.prev", "b.cur"
+    )
+
+
+def q_textrank_keywords(spark: SparkSession, sf: str) -> DataFrame:
+    """TextRank keywords: PageRank (d={TR_DAMPING}, {TR_ITERS}
+    iterations) on the undirected word co-occurrence graph (an edge
+    per distinct adjacent token pair, both directions, self-loops
+    dropped), top-{TR_TOP_K} words by rank.
+
+    Plan: edge building is one corpus pass ending in a
+    vocabulary²-bounded distinct; the iteration machinery is
+    ``operators/graph.py::pagerank`` unchanged (one edge-keyed shuffle
+    + one node-keyed agg per round, rank vector never on the driver),
+    so TextRank inherits its celebrity-node and checkpoint-cadence
+    story. The top-k is a TakeOrderedAndProject on (rounded score,
+    term) and the rank window runs on {TR_TOP_K} rows."""
+    und = (
+        _word_pairs(spark, sf)
+        .filter(F.col("prev") != F.col("cur"))
+        .select(F.col("prev").alias("src"), F.col("cur").alias("dst"))
+    )
+    edges = und.unionAll(
+        und.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    ).distinct()
+    pr = pagerank(edges, iterations=TR_ITERS, damping=TR_DAMPING)
+    top = (
+        pr.select(
+            F.col("node").alias("term"), F.round("pr", 9).alias("score")
+        )
+        .orderBy(F.desc("score"), F.asc("term"))
+        .limit(TR_TOP_K)
+    )
+    w = Window.orderBy(F.desc("score"), F.asc("term"))
+    return top.select(
+        F.row_number().over(w).alias("keyword_rank"), "term", "score"
+    )
+
+
+def _textrank_oracle(iters: int = TR_ITERS) -> str:
+    steps = []
+    for k in range(1, iters + 1):
+        steps.append(
+            f"""pr{k} AS (
+  SELECT d0.src AS node,
+    (1.0 - {TR_DAMPING}) / n.n_nodes + {TR_DAMPING} * COALESCE(t.s, 0.0) AS pr
+  FROM deg d0
+  LEFT JOIN (
+    SELECT e.dst AS node, SUM(p.pr / d.outdeg) AS s
+    FROM edges e
+    JOIN pr{k - 1} p ON e.src = p.node
+    JOIN deg d ON e.src = d.src
+    GROUP BY e.dst
+  ) t ON d0.src = t.node
+  CROSS JOIN n
+)"""
+        )
+    chain = ",\n".join(steps)
+    return f"""
+WITH t AS (
+  SELECT {SQL_TOKENS} AS toks
+  FROM documents
+), bg AS (
+  SELECT unnest(list_zip(toks[1:len(toks)-1], toks[2:len(toks)])) AS b
+  FROM t WHERE len(toks) >= 2
+), und AS (
+  SELECT DISTINCT b[1] AS src, b[2] AS dst FROM bg WHERE b[1] <> b[2]
+),
+edges AS (
+  SELECT DISTINCT src, dst FROM (
+    SELECT src, dst FROM und UNION ALL SELECT dst AS src, src AS dst FROM und
+  )
+),
+deg AS (SELECT src, COUNT(*) AS outdeg FROM edges GROUP BY src),
+n AS (SELECT COUNT(*) AS n_nodes FROM deg),
+pr0 AS (SELECT src AS node, 1.0 / n.n_nodes AS pr FROM deg CROSS JOIN n),
+{chain}
+SELECT CAST(ROW_NUMBER() OVER (ORDER BY ROUND(pr, 9) DESC, node ASC)
+    AS INTEGER) AS keyword_rank,
+  node AS term, ROUND(pr, 9) AS score
+FROM pr{iters}
+ORDER BY score DESC, term ASC LIMIT {TR_TOP_K}
+"""
+
+
+def q_graph_degree_stats(spark: SparkSession, sf: str) -> DataFrame:
+    """Trade-graph degree census bucketed by the degree's decimal
+    digit count (an exact integer bucket — no float log at bucket
+    boundaries): nodes, degree range, and edge mass per bucket. The
+    skew report that decides whether the edge-keyed joins
+    (pagerank/BFS/triangles) need a celebrity-node salt: a fat top
+    bucket holding most of the edge mass says yes.
+
+    Plan: one degree aggregate over the edge list, then a
+    |buckets|-cell rollup — entirely integer."""
+    deg = (
+        _trade_edges(spark, sf)
+        .groupBy("src")
+        .agg(F.count(F.lit(1)).alias("deg"))
+    )
+    return (
+        deg.groupBy(
+            F.length(F.col("deg").cast("string")).alias("digits")
+        )
+        .agg(
+            F.count(F.lit(1)).alias("n_nodes"),
+            F.min("deg").alias("min_deg"),
+            F.max("deg").alias("max_deg"),
+            F.sum("deg").alias("sum_deg"),
+        )
+        .orderBy("digits")
+    )
+
+
+SQL_GRAPH_DEGREE_STATS = """
+WITH pairs AS (
+  SELECT DISTINCT l.l_suppkey AS s, -(o.o_custkey + 1) AS c
+  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
+),
+edges AS (
+  SELECT s AS src, c AS dst FROM pairs
+  UNION ALL
+  SELECT c AS src, s AS dst FROM pairs
+),
+deg AS (SELECT src, COUNT(*) AS deg FROM edges GROUP BY 1)
+SELECT length(CAST(deg AS VARCHAR)) AS digits,
+  COUNT(*) AS n_nodes, MIN(deg) AS min_deg, MAX(deg) AS max_deg,
+  CAST(SUM(deg) AS BIGINT) AS sum_deg
+FROM deg GROUP BY 1 ORDER BY 1
+"""
+
 
 _ITERS = 3
 
@@ -43,15 +189,13 @@ def _trade_edges(
         .distinct()
     )
     if materialize:
-        # Round-12 optimization (guide §2.4): the join+distinct feeds
-        # BOTH union branches — lazily every consumer ran the fact join
-        # twice (graph_degree_stats: 8 parquet scans for one census).
-        # ``materialize=False`` keeps the fully lazy plan for
-        # operators/graph.py::pagerank, whose loop-invariant edge memo
-        # is keyed on plan identity (a fresh checkpoint RDD per build
-        # would defeat it), and for callers that checkpoint the whole
-        # edge list themselves (q_graph_shortest_paths,
-        # stats4.q_graph_assortativity).
+        # the join+distinct feeds BOTH union branches — lazily every
+        # consumer ran the fact join twice (graph_degree_stats: 8 parquet
+        # scans for one census). ``materialize=False`` keeps the fully lazy
+        # plan for operators/graph.py::pagerank, whose loop-invariant edge
+        # memo is keyed on plan identity (a fresh checkpoint RDD per build
+        # would defeat it), and for callers that checkpoint the whole edge
+        # list themselves (q_graph_shortest_paths, q_graph_assortativity).
         pairs = pairs.localCheckpoint(eager=True)
     fwd = pairs.select(F.col("s").alias("src"), F.col("c").alias("dst"))
     rev = pairs.select(F.col("c").alias("src"), F.col("s").alias("dst"))
@@ -274,7 +418,7 @@ def q_graph_shortest_paths(spark: SparkSession, sf: str) -> DataFrame:
         # consumed exactly once by the closing aggregate) but a quiet
         # A/B measured the no-checkpoint variant SLOWER (3.0 vs 2.7 s
         # best-of-3 at sf0.1: the bigger AQE plan costs more than the
-        # extra job saves) — kept after round-12 adjudication
+        # extra job saves), so the checkpoint stays
         dist = (
             dist.unionAll(expanded)
             .groupBy("node")
@@ -320,10 +464,323 @@ FROM d{hops} GROUP BY hops
 """
 
 
+_RECURSIVE_CHAINS = """
+WITH RECURSIVE nxt AS (
+  SELECT user_id, event_id, ts,
+    LEAD(event_id) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS next_id,
+    LEAD(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS next_ts
+  FROM {src}
+),
+edges AS (
+  SELECT event_id, next_id FROM nxt
+  WHERE next_id IS NOT NULL AND next_ts <= ts + INTERVAL 10 MINUTE
+),
+starts AS (
+  SELECT event_id FROM nxt n
+  WHERE NOT EXISTS (SELECT 1 FROM edges e WHERE e.next_id = n.event_id)
+),
+walk AS (
+  SELECT event_id AS start_id, event_id AS cur, 1 AS len FROM starts
+  UNION ALL
+  SELECT w.start_id, e.next_id, w.len + 1
+  FROM walk w JOIN edges e ON e.event_id = w.cur
+)
+SELECT start_id, CAST(MAX(len) AS INTEGER) AS chain_len FROM walk GROUP BY start_id
+"""
+
+
+def q_recursive_chains(spark: SparkSession, sf: str) -> DataFrame:
+    """Recursive CTE (WITH RECURSIVE, Spark 4.1): sessionization as an
+    explicit chain walk — each event's single LEAD successor within 10
+    minutes forms a linear chain; the recursion walks chains from their
+    starts and reports lengths. Termination is structural (each event
+    has ≤1 successor and time strictly increases — a DAG). Each
+    iteration is one join stage; depth = longest chain, so state is
+    bounded by the data, not the recursion. Complements session_window
+    (declarative) and the iterative connected-components dedup
+    (driver-loop) as the third stateful-traversal idiom."""
+    table(spark, sf, "events").createOrReplaceTempView("events_rc")
+    return spark.sql(_RECURSIVE_CHAINS.format(src="events_rc"))
+
+
+SQL_RECURSIVE_CHAINS = _RECURSIVE_CHAINS.format(src="events")
+
+
+def q_transition_matrix(spark: SparkSession, sf: str) -> DataFrame:
+    """First-order Markov transition matrix over per-user event
+    sequences: P(next_type | prev_type). One user-keyed window (lag)
+    over the stream, then the count/probability aggregation runs on the
+    TYPE-PAIR key space — 25 cells regardless of data size, so the
+    second shuffle and the probability window are O(|types|²), free at
+    any scale. Deterministic sequence order: (ts, event_id) tie-break."""
+    from pyspark.sql import Window
+
+    ev = table(spark, sf, "events")
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    seq = ev.select(
+        "user_id",
+        F.lag("event_type").over(w).alias("prev_type"),
+        F.col("event_type").alias("next_type"),
+    ).filter(F.col("prev_type").isNotNull())
+    cells = seq.groupBy("prev_type", "next_type").agg(
+        F.count("*").alias("n_transitions")
+    )
+    w_prev = Window.partitionBy("prev_type")
+    return cells.select(
+        "prev_type",
+        "next_type",
+        "n_transitions",
+        F.round(
+            F.col("n_transitions") / F.sum("n_transitions").over(w_prev), 6
+        ).alias("prob"),
+    )
+
+
+SQL_TRANSITION_MATRIX = """
+WITH seq AS (
+  SELECT user_id,
+    LAG(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_type,
+    event_type AS next_type
+  FROM events
+),
+cells AS (
+  SELECT prev_type, next_type, COUNT(*) AS n_transitions
+  FROM seq WHERE prev_type IS NOT NULL
+  GROUP BY prev_type, next_type
+)
+SELECT prev_type, next_type, n_transitions,
+  ROUND(n_transitions * 1.0 / SUM(n_transitions) OVER (PARTITION BY prev_type), 6) AS prob
+FROM cells
+"""
+
+
+MK_ITERS = 5  # stationary-distribution power iterations
+
+
+def q_markov_stationary(spark: SparkSession, sf: str) -> DataFrame:
+    """Stationary distribution of the event-type Markov chain:
+    {MK_ITERS} power iterations π_{{k+1}} = π_k·P from the uniform
+    start, over the same row-stochastic transition matrix
+    ``events_transition_matrix`` reports — the long-run share of time
+    the event stream spends in each state (the "where does the funnel
+    settle" number next to the matrix's one-step view).
+
+    Plan: ONE events scan builds the type-pair cell counts
+    (localCheckpoint'd — matrix, state spine, and every iteration
+    derive from the materialized |types|² cells, never re-running the
+    user-keyed lag window); each iteration is one |types|²-cell join
+    + |types|-key aggregate — free at any scale. The LEFT join back
+    to the state spine keeps sink-only states at mass 0 instead of
+    silently dropping them. Summation-order ulps (~1e-16/iteration)
+    are absorbed by the final ROUND 9 — the pagerank convention; the
+    oracle unrolls the identical iterations as a CTE chain."""
+    from pyspark.sql import Window
+
+    ev = table(spark, sf, "events")
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    seq = ev.select(
+        "user_id",
+        F.lag("event_type").over(w).alias("prev_type"),
+        F.col("event_type").alias("next_type"),
+    ).filter(F.col("prev_type").isNotNull())
+    cells = (
+        seq.groupBy("prev_type", "next_type")
+        .agg(F.count(F.lit(1)).alias("nt"))
+        .localCheckpoint(eager=True)
+    )
+    # rowsum and P are |types|- and |types|²-row frames referenced by EVERY
+    # unrolled iteration — lazily the rowsum aggregate replayed 6× and the P
+    # join 5× (58 Exchanges in the captured before-plan), and each tiny
+    # iteration join ran as a shuffle pair that AQE had to re-plan at
+    # runtime. Materializing both once and broadcast- hinting the
+    # per-iteration joins statically leaves one exchange per iteration (the
+    # |types|-key flow aggregate). Same cells, same probabilities, same
+    # iteration arithmetic.
+    rowsum = (
+        cells.groupBy("prev_type")
+        .agg(F.sum("nt").alias("row_n"))
+        .localCheckpoint(eager=True)
+    )
+    P = (
+        cells.join(F.broadcast(rowsum), "prev_type")
+        .select(
+            "prev_type",
+            "next_type",
+            (F.col("nt") / F.col("row_n")).alias("prob"),
+        )
+        .localCheckpoint(eager=True)
+    )
+    states = rowsum.select(F.col("prev_type").alias("state"))
+    ns = states.agg(F.count(F.lit(1)).alias("n"))
+    pi = states.crossJoin(F.broadcast(ns)).select(
+        "state", (F.lit(1.0) / F.col("n")).alias("p")
+    )
+    for _ in range(MK_ITERS):
+        flow = (
+            pi.join(F.broadcast(P), pi["state"] == P["prev_type"])
+            .groupBy("next_type")
+            .agg(F.sum(F.col("p") * F.col("prob")).alias("s"))
+        )
+        pi = states.join(
+            F.broadcast(flow), states["state"] == flow["next_type"], "left"
+        ).select("state", F.coalesce(F.col("s"), F.lit(0.0)).alias("p"))
+    return pi.select(
+        F.col("state").alias("event_type"),
+        F.round("p", 9).alias("stationary_prob"),
+    )
+
+
+def _markov_stationary_oracle(iters: int = MK_ITERS) -> str:
+    steps = []
+    for k in range(1, iters + 1):
+        steps.append(
+            f"""pi{k} AS (
+  SELECT s.state, COALESCE(t.s, 0.0) AS p
+  FROM states s
+  LEFT JOIN (
+    SELECT tm.next_type AS state, SUM(p.p * tm.prob) AS s
+    FROM pi{k - 1} p JOIN tm ON p.state = tm.prev_type
+    GROUP BY tm.next_type
+  ) t ON s.state = t.state
+)"""
+        )
+    chain = ",\n".join(steps)
+    return f"""
+WITH seq AS (
+  SELECT user_id,
+    LAG(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_type,
+    event_type AS next_type
+  FROM events
+),
+cells AS (
+  SELECT prev_type, next_type, COUNT(*) AS nt
+  FROM seq WHERE prev_type IS NOT NULL
+  GROUP BY prev_type, next_type
+),
+rowsum AS (
+  SELECT prev_type, CAST(SUM(nt) AS BIGINT) AS row_n FROM cells GROUP BY 1
+),
+tm AS (
+  SELECT cells.prev_type, cells.next_type, nt * 1.0 / row_n AS prob
+  FROM cells JOIN rowsum ON cells.prev_type = rowsum.prev_type
+),
+states AS (SELECT prev_type AS state FROM rowsum),
+ns AS (SELECT COUNT(*) AS n FROM states),
+pi0 AS (SELECT state, 1.0 / ns.n AS p FROM states CROSS JOIN ns),
+{chain}
+SELECT state AS event_type, ROUND(p, 9) AS stationary_prob FROM pi{iters}
+"""
+
+
+def q_graph_assortativity(spark: SparkSession, sf: str) -> DataFrame:
+    """Degree assortativity r (Newman 2002, eq. 4) of the trade graph
+    over the symmetric directed edge list: Pearson correlation of the
+    degrees at the two ends of each edge. One row: directed edge
+    count, node count, r. Bipartite customer↔supplier graphs come out
+    disassortative (r < 0): high-degree suppliers connect to a spread
+    of mostly low-degree customers.
+
+    Determinism: Σjk, Σ(j+k), Σ(j²+k²) are exact integer sums (at
+    extreme scale they move to decimal(38,0), noted); r is one
+    closed-form double with a zero-variance CASE guard. Plan: degree
+    aggregate, two degree joins back onto the edge list (node-keyed
+    shuffles — the deg frame is node-sized, never collected), one
+    global aggregate.
+
+    the edge list is materialized
+    ONCE (localCheckpoint) and so is the degree frame. Lazily, the
+    lineitem⋈orders+distinct edge build was replayed for every one of
+    its four plan references (edge list + three deg uses: 32 parquet
+    scans / 48 exchanges at sf0.01) — at 100 TB that is eight fact
+    scans for one statistic. Materialized: 2 scans, and the degree
+    joins run against a node-sized frame (the BFS/CC precedent)."""
+    edges = _trade_edges(spark, sf, materialize=False).localCheckpoint(eager=True)
+    deg = (
+        edges.groupBy("src")
+        .agg(F.count(F.lit(1)).alias("deg"))
+        .localCheckpoint(eager=True)
+    )
+    dj = (
+        edges.join(deg.withColumnRenamed("src", "s_"), F.col("src") == F.col("s_"))
+        .select("src", "dst", F.col("deg").alias("j"))
+        .join(
+            deg.select(
+                F.col("src").alias("d_"), F.col("deg").alias("k")
+            ),
+            F.col("dst") == F.col("d_"),
+        )
+        .select("j", "k")
+    )
+    agg = dj.agg(
+        F.count(F.lit(1)).alias("m"),
+        F.sum(F.col("j") * F.col("k")).alias("sjk"),
+        F.sum(F.col("j") + F.col("k")).alias("sjpk"),
+        F.sum(
+            F.col("j") * F.col("j") + F.col("k") * F.col("k")
+        ).alias("sj2k2"),
+    )
+    m = F.col("m").cast("double")
+    mean_half = F.col("sjpk") / (2 * m)
+    num = F.col("sjk") / m - mean_half * mean_half
+    den = F.col("sj2k2") / (2 * m) - mean_half * mean_half
+    nodes = deg.agg(F.count(F.lit(1)).alias("n_nodes"))
+    return agg.crossJoin(F.broadcast(nodes)).select(
+        F.col("m").alias("n_directed_edges"),
+        "n_nodes",
+        F.round(F.when(den > 0, num / den), 6).alias("assortativity"),
+    )
+
+
+SQL_GRAPH_ASSORTATIVITY = """
+WITH pairs AS (
+  SELECT DISTINCT l.l_suppkey AS s, -(o.o_custkey + 1) AS c
+  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
+),
+edges AS (
+  SELECT s AS src, c AS dst FROM pairs
+  UNION ALL
+  SELECT c AS src, s AS dst FROM pairs
+),
+deg AS (SELECT src, COUNT(*) AS deg FROM edges GROUP BY 1),
+dj AS (
+  SELECT dj_.deg AS j, dk.deg AS k
+  FROM edges e
+  JOIN deg dj_ ON e.src = dj_.src
+  JOIN deg dk ON e.dst = dk.src
+),
+agg AS (
+  SELECT COUNT(*) AS m, CAST(SUM(j * k) AS BIGINT) AS sjk,
+    CAST(SUM(j + k) AS BIGINT) AS sjpk,
+    CAST(SUM(j * j + k * k) AS BIGINT) AS sj2k2
+  FROM dj
+),
+n AS (SELECT COUNT(*) AS n_nodes FROM deg)
+SELECT m AS n_directed_edges, n_nodes,
+  ROUND(CASE WHEN sj2k2 / (2 * CAST(m AS DOUBLE))
+      - (sjpk / (2 * CAST(m AS DOUBLE))) * (sjpk / (2 * CAST(m AS DOUBLE))) > 0
+    THEN (sjk / CAST(m AS DOUBLE)
+      - (sjpk / (2 * CAST(m AS DOUBLE))) * (sjpk / (2 * CAST(m AS DOUBLE))))
+      / (sj2k2 / (2 * CAST(m AS DOUBLE))
+      - (sjpk / (2 * CAST(m AS DOUBLE))) * (sjpk / (2 * CAST(m AS DOUBLE))))
+    END, 6) AS assortativity
+FROM agg CROSS JOIN n
+"""
+
+
 QUERIES: dict[str, Query] = {
+    "text_textrank_keywords": Query(q_textrank_keywords, _textrank_oracle()),
+    "graph_degree_stats": Query(q_graph_degree_stats, SQL_GRAPH_DEGREE_STATS),
     "graph_pagerank": Query(q_graph_pagerank, _pagerank_oracle()),
     "graph_triangle_count": Query(q_graph_triangle_count, SQL_GRAPH_TRIANGLE_COUNT),
     "graph_shortest_paths": Query(
         q_graph_shortest_paths, _shortest_paths_oracle()
+    ),
+    "events_markov_stationary": Query(
+        q_markov_stationary, _markov_stationary_oracle()
+    ),
+    "events_transition_matrix": Query(q_transition_matrix, SQL_TRANSITION_MATRIX),
+    "events_recursive_chains": Query(q_recursive_chains, SQL_RECURSIVE_CHAINS),
+    "graph_assortativity": Query(
+        q_graph_assortativity, SQL_GRAPH_ASSORTATIVITY
     ),
 }

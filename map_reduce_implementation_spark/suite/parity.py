@@ -1,6 +1,7 @@
-"""Reference-parity operators bound to the testdata `documents` table —
-the two jobs the reference actually ships (SURVEY.md §2), driver-checked
-against SQL oracles, plus the generic-MapReduce re-expression (U1/U2).
+"""Reference parity: the two jobs the reference ships (letter counter,
+word finder), bound to the ``documents`` table and checked against SQL
+oracles, plus the same counter re-expressed through the generic
+MapReduce core (``core.run_mapreduce``).
 """
 
 from __future__ import annotations

@@ -4,24 +4,23 @@ vs brute force, multimodal decode plumbing."""
 
 from __future__ import annotations
 
+import math
+import re
+
+import duckdb
+import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from map_reduce_implementation_spark.operators.dedup import simhash, simhash_near_pairs
-from map_reduce_implementation_spark.operators.similarity import (
-    ann_lsh_topk,
-    cosine_topk,
-)
+from map_reduce_implementation_spark.operators.similarity import ann_lsh_topk, cosine_topk
 from map_reduce_implementation_spark.sources import table
-from map_reduce_implementation_spark.suite.dedup import (
-    q_dedup_minhash_lsh,
-    q_dedup_ngram_jaccard,
-)
-from map_reduce_implementation_spark.suite.multimodal import (
-    q_multimodal_decode_dispatch,
-)
+from map_reduce_implementation_spark.suite import all_queries
+from map_reduce_implementation_spark.suite.dedup import q_dedup_minhash_lsh, q_dedup_ngram_jaccard
+from map_reduce_implementation_spark.suite.multimodal import q_multimodal_decode_dispatch
 
-from .conftest import SF001
+from .conftest import SF0001, SF001
 
 
 def test_minhash_lsh_finds_high_jaccard_pairs(spark):
@@ -102,9 +101,7 @@ def test_multimodal_decode_dispatch(spark):
 
 
 def test_multimodal_audio_decode_deterministic(spark):
-    from map_reduce_implementation_spark.suite.multimodal import (
-        q_multimodal_audio_decode,
-    )
+    from map_reduce_implementation_spark.suite.multimodal import q_multimodal_audio_decode
 
     out = q_multimodal_audio_decode(spark, SF001)
     rows = {r.doc_id: r for r in out.collect()}
@@ -163,7 +160,7 @@ def test_jaccard_max_df_cap_is_contained(spark):
     uncapped pairs with never-higher jaccard (intersection only loses
     ubiquitous shingles; denominators stay uncapped)."""
     from map_reduce_implementation_spark.operators.dedup import jaccard_pairs
-    from map_reduce_implementation_spark.suite.dedup import _shingles
+    from map_reduce_implementation_spark.suite.base import shingles as _shingles
 
     sh = _shingles(spark, SF001, 5)
     full = {(r.d1, r.d2): r.jaccard for r in jaccard_pairs(sh, 0.5).collect()}
@@ -214,11 +211,9 @@ def test_short_docs_yield_zero_shingles_not_errors(spark, tmp_path):
     and threw INVALID_PARAMETER_VALUE.START on any short doc."""
     import pandas as pd
 
-    from map_reduce_implementation_spark.suite.curation2 import (
-        q_dedup_repeated_substrings,
-        q_text_novelty_score,
-    )
-    from map_reduce_implementation_spark.suite.dedup import _shingles
+    from map_reduce_implementation_spark.suite.dedup import q_dedup_repeated_substrings
+    from map_reduce_implementation_spark.suite.text import q_text_novelty_score
+    from map_reduce_implementation_spark.suite.base import shingles as _shingles
 
     sf = str(tmp_path)
     pd.DataFrame(
@@ -492,7 +487,7 @@ def test_minhash_arrow_bands_match_jvm_hash(spark):
         minhash_signatures,
         minhash_signatures_arrow,
     )
-    from map_reduce_implementation_spark.suite.dedup import _shingles
+    from map_reduce_implementation_spark.suite.base import shingles as _shingles
 
     sh = _shingles(spark, SF001, 5)
     arrow = {
@@ -757,3 +752,316 @@ def test_score_pass_keeps_a_corpus_above_the_size_bound(spark, tmp_path):
         assert _shuffles(scores())["shuffles"] == 1
     finally:
         spark.conf.set(key, before)
+
+
+QS = all_queries()
+
+
+def test_pq_recall_bounds_and_exactness_of_exact_arm(spark):
+    """Recall@k is hits/k with 0 <= hits <= k, and a PQ built from the
+    data itself must do far better than chance (> 0.2 on 500 vectors)."""
+    r = QS["similarity_ann_pq_recall"].build(spark, SF0001).collect()
+    assert len(r) == 1
+    row = r[0]
+    assert row["k"] == 10
+    assert 0 <= row["hits"] <= row["k"]
+    assert abs(row["recall_at_k"] - row["hits"] / row["k"]) < 1e-12
+    assert row["recall_at_k"] > 0.2, "PQ no better than chance"
+
+
+def test_hard_negatives_numpy_replay(spark):
+    """Brute-force numpy cosine + label filter reproduces every mined
+    hard negative (ids, ranks, 9-dp sims), every negative's label
+    differs from its anchor's, and each anchor's negatives beat every
+    unmined different-label candidate."""
+    from map_reduce_implementation_spark.sources import table
+    from map_reduce_implementation_spark.suite.similarity import HN_K, HN_SAMPLE_MOD
+
+    rows = sorted(
+        table(spark, SF0001, "embeddings").collect(),
+        key=lambda r: r["vec_id"],
+    )
+    ids = np.asarray([r["vec_id"] for r in rows])
+    labels = np.asarray([r["label"] for r in rows])
+    X = np.asarray([r["embedding"] for r in rows], dtype=np.float64)
+    Xn = X / np.linalg.norm(X, axis=1, keepdims=True)
+
+    anchors = ids % HN_SAMPLE_MOD == 0
+    got = QS["similarity_hard_negatives"].build(spark, SF0001).collect()
+    by_anchor: dict[int, list] = {}
+    for r in got:
+        by_anchor.setdefault(r["query_id"], []).append(r)
+
+    assert set(by_anchor) <= set(ids[anchors].tolist())
+    for qi in np.flatnonzero(anchors):
+        qid, qlab = int(ids[qi]), int(labels[qi])
+        cand = np.flatnonzero((~anchors) & (labels != qlab))
+        if cand.size == 0:
+            assert qid not in by_anchor
+            continue
+        sims = np.round(Xn[cand] @ Xn[qi], 9)
+        order = sorted(
+            zip(sims.tolist(), ids[cand].tolist()),
+            key=lambda t: (-t[0], t[1]),
+        )[:HN_K]
+        rs = sorted(by_anchor[qid], key=lambda r: r["neg_rank"])
+        assert len(rs) == len(order)
+        for r, (sim, nid) in zip(rs, order):
+            assert r["neighbor_id"] == nid
+            assert abs(r["sim"] - sim) < 2e-9
+            assert r["neighbor_label"] != r["anchor_label"] == qlab
+
+
+def test_coreset_numpy_replay(spark):
+    """A numpy greedy k-center replay (same first pick, same argmax
+    tie-breaks) reproduces the selection order and 9-dp radii, and
+    the radius column is non-increasing (the cover shrinks)."""
+    from map_reduce_implementation_spark.sources import table
+    from map_reduce_implementation_spark.suite.similarity import CORESET_K
+
+    rows = sorted(
+        table(spark, SF0001, "embeddings").collect(),
+        key=lambda r: r["vec_id"],
+    )
+    ids = np.asarray([r["vec_id"] for r in rows])
+    X = np.asarray([r["embedding"] for r in rows], dtype=np.float64)
+
+    sel = [0]  # lowest vec_id is first (rows sorted by vec_id)
+    d = ((X - X[0]) ** 2).sum(axis=1)
+    expect = [(1, int(ids[0]), None)]
+    for rank in range(2, CORESET_K + 1):
+        # argmax with vec_id tie-break
+        best = max(range(len(ids)), key=lambda j: (d[j], -ids[j]))
+        expect.append((rank, int(ids[best]), round(float(d[best]), 9)))
+        sel.append(best)
+        d = np.minimum(d, ((X - X[best]) ** 2).sum(axis=1))
+
+    got = sorted(
+        QS["coreset_kcenter"].build(spark, SF0001).collect(),
+        key=lambda r: r["sel_rank"],
+    )
+    assert len(got) == CORESET_K
+    prev_rad = float("inf")
+    for r, (rank, vid, rad) in zip(got, expect):
+        assert r["sel_rank"] == rank and r["vec_id"] == vid
+        if rad is None:
+            assert r["radius"] is None
+        else:
+            assert abs(r["radius"] - rad) < 2e-9
+            assert r["radius"] <= prev_rad + 1e-12
+            prev_rad = r["radius"]
+
+
+def test_maxsim_rank_and_bound_invariants(spark):
+    """MaxSim is a sum of 4 per-token max-cosines: every score lies in
+    [-4, 4], each query doc gets exactly 5 candidates ranked 1..5 with
+    non-increasing scores, and candidates come only from the corpus
+    side of the split (mdoc >= 3 — queries are mdocs 0-2, so a
+    candidate below 3 would mean the query/corpus split leaked)."""
+    rows = QS["similarity_maxsim_topk"].build(spark, SF0001).collect()
+    by_q = {}
+    for r in rows:
+        by_q.setdefault(r["q_mdoc"], []).append(r)
+        assert -4.0 <= r["maxsim_score"] <= 4.0, r
+        assert r["c_mdoc"] >= 3 > r["q_mdoc"], r
+    assert len(by_q) == 3
+    for q, rs in by_q.items():
+        rs.sort(key=lambda r: r["rank"])
+        assert [r["rank"] for r in rs] == [1, 2, 3, 4, 5]
+        scores = [r["maxsim_score"] for r in rs]
+        assert scores == sorted(scores, reverse=True), (q, scores)
+
+
+def test_two_stage_ranks_and_candidate_containment(spark):
+    """Per query: ranks are exactly 1..k (or fewer iff candidates run
+    out), sims non-increasing, every hit lies in one of the query's
+    probe cells, and stage-2 can never beat brute force (top-1 sim <=
+    exact top-1 sim over the whole corpus)."""
+    from map_reduce_implementation_spark.sources import table
+    from map_reduce_implementation_spark.suite.similarity import (
+        TS_CELLS,
+        TS_K,
+        TS_PROBE,
+        TS_QMOD,
+        TS_QREM,
+    )
+
+    rows = QS["similarity_two_stage_retrieval"].build(spark, SF0001).collect()
+    assert rows
+    emb = {
+        r["vec_id"]: np.asarray([float(x) for x in r["embedding"]])
+        for r in table(spark, SF0001, "embeddings").collect()
+    }
+    cents = [emb[i] for i in range(TS_CELLS)]
+
+    def cell_of(v):
+        d = [float(((v - c) ** 2).sum()) for c in cents]
+        return d.index(min(d))
+
+    by_q: dict[int, list] = {}
+    for r in rows:
+        by_q.setdefault(r["query_id"], []).append(r)
+    for qid, rs in by_q.items():
+        assert qid % TS_QMOD == TS_QREM
+        rs.sort(key=lambda r: r["rank"])
+        assert [r["rank"] for r in rs] == list(range(1, len(rs) + 1))
+        assert len(rs) <= TS_K
+        sims = [r["sim"] for r in rs]
+        assert sims == sorted(sims, reverse=True)
+        qv = emb[qid]
+        d = [float(((qv - c) ** 2).sum()) for c in cents]
+        probe = set(sorted(range(TS_CELLS), key=lambda i: (d[i], i))[:TS_PROBE])
+        exact_best = max(
+            float(qv @ v / (np.linalg.norm(qv) * np.linalg.norm(v)))
+            for i, v in emb.items()
+            if i != qid
+        )
+        for r in rs:
+            assert cell_of(emb[r["vec_id"]]) in probe, (qid, r["vec_id"])
+        assert sims[0] <= round(exact_best, 9) + 1e-9
+
+
+def test_threshold_sweep_monotone_and_matches_dedup(spark):
+    """Pair/doc counts are monotone non-increasing in the threshold,
+    and the 35% row prices EXACTLY what dedup_embedding_cosine commits
+    (same blocked pairs, same keep rule)."""
+    rows = sorted(
+        QS["similarity_threshold_sweep"].build(spark, SF0001).collect(),
+        key=lambda r: r["threshold_pct"],
+    )
+    assert [r["threshold_pct"] for r in rows] == [25, 30, 35, 40]
+    for a, b in zip(rows, rows[1:]):
+        assert a["n_pairs"] >= b["n_pairs"]
+        assert a["n_dup_docs"] >= b["n_dup_docs"]
+    assert rows[0]["n_pairs"] > 0  # loosest threshold sees candidates
+    dedup = QS["dedup_embedding_cosine"].build(spark, SF0001).collect()
+    at35 = next(r for r in rows if r["threshold_pct"] == 35)
+    assert at35["n_dup_docs"] == len({r["dup_vec_id"] for r in dedup})
+
+
+def test_index_delta_python_replay(spark):
+    """A numpy replay of the first-k quantizer and both assignments
+    reproduces every cell's occupancy; the delta batch never moves a
+    standing vector, totals tie out, and the split flag is the exact
+    integer rule."""
+    import numpy as np
+
+    from map_reduce_implementation_spark.sources import table
+    from map_reduce_implementation_spark.suite.similarity import DELTA_CELLS, DELTA_MOD
+
+    emb = sorted(
+        table(spark, SF0001, "embeddings").collect(), key=lambda r: r["vec_id"]
+    )
+    standing = [r for r in emb if r["vec_id"] % DELTA_MOD != 0]
+    delta = [r for r in emb if r["vec_id"] % DELTA_MOD == 0]
+    cents = np.array(
+        [[float(x) for x in r["embedding"]] for r in standing[:DELTA_CELLS]]
+    )
+
+    def assign(rows):
+        counts = [0] * DELTA_CELLS
+        for r in rows:
+            v = np.array([float(x) for x in r["embedding"]])
+            d2 = ((cents - v) ** 2).sum(axis=1)
+            counts[int(np.argmin(d2))] += 1  # ties: lowest index (argmin)
+        return counts
+
+    n_old, n_new = assign(standing), assign(delta)
+    rows = {r["cell"]: r for r in
+            QS["similarity_index_delta"].build(spark, SF0001).collect()}
+    total = sum(n_old) + sum(n_new)
+    for c in range(DELTA_CELLS):
+        if n_old[c] == 0 and n_new[c] == 0:
+            assert c not in rows  # a cell nothing was ever assigned to
+            continue
+        r = rows[c]
+        assert (r["n_old"], r["n_new"]) == (n_old[c], n_new[c])
+        assert r["n_total"] == n_old[c] + n_new[c]
+        if n_old[c] == 0:
+            assert r["growth"] is None  # standing-empty cell: no ratio
+        assert r["split_candidate"] == (
+            (n_old[c] + n_new[c]) * DELTA_CELLS > 2 * total
+        )
+    # the full-outer report loses NO arrivals and NO standing members
+    assert sum(r["n_old"] for r in rows.values()) == len(standing)
+    assert sum(r["n_new"] for r in rows.values()) == len(delta)
+
+
+def test_matryoshka_recall_numpy_replay(spark):
+    """A numpy replay of the per-prefix truncated-cosine rankings
+    reproduces every recall, and the full-dim row is exactly 1.0.
+    (Recall is NOT monotone in prefix length on this random fixture —
+    sf0.001 reads 0.2/0.1/0.0/1.0 — because untrained embeddings have
+    no MRL structure; only the exact per-dim hit counts are asserted.)"""
+    import numpy as np
+
+    from map_reduce_implementation_spark.sources import table
+    from map_reduce_implementation_spark.suite.base import QUERY_VEC_ID
+    from map_reduce_implementation_spark.suite.similarity import TOP_K
+    from map_reduce_implementation_spark.suite.similarity import MRL_DIMS
+
+    emb = sorted(
+        table(spark, SF0001, "embeddings").collect(), key=lambda r: r["vec_id"]
+    )
+    vecs = {r["vec_id"]: np.array([float(x) for x in r["embedding"]])
+            for r in emb}
+    qv = vecs[QUERY_VEC_ID]
+
+    def topk(d):
+        sims = []
+        for vid, v in vecs.items():
+            if vid == QUERY_VEC_ID:
+                continue
+            a, b = v[:d], qv[:d]
+            s = round(float(a @ b / (np.linalg.norm(a) * np.linalg.norm(b))), 9)
+            sims.append((-s, vid))
+        return {vid for _, vid in sorted(sims)[:TOP_K]}
+
+    full = topk(max(MRL_DIMS))
+    rows = {r["dim"]: r for r in
+            QS["similarity_matryoshka_recall"].build(spark, SF0001).collect()}
+    assert set(rows) == set(MRL_DIMS)
+    for d in MRL_DIMS:
+        expect = len(topk(d) & full)
+        assert rows[d]["hits"] == expect
+        assert abs(rows[d]["recall_at_k"] - expect / TOP_K) < 1e-9
+    assert rows[max(MRL_DIMS)]["recall_at_k"] == 1.0
+
+
+def _write(tmp_path, name, pdf):
+    path = str(tmp_path / f"{name}.parquet")
+    pdf.to_parquet(path)
+    return path
+
+
+def _docs(tmp_path, rows):
+    return _write(
+        tmp_path,
+        "documents",
+        pd.DataFrame(rows, columns=["doc_id", "text", "lang", "source", "n_chars"]),
+    )
+
+
+def test_cluster_representatives_keep_best(spark, tmp_path):
+    """Two near-dup docs of different lengths: the representative is
+    the LONGER one (not the min id), singletons don't appear, and the
+    Spark iterative CC matches the recursive-CTE oracle."""
+    from map_reduce_implementation_spark.suite.dedup import SQL_DEDUP_CLUSTER_REPRESENTATIVES
+
+    a = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    b = a + " lambda"  # same 5-shingle prefix set, J >= 0.5, longer
+    p = _docs(
+        tmp_path,
+        [(1, a, "en", "s0", len(a)), (2, b, "en", "s0", len(b)),
+         (3, "totally unrelated content words here", "en", "s0", 36)],
+    )
+    rows = QS["dedup_cluster_representatives"].build(spark, str(tmp_path)).collect()
+    assert len(rows) == 1
+    r = rows[0]
+    assert r["cluster_id"] == 1 and r["rep_doc_id"] == 2
+    assert r["cluster_size"] == 2
+    assert (r["min_n_chars"], r["max_n_chars"]) == (len(a), len(b))
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{p}'")
+    o = con.execute(SQL_DEDUP_CLUSTER_REPRESENTATIVES).df().iloc[0]
+    assert int(o["rep_doc_id"]) == 2 and int(o["cluster_size"]) == 2

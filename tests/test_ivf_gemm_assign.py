@@ -126,7 +126,7 @@ def test_two_stage_retrieval_gemm_identical(spark):
     scaling arm's configuration) returns the same (query, rank, id,
     sim) rows as the hash-graded literal-path default."""
     from map_reduce_implementation_spark.operators.similarity import _as_double
-    from map_reduce_implementation_spark.suite.pipeline3 import (
+    from map_reduce_implementation_spark.suite.similarity import (
         TS_CELLS,
         TS_QMOD,
         TS_QREM,

@@ -7,8 +7,8 @@ from __future__ import annotations
 from map_reduce_implementation_spark.plans import audit_plan, formatted_plan
 from map_reduce_implementation_spark.sources import table
 from map_reduce_implementation_spark.suite.parity import q_letter_counter
-from map_reduce_implementation_spark.suite.relational import (
-    q_broadcast_join,
+from map_reduce_implementation_spark.suite.sql import q_broadcast_join
+from map_reduce_implementation_spark.suite.tpch import (
     q_filter_project,
     q_join_region_revenue,
     q_pricing_summary,

@@ -1,6 +1,6 @@
 """Pinned-output evidence for the one rows-only entry with no graded twin.
 
-``sample_rng`` (suite/scalars2.py::q_sample_rng) is a seeded Bernoulli
+``sample_rng`` (suite/stats.py::q_sample_rng) is a seeded Bernoulli
 ``df.sample`` — Spark draws one XORShift stream per partition seeded with
 ``seed + partitionIndex``, so membership is exactly reproducible under a
 FIXED seed and partitioning but changes when the scan is split

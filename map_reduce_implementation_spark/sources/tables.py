@@ -31,9 +31,8 @@ TABLES = [
 ]
 
 
-# Analyzed-plan memo, scoped per live SparkSession (weak key: a stopped
-# session's entries are collectable). ``spark.read.parquet`` re-lists the
-# directory and re-reads footers for schema inference on EVERY call —
+# Analyzed-plan memo, scoped per SparkSession. ``spark.read.parquet``
+# re-lists the directory and re-reads footers for schema inference on EVERY call —
 # ~120 ms of pure driver time per table reference, which dominated the
 # suite's small-scan queries (word_finder spent more time inferring the
 # schema than running the job). A DataFrame is an immutable lazy plan, so
@@ -48,11 +47,11 @@ TABLES = [
 # Callers that regenerate data mid-session must call
 # ``invalidate(spark, sf_dir)`` (or invalidate(spark) for everything)
 # to force a re-list on next use.
-import weakref
-
-_TABLE_MEMO: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
-)
+#
+# The memoized frames hold their session, so a weak key would never be
+# collected; a stopped session's entry is dropped instead when a new
+# session first calls table(). The memo-hit path stays free of JVM calls.
+_TABLE_MEMO: dict[SparkSession, dict] = {}
 
 
 def invalidate(spark: SparkSession, sf_dir: str | None = None) -> None:
@@ -73,7 +72,12 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one star-schema table (parquet, columnar, splittable)."""
     if name not in TABLES:
         raise ValueError(f"unknown table {name!r}; expected one of {TABLES}")
-    memo = _TABLE_MEMO.setdefault(spark, {})
+    memo = _TABLE_MEMO.get(spark)
+    if memo is None:
+        # SparkContext.stop() clears _jsc; reading it makes no JVM call
+        for stopped in [s for s in _TABLE_MEMO if s.sparkContext._jsc is None]:
+            del _TABLE_MEMO[stopped]
+        memo = _TABLE_MEMO[spark] = {}
     key = (sf_dir, name)
     if key not in memo:
         if name == "events":

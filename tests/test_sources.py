@@ -3,6 +3,11 @@ writes with partition pruning, single-file text sink parity."""
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+import textwrap
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -17,6 +22,9 @@ from map_reduce_implementation_spark.sources.tables import (
 )
 
 from .conftest import REF_CORPUS_DIR, SF0001, requires_ref_corpus
+
+
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _nation(spark):
@@ -330,3 +338,38 @@ def test_table_memo_invalidate(spark, tmp_path):
     assert table(spark, sf, "documents").count() == 1
     invalidate(spark, sf)
     assert table(spark, sf, "documents").count() == 2
+
+
+def test_table_memo_drops_stopped_sessions(tmp_path):
+    """A process that restarts sessions keeps only the live session's
+    memo: the frames hold their session, so without pruning every
+    stopped session (and its JVM-side state) stayed reachable."""
+    script = textwrap.dedent(
+        f"""
+        from map_reduce_implementation_spark.session import get_spark
+        from map_reduce_implementation_spark.sources import tables
+
+        for i in range(3):
+            spark = get_spark(app_name=f"memo{{i}}", master="local[1]",
+                              shuffle_partitions=1)
+            tables.table(spark, {SF0001!r}, "region")
+            if i < 2:
+                spark.stop()
+        print("MEMO", len(tables._TABLE_MEMO), spark in tables._TABLE_MEMO)
+        spark.stop()
+        """
+    )
+    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g")
+    env["PYTHONPATH"] = os.pathsep.join(
+        p for p in (REPO_ROOT, env.get("PYTHONPATH")) if p
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert proc.returncode == 0, (proc.stdout + proc.stderr)[-4000:]
+    assert "MEMO 1 True" in proc.stdout, proc.stdout[-2000:]

@@ -32,7 +32,7 @@ import time
 from collections.abc import Callable, Iterable, Iterator
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 MapFunc = Callable[[Iterator[str], object], Iterable[str]]
 ReduceFunc = Callable[[Iterator[str], object], Iterable[str]]
@@ -184,8 +184,3 @@ def word_finder_map(lines: Iterator[str], usr_data: object) -> Iterator[str]:
 def identity_reduce(lines: Iterator[str], usr_data: object) -> Iterator[str]:
     """Concatenating reduce (usr_functions.c:205-238)."""
     yield from lines
-
-
-def to_dataframe(spark: SparkSession, result: MapReduceResult) -> DataFrame:
-    """Lift a collected result into a DataFrame[value: string]."""
-    return spark.createDataFrame([(ln,) for ln in result.lines], "value: string")

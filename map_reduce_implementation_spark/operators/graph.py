@@ -40,7 +40,6 @@ over declarative join+agg steps, NOT a driver-side loop over rows.
 from __future__ import annotations
 
 import math
-import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -70,6 +69,16 @@ from pyspark.sql import functions as F
 _PR_STATE: dict = {}
 _PR_MEMO_CAP = 4
 
+# The loop's partition count is derived from the measured edge count
+# (~PR_EDGES_PER_PART edge rows ≈ a few MB per task) instead of pinning
+# the session's static shuffle.partitions. On the suite's sf0.1 trade
+# graph that collapses 32 near-empty tasks per iteration stage to a
+# handful; at cluster scale the edge count saturates the cap and the
+# behavior is exactly the old one (the cap IS
+# spark.sql.shuffle.partitions — production raises that conf, not this
+# constant).
+PR_EDGES_PER_PART = 262144
+
 
 def pagerank_release(spark) -> None:
     """Unpersist all memoized PageRank edge state for this session."""
@@ -98,18 +107,6 @@ def pagerank(
     """
     spark = edges.sparkSession
     max_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    # Round-12 (guide §2.3 "make partitioning scale-adaptive"): the
-    # loop's partition count is derived from the measured edge count
-    # (~PR_EDGES_PER_PART edge rows ≈ a few MB per task) instead of
-    # pinning the session's static shuffle.partitions. On the suite's
-    # sf0.1 trade graph that collapses 32 near-empty tasks per
-    # iteration stage to a handful; at cluster scale the edge count
-    # saturates the cap and the behavior is exactly the old one (the
-    # cap IS spark.sql.shuffle.partitions — production raises that
-    # conf, not this constant).
-    edges_per_part = int(
-        os.environ.get("SPARK_GRAFT_PR_EDGES_PER_PART", "262144")
-    )
     # Loop-invariant state from the session memo (see _PR_STATE above).
     # deg is node-sized (one row per vertex) — cached so n_nodes and the
     # rank init read materialized rows instead of re-running the edge
@@ -133,7 +130,7 @@ def pagerank(
             return edges.select(
                 F.col("src").alias("node"), F.lit(0.0).alias("pr")
             ).limit(0)
-        nparts = max(1, min(max_parts, math.ceil(sizes["ne"] / edges_per_part)))
+        nparts = max(1, min(max_parts, math.ceil(sizes["ne"] / PR_EDGES_PER_PART)))
         wedges = (
             edges.join(deg, "src")
             .select("src", "dst", "outdeg")

@@ -318,47 +318,6 @@ def decode_stub(df_with_payload: DataFrame) -> DataFrame:
     return df_with_payload.mapInPandas(decode_batches, DECODED_SCHEMA)
 
 
-RESIZED_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("resized", T.BinaryType()),
-    ]
-)
-
-
-def resize_stub(
-    df_decoded_payload: DataFrame, target_w: int = 32, target_h: int = 32
-) -> DataFrame:
-    """Image-resize stand-in over mapInPandas: emits a deterministic
-    ``target_w*target_h``-byte payload derived by strided byte sampling.
-    A real implementation calls PIL ``Image.resize`` per batch; the
-    schema, batching and binary-out plumbing are identical."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        size = target_w * target_h
-        for pdf in it:
-            out = []
-            for p in pdf["payload"]:
-                if len(p) == 0:
-                    out.append(b"\x00" * size)
-                    continue
-                step = max(1, len(p) // size)
-                sampled = (p[::step] * ((size // max(1, len(p[::step]))) + 1))[:size]
-                out.append(bytes(sampled))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "width": target_w,
-                    "height": target_h,
-                    "resized": out,
-                }
-            )
-
-    return df_decoded_payload.mapInPandas(batches, RESIZED_SCHEMA)
-
-
 RESIZE_PNG_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),

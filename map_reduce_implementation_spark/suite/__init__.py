@@ -33,7 +33,8 @@ from . import (
 # check FAILED first (a fix must be re-graded), never-checked entries
 # next, then RE_GRADE_HEAD, then the remaining greens oldest-checked-
 # first, so each round's window covers new ground and every old verdict
-# stays fresh. Ties keep module merge order.
+# stays fresh. Within a tier, ties are ordered by query name, so the
+# grading window does not depend on which module holds a query.
 #
 # RE_GRADE_HEAD: green entries whose plan or semantics changed after their
 # last external check. Remove a name once a later round re-grades it.
@@ -56,7 +57,7 @@ def _driver_history() -> tuple[set[str], set[str], dict[str, int]]:
 
     Green = a value-hash match, or a rows-only pass for oracle-less
     entries. With no readable correctness files every entry is
-    unchecked and all_queries() keeps module merge order.
+    unchecked and all_queries() returns the registry in name order.
 
     Historical names that were since renamed out of the registry can
     linger in these sets (one exists: ``multimodal_decode``, the pre-r05
@@ -132,13 +133,14 @@ def all_queries() -> dict[str, Query]:
         raise ValueError(f"RE_GRADE_HEAD names not in registry: {missing}")
     green, red, last = _driver_history()
     heads = [n for n in RE_GRADE_HEAD if n in green]
+    names = sorted(merged)
     rotated = (
-        [n for n in merged if n in red]
-        + [n for n in merged if n not in red and n not in green]
+        [n for n in names if n in red]
+        + [n for n in names if n not in red and n not in green]
         + heads
-        # sorted() is stable: equal rounds keep merge order
+        # sorted() is stable: equal rounds keep name order
         + sorted(
-            (n for n in merged if n in green and n not in heads),
+            (n for n in names if n in green and n not in heads),
             key=lambda n: last.get(n, 0),
         )
     )

@@ -1,6 +1,6 @@
 """Registry rotation: red → unchecked → RE_GRADE_HEAD → green
-oldest-checked-first, with ties kept in module merge order. No Spark
-session needed — ``_driver_history`` is monkeypatched."""
+oldest-checked-first, with ties ordered by query name. No Spark session
+needed — ``_driver_history`` is monkeypatched."""
 
 from __future__ import annotations
 
@@ -9,7 +9,8 @@ import map_reduce_implementation_spark.suite as suite
 
 def test_rotation_tiers_and_tie_break(monkeypatch):
     monkeypatch.setattr(suite, "_driver_history", lambda: (set(), set(), {}))
-    merge = list(suite.all_queries())  # every entry unchecked: merge order
+    merge = list(suite.all_queries())  # every entry unchecked: name order
+    assert merge == sorted(merge)
     plain = [n for n in merge if n not in suite.RE_GRADE_HEAD]
     # a re-grade head whose last check failed stays in the red tier
     red_head = suite.RE_GRADE_HEAD[-1]
@@ -17,7 +18,7 @@ def test_rotation_tiers_and_tie_break(monkeypatch):
     unchecked = {plain[5], plain[0]}
     green = set(merge) - red - unchecked
     last = {n: 9 for n in green}
-    # two old greens late in merge order, plus one between them in round
+    # two old greens late in name order, plus one between them in round
     oldest, old_a, old_b = plain[-1], plain[-3], plain[-2]
     last.update({oldest: 2, old_a: 4, old_b: 4})
     monkeypatch.setattr(suite, "_driver_history", lambda: (green, red, last))

@@ -4,7 +4,7 @@ can't see these; at 100 TB they ARE the difference."""
 
 from __future__ import annotations
 
-from map_reduce_implementation_spark.plans import audit_plan, formatted_plan
+from map_reduce_implementation_spark.plans import audit_plan, fingerprint, formatted_plan
 from map_reduce_implementation_spark.sources import table
 from map_reduce_implementation_spark.suite.parity import q_letter_counter
 from map_reduce_implementation_spark.suite.sql import q_broadcast_join
@@ -123,3 +123,13 @@ def test_table_scans_count_a_self_join_twice(spark):
     a = audit_plan(pairs)
     assert a.table_scans == {"lineitem": 2}
     assert a.redundant_scans == 1
+
+
+def test_fingerprint_counts_scans_per_table(spark):
+    """The snapshot fingerprint carries per-table scan counts, so a query
+    that gains a scan of one table drifts from PLAN_SNAPSHOT.json."""
+    li = table(spark, SF001, "lineitem")
+    one = li.select("l_orderkey", "l_partkey")
+    two = one.join(li.select("l_orderkey", "l_suppkey"), "l_orderkey")
+    assert fingerprint(formatted_plan(one))["table_scans"] == {"lineitem": 1}
+    assert fingerprint(formatted_plan(two))["table_scans"] == {"lineitem": 2}

@@ -90,7 +90,7 @@ def audit(args: list[str]) -> int:
         row: dict = {"query": name}
         if err is None:
             a = PlanAudit(text)
-            row.update(a.operators, table_scans=a.table_scans, redundant_scans=a.redundant_scans)
+            row.update(a.operators, redundant_scans=a.redundant_scans)
         else:
             row["error"] = err[:200]
         print(json.dumps(row), flush=True)

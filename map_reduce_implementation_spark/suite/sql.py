@@ -301,7 +301,6 @@ GROUP BY n_nationkey, n_name
 """
 
 
-# --- windows -----------------------------------------------------------------
 def q_window_topk_per_group(spark: SparkSession, sf: str) -> DataFrame:
     """Top-3 customers per market segment by balance. ROW_NUMBER with a
     unique tie-break (c_custkey) so the result is deterministic. At scale
@@ -512,7 +511,6 @@ def q_distinct(spark: SparkSession, sf: str) -> DataFrame:
 SQL_DISTINCT = "SELECT DISTINCT o_orderstatus, o_orderpriority FROM orders"
 
 
-# --- scalar functions --------------------------------------------------------
 def q_scalar_functions(spark: SparkSession, sf: str) -> DataFrame:
     """Scalar surface (SURVEY §2.8): string/math built-ins, all JVM-side
     codegen — the engine-native generalization of the reference's
@@ -1236,6 +1234,14 @@ atexit.register(_cleanup_scratch)
 
 
 def q_sink_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
+    """Route the correctness gate through a sink: write a projection of
+    ``documents`` with the reference's single-file property
+    (``coalesce(1)``; the reference writes exactly one ``mr.rst``), read
+    it back, and return the rows with the written file count. The oracle
+    computes the same rows from the source with ``1 AS n_files``, so the
+    value hash checks both the round trip and the one-file property.
+    ``coalesce(1)`` suits small results only; the large-scale sinks in
+    ``sources/tables.py`` stay many-file."""
     # a FRESH directory per build: a fixed path keyed by sf basename
     # would race under concurrent builds (bench + tests, or two data
     # roots sharing a basename) — overwrite deletes the part file a

@@ -527,7 +527,6 @@ GROUP BY l.l_linestatus
 """
 
 
-# --- scans / filter / project ------------------------------------------------
 def q_filter_project(spark: SparkSession, sf: str) -> DataFrame:
     """Predicate + projection pushed down to the parquet scan (verified in
     plans/audit.py: PushedFilters + 3-column ReadSchema). At 100 TB this
@@ -548,7 +547,6 @@ WHERE l_shipdate >= TIMESTAMP '1997-01-01' AND l_shipdate < TIMESTAMP '1998-01-0
 """
 
 
-# --- aggregations ------------------------------------------------------------
 def q_pricing_summary(spark: SparkSession, sf: str) -> DataFrame:
     """TPC-H Q1 shape: the canonical partial+final two-phase aggregation —
     the Spark-native form of the reference's combiner pipeline
@@ -577,7 +575,6 @@ GROUP BY l_returnflag, l_linestatus
 """
 
 
-# --- joins -------------------------------------------------------------------
 def q_join_shipping_priority(spark: SparkSession, sf: str) -> DataFrame:
     """TPC-H Q3 shape: 3-way join + agg + top-k. customer is small → we
     broadcast it; orders⋈lineitem is a shuffle hash/sort-merge join on
@@ -922,7 +919,6 @@ GROUP BY c_count
 """
 
 
-# --- sorts / limits / set ops / distinct ------------------------------------
 def q_topk_orders(spark: SparkSession, sf: str) -> DataFrame:
     """Global top-10 — Spark plans TakeOrderedAndProject: each partition
     keeps its local top-10, driver merges. O(n) not O(n log n); never a

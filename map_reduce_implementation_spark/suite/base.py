@@ -32,7 +32,7 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions import tokens as _tokens
+from ..functions import tokens
 from ..sources import table
 
 
@@ -90,7 +90,7 @@ def unigram_avg_nll(spark: SparkSession, sf: str) -> DataFrame:
     ``curation.q_perplexity_bucket_sample``, so the model, tokenizer
     and determinism path cannot drift between the two arms."""
     d = table(spark, sf, "documents")
-    tok = d.select("doc_id", F.explode(_tokens(F.col("text"))).alias("term"))
+    tok = d.select("doc_id", F.explode(tokens(F.col("text"))).alias("term"))
     ctf = tok.groupBy("term").agg(F.count("*").alias("ctf"))
     total = ctf.agg(F.sum("ctf")).collect()[0][0]  # one scalar (corpus size)
     return (
@@ -140,8 +140,6 @@ def shingles_of(d: DataFrame, n: int = 3) -> DataFrame:
     split() expression inside the gram lambda would inline (and
     re-evaluate) the tokenizer once per array element — measured 20×
     slower at sf0.1."""
-    from ..functions import tokens
-
     tokd = d.select("doc_id", tokens("text").alias("ts"))
     bound = tokd.select(
         "doc_id", F.transform(F.col("ts"), lambda tkn: F.xxhash64(tkn)).alias("hts")

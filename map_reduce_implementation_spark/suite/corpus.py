@@ -19,7 +19,6 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import tokens
-from ..functions import tokens as _tokens
 from ..sources import table
 from .base import SQL_TOKENS, SQL_UNIGRAM_NLL_CTE, Query, md5_bucket, unigram_avg_nll
 
@@ -192,7 +191,7 @@ def q_kneser_ney_logprob(spark: SparkSession, sf: str) -> DataFrame:
     stream (corpus pass two) and ends in one doc-keyed agg. The type
     total rides a 1-row broadcast frame; nothing collects."""
     d = table(spark, sf, "documents")
-    ts = _tokens(F.col("text"))
+    ts = tokens(F.col("text"))
     n = F.size(ts)
     pair_structs = F.zip_with(
         F.slice(ts, 1, F.greatest(n - 1, F.lit(0))),
@@ -289,7 +288,7 @@ def q_zipf_fit(spark: SparkSession, sf: str) -> DataFrame:
     order-independent; the closed-form slope/intercept/R² are then
     single identical double expressions in both engines."""
     d = table(spark, sf, "documents")
-    tok = d.select(F.explode(_tokens(F.col("text"))).alias("term"))
+    tok = d.select(F.explode(tokens(F.col("text"))).alias("term"))
     ctf = tok.groupBy("term").agg(F.count(F.lit(1)).alias("ctf"))
     top = ctf.orderBy(F.desc("ctf"), F.asc("term")).limit(ZIPF_TOP)
     w = Window.orderBy(F.desc("ctf"), F.asc("term"))
@@ -396,7 +395,7 @@ def q_ngram_saturation(spark: SparkSession, sf: str) -> DataFrame:
     cumulative window — nothing after the first aggregate scales with
     the corpus."""
     d = table(spark, sf, "documents")
-    ts = _tokens(F.col("text"))
+    ts = tokens(F.col("text"))
     n = F.size(ts)
     pair_structs = F.zip_with(
         F.slice(ts, 1, F.greatest(n - 1, F.lit(0))),
@@ -512,7 +511,7 @@ def q_corpus_jsd_sources(spark: SparkSession, sf: str) -> DataFrame:
     p>0 identically in both engines."""
     d = table(spark, sf, "documents")
     st = (
-        d.select("source", F.explode(_tokens(F.col("text"))).alias("term"))
+        d.select("source", F.explode(tokens(F.col("text"))).alias("term"))
         .groupBy("source", "term")
         .agg(F.count(F.lit(1)).alias("n_st"))
         .localCheckpoint(eager=True)
@@ -647,7 +646,7 @@ def q_corpus_good_turing(spark: SparkSession, sf: str) -> DataFrame:
     via the same CASE in both engines."""
     d = table(spark, sf, "documents")
     tc = (
-        d.select("lang", F.explode(_tokens(F.col("text"))).alias("term"))
+        d.select("lang", F.explode(tokens(F.col("text"))).alias("term"))
         .groupBy("lang", "term")
         .agg(F.count(F.lit(1)).alias("c"))
     )
@@ -721,7 +720,7 @@ def q_text_readability(spark: SparkSession, sf: str) -> DataFrame:
     d = table(spark, sf, "documents")
     per_doc = d.select(
         "lang",
-        F.size(_tokens(F.col("text"))).alias("w"),
+        F.size(tokens(F.col("text"))).alias("w"),
         F.greatest(
             F.lit(1), F.regexp_count(F.col("text"), F.lit(r"[.!?]+"))
         ).alias("s"),
@@ -870,7 +869,7 @@ def q_term_burstiness(spark: SparkSession, sf: str) -> DataFrame:
     after the first aggregate is vocabulary-sized."""
     d = table(spark, sf, "documents")
     dt = (
-        d.select("doc_id", F.explode(_tokens(F.col("text"))).alias("term"))
+        d.select("doc_id", F.explode(tokens(F.col("text"))).alias("term"))
         .groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).alias("c"))
     )
@@ -915,8 +914,6 @@ def q_top_bigrams(spark: SparkSession, sf: str) -> DataFrame:
     the aggregate combines map-side, and the final top-k is
     TakeOrderedAndProject — shuffle carries (bigram, partial count)
     pairs only, never raw text."""
-    from ..functions import tokens
-
     d = table(spark, sf, "documents")
     ts = tokens("text")
     n = F.size(ts)
@@ -991,7 +988,7 @@ def q_bigram_logprob(spark: SparkSession, sf: str) -> DataFrame:
     the plan shape.
     """
     d = table(spark, sf, "documents")
-    ts = _tokens(F.col("text"))
+    ts = tokens(F.col("text"))
     n = F.size(ts)
     pair_structs = F.zip_with(
         F.slice(ts, 1, F.greatest(n - 1, F.lit(0))),
@@ -1055,7 +1052,7 @@ def q_hapax_ratio(spark: SparkSession, sf: str) -> DataFrame:
     aggregates map-side combinable, output = |sources| rows."""
     d = table(spark, sf, "documents")
     tok = d.select(
-        "source", F.explode(_tokens(F.col("text"))).alias("term")
+        "source", F.explode(tokens(F.col("text"))).alias("term")
     )
     ctf = tok.groupBy("source", "term").agg(F.count(F.lit(1)).alias("ctf"))
     return ctf.groupBy("source").agg(
@@ -1199,7 +1196,7 @@ def q_collocations_pmi(spark: SparkSession, sf: str) -> DataFrame:
     the cut is a TakeOrderedAndProject on (rounded PMI, pair). All
     inputs to the single ln are exact integers."""
     d = table(spark, sf, "documents")
-    ts = _tokens(F.col("text"))
+    ts = tokens(F.col("text"))
     n = F.size(ts)
     pair_structs = F.zip_with(
         F.slice(ts, 1, F.greatest(n - 1, F.lit(0))),
@@ -1305,7 +1302,7 @@ def q_text_conditional_entropy(spark: SparkSession, sf: str) -> DataFrame:
     — p = 1 terms vanish); languages with no bigrams drop from the
     output in both engines."""
     d = table(spark, sf, "documents")
-    ts = _tokens(F.col("text"))
+    ts = tokens(F.col("text"))
     n = F.size(ts)
     pair_structs = F.zip_with(
         F.slice(ts, 1, F.greatest(n - 1, F.lit(0))),

@@ -19,7 +19,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import tokens
-from ..functions import tokens as _tokens
 from ..operators.similarity import _as_double
 from ..sources import table
 from .base import (
@@ -44,7 +43,6 @@ def q_decontaminate(spark: SparkSession, sf: str) -> DataFrame:
     shuffles; the plan is scan → hash-join(broadcast) → partial agg.
     Shingles are xxhash64-hashed 8-byte keys (same all-numeric trick as
     the dedup suite — no n-gram strings cross the exchange)."""
-
     # the hashed shingle stream feeds three consumers (eval set, per-doc
     # sizes, hit counts) — each lazy reference replayed the corpus
     # tokenize+shingle pass (3 documents scans → 1); the materialized rows
@@ -400,7 +398,6 @@ def q_perplexity_bucket_sample(spark: SparkSession, sf: str) -> DataFrame:
     stratum is represented in the sample. The per-bucket rank is a
     4-partition window whose exchange is capped by WindowGroupLimit
     (rank ≤ k prunes map-side before the shuffle)."""
-
     # the per-doc NLL frame feeds the cut-point aggregate AND the bucketing
     # pass — materialize once instead of replaying the unigram-LM scoring
     # pipeline per consumer (8 parquet scans → 0 rescans)
@@ -457,7 +454,6 @@ def q_dataset_split(spark: SparkSession, sf: str) -> DataFrame:
     table. The assignment is a zero-shuffle map; the audit is one
     (split, lang)-keyed aggregate over ~|splits|·|langs| cells, and the
     share-of-split window runs over those aggregated cells only."""
-
     d = table(spark, sf, "documents")
     b = md5_bucket("split|", F.col("doc_id").cast("string"), 100)
     split = (
@@ -539,7 +535,6 @@ def q_decontaminate_ngram_overlap(spark: SparkSession, sf: str) -> DataFrame:
     two map-side-combined groupBys; train docs with no shingles
     (< {OVERLAP_NGRAM} tokens) surface with frac 0.0 via the left
     joins — every training doc gets a verdict."""
-
     d = table(spark, sf, "documents")
     ev = (
         shingles_of(d.filter(F.col("doc_id") % EVAL_MOD == 0), OVERLAP_NGRAM)
@@ -713,8 +708,6 @@ SEG_TOKENS = 16  # same segmentation unit as dedup_line_level (suite.dedup)
 
 def _doc_metrics(spark: SparkSession, sf: str) -> DataFrame:
     """One scan of documents → the per-doc scalars the cascade gates on."""
-    from ..functions import tokens
-
     d = table(spark, sf, "documents")
     return d.select(
         "doc_id",
@@ -856,8 +849,6 @@ def q_token_budget_mix(spark: SparkSession, sf: str) -> DataFrame:
     map-side-combined groupBy); everything downstream is
     cell-count-sized (tiny). The two denominator folds and the final
     join never touch the raw corpus again."""
-    from ..functions import tokens
-
     d = table(spark, sf, "documents")
     cells = (
         d.select("lang", "source", F.size(tokens("text")).alias("nt"))
@@ -954,8 +945,6 @@ def q_boilerplate_removal(spark: SparkSession, sf: str) -> DataFrame:
     viral footer in one row). Then one per-doc re-assembly groupBy.
     At 100 TB the window key would be xxhash64(source, seg); raw text
     kept here so the oracle is exact (dedup_line_level's argument)."""
-    from ..functions import tokens
-
     d = table(spark, sf, "documents")
     tokd = d.select("doc_id", "source", tokens("text").alias("ts"))
     nseg = F.floor((F.size("ts") - 1) / SEG_TOKENS).cast("int")
@@ -1051,7 +1040,7 @@ def q_dsir_importance_sample(spark: SparkSession, sf: str) -> DataFrame:
     broadcast frame, nothing collects to the driver."""
     d = table(spark, sf, "documents")
     tok = d.select(
-        "doc_id", "lang", F.explode(_tokens(F.col("text"))).alias("term")
+        "doc_id", "lang", F.explode(tokens(F.col("text"))).alias("term")
     )
     raw_ctf = tok.groupBy("term").agg(
         F.count(F.lit(1)).alias("raw_ctf"),
@@ -1245,7 +1234,7 @@ def q_bloom_decontaminate(spark: SparkSession, sf: str) -> DataFrame:
     # materialize each once instead of re-tokenizing the corpus per consumer
     # (10 scans → 0 rescans)
     dt = d.select(
-        "doc_id", F.explode(F.array_distinct(_tokens(F.col("text")))).alias("term")
+        "doc_id", F.explode(F.array_distinct(tokens(F.col("text")))).alias("term")
     ).localCheckpoint(eager=True)
     ev_terms = (
         dt.filter(F.col("doc_id") % 10 == 0)

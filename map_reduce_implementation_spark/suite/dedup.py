@@ -239,7 +239,6 @@ def q_dedup_span_removal(spark: SparkSession, sf: str) -> DataFrame:
     is ``window_hash_frames`` — the SAME implementation the
     detection query uses, so tokenization, window size and the
     short-doc guard cannot drift between score and cut."""
-
     n = SPAN_N
     bound, wins = window_hash_frames(spark, sf, n)
     counts = wins.groupBy("whash").agg(F.count(F.lit(1)).alias("c"))
@@ -516,7 +515,6 @@ def q_prefix_filter_pairs(spark: SparkSession, sf: str) -> DataFrame:
     oracle is the PLAIN quadratic pair join — hash-equality proves
     the optimized path is semantics-preserving, the gemm-candidate
     convention (operators/similarity.py)."""
-
     # five consumers (df, rank, sizes, both verify sides) — materialize
     # the shingle stream ONCE instead of re-tokenizing per branch
     # (modest at sf0.1, ~2.1 → 1.9 s warm — the doc-keyed rank window

@@ -30,7 +30,7 @@ TR_TOP_K = 20  # keywords reported
 
 def _word_pairs(spark: SparkSession, sf: str) -> DataFrame:
     """DataFrame[prev, cur] — adjacent-token pairs per document (the
-    zip_with idiom shared with ``text.q_bigram_logprob``)."""
+    zip_with idiom shared with ``corpus.q_bigram_logprob``)."""
     d = table(spark, sf, "documents")
     ts = _tokens(F.col("text"))
     n = F.size(ts)

@@ -1365,7 +1365,6 @@ def q_quality_gate_agreement(spark: SparkSession, sf: str) -> DataFrame:
     Plan: both gates are zero-shuffle map passes over one corpus scan
     each; the join is doc-keyed; everything after runs on ONE
     4-cell-backed row. All ratios are single integer divisions."""
-
     ga = q_gopher_quality_gate(spark, sf).select(
         "doc_id", F.col("keep").alias("keep_a")
     )

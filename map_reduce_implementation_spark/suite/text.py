@@ -21,7 +21,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import tokens
-from ..functions import tokens as _tokens
 from ..sources import table
 from .base import QUERY_VEC_ID, SQL_TOKENS, STOPWORDS_EN, Query, dec, query_vec, shingles
 
@@ -84,8 +83,6 @@ def q_token_vocab_coverage(spark: SparkSession, sf: str) -> DataFrame:
     sees <= 8192 rows regardless of vocabulary size; the denominator
     comes from the separate full aggregate. Rank ties broken by token
     text for a deterministic curve."""
-    from ..functions import tokens
-
     max_probe = 8192
     d = table(spark, sf, "documents")
     tok = d.select(F.explode(tokens("text")).alias("tok"))
@@ -504,8 +501,6 @@ def q_text_mattr(spark: SparkSession, sf: str) -> DataFrame:
     transform + array_distinct over bound token arrays, O(len·W) work
     per doc). Both ratios are integer-sum ÷ integer-count divisions →
     bit-identical across engines; ROUND is display-only."""
-    from ..functions import tokens
-
     d = table(spark, sf, "documents")
     tokd = d.select("doc_id", tokens("text").alias("ts")).withColumn(
         "n_tokens", F.size("ts")
@@ -566,12 +561,11 @@ def q_lang_id_kappa(spark: SparkSession, sf: str) -> DataFrame:
     the marginal products, and κ = (p_o − p_e)/(1 − p_e) — one row.
 
     Plan: the only data-sized work is the classify pass
-    (``text.q_lang_id``, zero-shuffle column expressions); everything
+    (``q_lang_id``, zero-shuffle column expressions); everything
     after runs on the |langs|×|langs| confusion cells — marginals,
     their product sum, and the three ratios are all cell-space
     aggregates. p_o and p_e are single integer-ratio divisions
     (bit-exact); κ combines them in one identical expression."""
-
     pred = q_lang_id(spark, sf).select("doc_id", "predicted_lang")
     d = table(spark, sf, "documents").select("doc_id", "lang")
     cells = (
@@ -652,7 +646,7 @@ def q_bleu_precision(spark: SparkSession, sf: str) -> DataFrame:
     reference-absent bigrams clip to zero, and the final agg is
     lang-keyed over bigram types. Integer masses; one division."""
     d = table(spark, sf, "documents")
-    ts = _tokens(F.col("text"))
+    ts = tokens(F.col("text"))
     n = F.size(ts)
     pair_structs = F.zip_with(
         F.slice(ts, 1, F.greatest(n - 1, F.lit(0))),
@@ -746,7 +740,7 @@ def q_text_winnow_graded(spark: SparkSession, sf: str) -> DataFrame:
     array inside Generate: measured 22.3 s -> 1.0 s at sf0.1)."""
     d = table(spark, sf, "documents")
     pos = d.select(
-        "doc_id", F.posexplode(_tokens(F.col("text"))).alias("p", "tok")
+        "doc_id", F.posexplode(tokens(F.col("text"))).alias("p", "tok")
     )
     w = Window.partitionBy("doc_id").orderBy("p")
     gram = (
@@ -873,7 +867,7 @@ def q_quality_score(spark: SparkSession, sf: str) -> DataFrame:
     d = table(spark, sf, "documents")
     # bind the token array to a column — lambda references to the raw
     # split() expression would re-run the tokenizer per element
-    t = d.select("doc_id", "text", _tokens(F.col("text")).alias("toks"))
+    t = d.select("doc_id", "text", tokens(F.col("text")).alias("toks"))
     n_tok = F.size("toks")
     n_stop = F.size(F.filter(F.col("toks"), lambda x: x.isin(*STOPWORDS_EN)))
     length = F.length("text")
@@ -919,7 +913,7 @@ def q_lang_id(spark: SparkSession, sf: str) -> DataFrame:
     # three-stage select so toks and each score bind to real columns —
     # repeated references to raw expressions would re-evaluate them
     tokd = table(spark, sf, "documents").select(
-        "doc_id", _tokens(F.col("text")).alias("toks")
+        "doc_id", tokens(F.col("text")).alias("toks")
     )
     scored = tokd.select(
         "doc_id",
@@ -1019,7 +1013,7 @@ def q_pipeline_curation(spark: SparkSession, sf: str) -> DataFrame:
     from pyspark.sql import Window
 
     d = table(spark, sf, "documents")
-    t = d.select("doc_id", "text", _tokens(F.col("text")).alias("toks"))
+    t = d.select("doc_id", "text", tokens(F.col("text")).alias("toks"))
     gated = t.filter(
         (F.size("toks") >= 10)
         & (
@@ -1065,8 +1059,6 @@ def q_repetition_score(spark: SparkSession, sf: str) -> DataFrame:
     degenerate generations — a standard pre-training quality gate.
     Pure array expressions (zip of shifted token slices), no explode:
     per-row work stays inside whole-stage codegen, zero shuffles."""
-    from ..functions import tokens
-
     d = table(spark, sf, "documents")
     ts = tokens("text")
     n = F.size(ts)
@@ -1193,7 +1185,7 @@ def _bm25_scored(spark: SparkSession, sf: str) -> DataFrame:
     top-k query and the RRF hybrid fusion. See q_bm25_topk for the
     one-shuffle plan rationale."""
     d = table(spark, sf, "documents")
-    tok = d.select("doc_id", F.explode(_tokens(F.col("text"))).alias("term"))
+    tok = d.select("doc_id", F.explode(tokens(F.col("text"))).alias("term"))
     perdoc = tok.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("dl"),
         *[
@@ -1300,7 +1292,6 @@ def q_hybrid_rrf_topk(spark: SparkSession, sf: str) -> DataFrame:
     At 100 TB each arm's cost is its own query (BM25: one doc-keyed
     shuffle; cosine: one scan + TakeOrdered); fusion cost is constant.
     """
-
     bm_top = (
         _bm25_scored(spark, sf)
         .orderBy(F.col("bm25").desc(), "doc_id")

@@ -1,15 +1,13 @@
-"""Graph queries (``suite.graph``): PageRank, triangles, shortest paths,
-degree statistics, TextRank and Markov chains against brute-force replays."""
+"""Graph queries (``suite.graph``): shortest paths, TextRank and Markov
+chains against brute-force replays."""
 
 from __future__ import annotations
 
 import re
-from itertools import combinations
 
 import duckdb
 import numpy as np
 import pandas as pd
-import pytest
 
 from map_reduce_implementation_spark.suite import all_queries
 
@@ -193,112 +191,3 @@ def test_markov_sink_only_state(spark, tmp_path):
     assert len(odf) == 1
     assert odf["event_type"][0] == "view"
     assert odf["stationary_prob"][0] == 0.0
-
-
-def test_triangle_count_matches_bruteforce(spark):
-    """Degree-oriented wedge join == brute-force triangle enumeration
-    on the (small) sf0.001 co-occurrence graph."""
-    from pyspark.sql import functions as F
-
-    from map_reduce_implementation_spark.sources import table
-
-    li = (
-        table(spark, SF0001, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-        .collect()
-    )
-    by_order: dict[int, set[int]] = {}
-    for r in li:
-        by_order.setdefault(r["l_orderkey"], set()).add(r["l_partkey"])
-    edges = set()
-    for parts in by_order.values():
-        for a, b in combinations(sorted(parts), 2):
-            edges.add((a, b))
-    adj: dict[int, set[int]] = {}
-    for a, b in edges:
-        adj.setdefault(a, set()).add(b)
-        adj.setdefault(b, set()).add(a)
-    expected: dict[int, int] = {}
-    for a, b in edges:
-        for c in adj[a] & adj[b]:
-            if c > b:  # a < b < c: count each triangle once
-                for n in (a, b, c):
-                    expected[n] = expected.get(n, 0) + 1
-    got = {
-        r["node_id"]: r["n_triangles"]
-        for r in QS["graph_triangle_count"].build(spark, SF0001).collect()
-    }
-    assert got == expected
-
-
-def test_pagerank_zero_indegree_and_empty_graph(spark):
-    """Nodes nobody links to keep their teleport rank (the vector spine
-    union), sum(pr) stays 1, an empty edge list returns empty, and the
-    session memo never conflates different in-memory graphs."""
-    from map_reduce_implementation_spark.operators.graph import (
-        pagerank,
-        pagerank_release,
-    )
-
-    e = spark.createDataFrame([(1, 2), (2, 1), (3, 1)], "src long, dst long")
-    rows = {r["node"]: r["pr"] for r in pagerank(e, iterations=2).collect()}
-    assert set(rows) == {1, 2, 3}
-    assert abs(sum(rows.values()) - 1.0) < 1e-9
-    assert abs(rows[3] - 0.05) < 1e-9  # teleport-only rank, d=0.85, n=3
-
-    empty = spark.createDataFrame([], "src long, dst long")
-    assert pagerank(empty).count() == 0
-
-    other = spark.createDataFrame([(7, 8), (8, 7)], "src long, dst long")
-    got = {r["node"] for r in pagerank(other, iterations=1).collect()}
-    assert got == {7, 8}  # not conflated with the 3-node graph's memo
-    pagerank_release(spark)
-
-
-def test_degree_stats_mass_conservation(spark):
-    """The degree census conserves edge mass: Σ sum_deg over buckets =
-    2 × |undirected pair set| = |directed edge list|."""
-    from map_reduce_implementation_spark.suite.graph import _trade_edges
-
-    sf = "/root/testdata/sf0.001"
-    rows = QS["graph_degree_stats"].build(spark, sf).collect()
-    total = sum(r["sum_deg"] for r in rows)
-    assert total == _trade_edges(spark, sf).count()
-    assert all(r["min_deg"] >= 10 ** (r["digits"] - 1) for r in rows)
-    assert all(r["max_deg"] < 10 ** r["digits"] for r in rows)
-
-
-def _write(tmp_path, name, pdf):
-    path = str(tmp_path / f"{name}.parquet")
-    pdf.to_parquet(path)
-    return path
-
-
-def test_assortativity_star_graph(spark, tmp_path):
-    """A star trade graph (one supplier, three customers) is perfectly
-    disassortative: r = -1 in both engines."""
-    from map_reduce_implementation_spark.suite.graph import SQL_GRAPH_ASSORTATIVITY
-
-    li = _write(
-        tmp_path,
-        "lineitem",
-        pd.DataFrame(
-            [(k, 7) for k in range(3)], columns=["l_orderkey", "l_suppkey"]
-        ),
-    )
-    po = _write(
-        tmp_path,
-        "orders",
-        pd.DataFrame(
-            [(k, k) for k in range(3)], columns=["o_orderkey", "o_custkey"]
-        ),
-    )
-    r = QS["graph_assortativity"].build(spark, str(tmp_path)).collect()[0]
-    assert r["n_directed_edges"] == 6 and r["n_nodes"] == 4
-    assert r["assortativity"] == pytest.approx(-1.0, abs=1e-9)
-    con = duckdb.connect()
-    con.execute(f"CREATE VIEW lineitem AS SELECT * FROM '{li}'")
-    con.execute(f"CREATE VIEW orders AS SELECT * FROM '{po}'")
-    o = con.execute(SQL_GRAPH_ASSORTATIVITY).df().iloc[0]
-    assert float(o["assortativity"]) == pytest.approx(-1.0, abs=1e-9)

@@ -1,6 +1,6 @@
-"""Semantic invariants for the round-4 wave-2 operators — properties
-the oracle equality check can't express (it proves Spark == DuckDB,
-not that both compute the RIGHT thing)."""
+"""Semantic invariants for the sketch, graph, dedup and probe operators —
+properties the oracle equality check can't express (it proves Spark ==
+DuckDB, not that both compute the RIGHT thing)."""
 
 from __future__ import annotations
 
@@ -89,7 +89,7 @@ def test_winnow_covers_every_long_doc(spark):
 
     from map_reduce_implementation_spark.functions import tokens
     from map_reduce_implementation_spark.sources import table
-    from map_reduce_implementation_spark.suite.sketches3 import WN_K, WN_W
+    from map_reduce_implementation_spark.suite.text import WN_K, WN_W
 
     d = table(spark, SF0001, "documents")
     long_docs = {
@@ -125,7 +125,7 @@ def test_minhash_graded_pairs_have_high_jaccard_bands(spark):
 
 def test_simhash_graded_hamming_bound(spark):
     """Every reported pair is within the hamming threshold and ordered."""
-    from map_reduce_implementation_spark.suite.sketches3 import SH_MAX_HAMMING
+    from map_reduce_implementation_spark.suite.stats import SH_MAX_HAMMING
 
     rows = QS["dedup_simhash_graded"].build(spark, SF0001).collect()
     for r in rows:
@@ -235,7 +235,7 @@ def test_hll_registers_merge_by_max(spark):
     from pyspark.sql import functions as F
 
     from map_reduce_implementation_spark.sources import table
-    from map_reduce_implementation_spark.suite.sketches3 import hll_registers
+    from map_reduce_implementation_spark.suite.stats import hll_registers
 
     e = table(spark, SF0001, "events")
     full = hll_registers(e, "event_type", F.col("user_id"))
@@ -276,7 +276,7 @@ def test_cms_cells_merge_by_sum(spark):
 
     from map_reduce_implementation_spark.functions import tokens as _tokens
     from map_reduce_implementation_spark.sources import table
-    from map_reduce_implementation_spark.suite.pipeline2 import cms_cells
+    from map_reduce_implementation_spark.suite.stats import cms_cells
 
     d = table(spark, SF0001, "documents")
 
@@ -303,10 +303,8 @@ def test_fuzzy_clusters_consistency(spark):
     every verified near-dup pair land in the same cluster, cluster id
     is the minimum member id, and is_kept marks exactly that member."""
     from map_reduce_implementation_spark.operators.dedup import jaccard_pairs
-    from map_reduce_implementation_spark.suite.dedup import (
-        FUZZY_MAX_DF,
-        _shingles,
-    )
+    from map_reduce_implementation_spark.suite.dedup import FUZZY_MAX_DF
+    from map_reduce_implementation_spark.suite.base import shingles as _shingles
 
     rows = QS["dedup_fuzzy_clusters"].build(spark, SF0001).collect()
     by_doc = {r["doc_id"]: r["cluster_id"] for r in rows}

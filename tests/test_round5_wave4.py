@@ -1,7 +1,7 @@
-"""Semantic invariants for the round-5 observability wave (curation6 +
-the linear-probe apply half) — properties the oracle equality check
-can't express (it proves Spark == DuckDB, not that both compute the
-RIGHT thing)."""
+"""Semantic invariants for the curation cascade, token-budget mixing,
+boilerplate removal, LSH tuning, drift, calibration and vector-index
+queries — properties the oracle equality check can't express (it proves
+Spark == DuckDB, not that both compute the RIGHT thing)."""
 
 from __future__ import annotations
 
@@ -34,7 +34,7 @@ def test_cascade_waterfall_consistency_and_replay(spark):
     """The waterfall is internally consistent (n_out[i] == n_in[i+1],
     dropped+survivors == corpus) and a pure-Python first-fail replay
     reproduces every stage's drop count."""
-    from map_reduce_implementation_spark.suite.curation6 import (
+    from map_reduce_implementation_spark.suite.curation import (
         MIN_TOKENS,
         MIN_TTR,
         WLEN_HI,
@@ -79,7 +79,7 @@ def test_token_budget_mix_conserves_budget(spark):
     target/available per cell, and the upsampled flag matches."""
     import math
 
-    from map_reduce_implementation_spark.suite.curation6 import MIX_BUDGET
+    from map_reduce_implementation_spark.suite.curation import MIX_BUDGET
 
     docs = _docs(spark)
     cell_tokens: dict[tuple[str, str], int] = {}
@@ -118,10 +118,7 @@ def test_boilerplate_removal_python_replay(spark):
     """A pure-Python within-source df count + reassembly reproduces
     every doc's removed count and kept hash, and removal is symmetric:
     EVERY occurrence of a boilerplate segment is gone (no keep-first)."""
-    from map_reduce_implementation_spark.suite.curation6 import (
-        BOILER_MIN_DOCS,
-        SEG_TOKENS,
-    )
+    from map_reduce_implementation_spark.suite.curation import BOILER_MIN_DOCS, SEG_TOKENS
 
     docs = _docs(spark)
     seg_docs: dict[tuple[str, str], set[int]] = {}
@@ -210,7 +207,7 @@ def test_band_analysis_python_replay_and_monotone(spark):
     from collections import defaultdict
     from itertools import combinations
 
-    from map_reduce_implementation_spark.suite.tuning import (
+    from map_reduce_implementation_spark.suite.dedup import (
         BAND_CONFIGS,
         TUNE_MAX_DF,
         TUNE_TARGET_J,
@@ -274,7 +271,7 @@ def test_drift_psi_python_replay(spark):
     import numpy as np
 
     from map_reduce_implementation_spark.sources import table
-    from map_reduce_implementation_spark.suite.drift import PSI_BINS
+    from map_reduce_implementation_spark.suite.quality import PSI_BINS
 
     rows = table(spark, SF0001, "events").select(
         "event_type", "value", F_unix_micros_col()
@@ -379,10 +376,7 @@ def test_index_delta_python_replay(spark):
     import numpy as np
 
     from map_reduce_implementation_spark.sources import table
-    from map_reduce_implementation_spark.suite.vector2 import (
-        DELTA_CELLS,
-        DELTA_MOD,
-    )
+    from map_reduce_implementation_spark.suite.similarity import DELTA_CELLS, DELTA_MOD
 
     emb = sorted(
         table(spark, SF0001, "embeddings").collect(), key=lambda r: r["vec_id"]
@@ -453,7 +447,7 @@ def test_drift_nulls_and_new_types_match_oracle(spark, tmp_path):
 
     con = duckdb.connect()
     con.execute(f"CREATE VIEW events AS SELECT * FROM '{path}'")
-    from map_reduce_implementation_spark.suite.drift import (
+    from map_reduce_implementation_spark.suite.quality import (
         SQL_EVENTS_DRIFT_KS,
         SQL_EVENTS_DRIFT_PSI,
     )
@@ -486,11 +480,9 @@ def test_matryoshka_recall_numpy_replay(spark):
     import numpy as np
 
     from map_reduce_implementation_spark.sources import table
-    from map_reduce_implementation_spark.suite.similarity import (
-        QUERY_VEC_ID,
-        TOP_K,
-    )
-    from map_reduce_implementation_spark.suite.vector2 import MRL_DIMS
+    from map_reduce_implementation_spark.suite.base import QUERY_VEC_ID
+    from map_reduce_implementation_spark.suite.similarity import TOP_K
+    from map_reduce_implementation_spark.suite.similarity import MRL_DIMS
 
     emb = sorted(
         table(spark, SF0001, "embeddings").collect(), key=lambda r: r["vec_id"]

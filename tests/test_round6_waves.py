@@ -1,7 +1,6 @@
-"""Round-6 waves 14-15: degenerate-corpus edge regressions (the
-oracle-mirror-trap pattern — collapsible denominators must yield the
-same guarded NULLs in both engines) plus value spot-checks on closed
-forms the oracle suite alone can't falsify."""
+"""Degenerate-corpus edge regressions (collapsible denominators must
+yield the same guarded NULLs in both engines) plus value spot-checks on
+closed forms the oracle suite alone can't falsify."""
 
 from __future__ import annotations
 
@@ -44,9 +43,7 @@ def test_interarrival_zero_and_empty_gaps(spark, tmp_path):
     """All-same-second events → Σg = 0 → cv/rate/loglik NULL in BOTH
     engines (not a ln(0)=-inf vs NULL divergence); single-event users
     produce no gaps at all → NULL row, not a crash."""
-    from map_reduce_implementation_spark.suite.stats3 import (
-        SQL_EVENTS_INTERARRIVAL,
-    )
+    from map_reduce_implementation_spark.suite.events import SQL_EVENTS_INTERARRIVAL
 
     t = pd.Timestamp("2024-01-01 00:00:00.500000")
     p = _events(
@@ -66,9 +63,7 @@ def test_interarrival_zero_and_empty_gaps(spark, tmp_path):
 def test_ema_single_hour_and_constant_series(spark, tmp_path):
     """One hour → EMA = y exactly (seed weight 1); a constant series →
     EMA = level and ema_minus_mean = 0 in both engines."""
-    from map_reduce_implementation_spark.suite.stats3 import (
-        SQL_EVENTS_EMA_HOURLY,
-    )
+    from map_reduce_implementation_spark.suite.events import SQL_EVENTS_EMA_HOURLY
 
     rows = [(1, pd.Timestamp("2024-01-01 05:10:00"), 1, "a", 0.0, "{}")]
     p = _events(tmp_path, rows)
@@ -97,9 +92,7 @@ def test_ema_single_hour_and_constant_series(spark, tmp_path):
 def test_readability_no_tokens(spark, tmp_path):
     """A language whose only doc has zero [a-z0-9] tokens → flesch
     NULL in both engines (the Σw = 0 guard), other languages score."""
-    from map_reduce_implementation_spark.suite.corpus4 import (
-        SQL_TEXT_READABILITY,
-    )
+    from map_reduce_implementation_spark.suite.corpus import SQL_TEXT_READABILITY
 
     p = _docs(
         tmp_path,
@@ -134,7 +127,7 @@ def test_readability_no_tokens(spark, tmp_path):
 def test_good_turing_single_term(spark, tmp_path):
     """Single repeated term: N₁ = 0 → p0 = 0 and rstar_1 NULL in both
     engines (no 0/0); the N₂-backed rstar also guards."""
-    from map_reduce_implementation_spark.suite.corpus4 import _gt_oracle
+    from map_reduce_implementation_spark.suite.corpus import _gt_oracle
 
     p = _docs(tmp_path, [(1, "word word word", "en", "s0", 14)])
     r = QS["corpus_good_turing"].build(spark, str(tmp_path)).collect()[0]
@@ -153,9 +146,7 @@ def test_good_turing_single_term(spark, tmp_path):
 def test_jsd_bounds_and_identity(spark, tmp_path):
     """JSD(p, p) = 0 for identical sources; disjoint-vocabulary
     sources hit the ln 2 upper bound — in BOTH engines."""
-    from map_reduce_implementation_spark.suite.corpus4 import (
-        SQL_CORPUS_JSD_SOURCES,
-    )
+    from map_reduce_implementation_spark.suite.corpus import SQL_CORPUS_JSD_SOURCES
 
     p = _docs(
         tmp_path,
@@ -184,7 +175,7 @@ def test_jsd_bounds_and_identity(spark, tmp_path):
 def test_gini_uniform_and_degenerate(spark, tmp_path):
     """Equal revenues → Gini 0 via the same formula; a whale-heavy
     ledger is strictly positive; both engines agree cell-for-cell."""
-    from map_reduce_implementation_spark.suite.stats3 import SQL_REVENUE_GINI
+    from map_reduce_implementation_spark.suite.stats import SQL_REVENUE_GINI
 
     p = _write(
         tmp_path,
@@ -234,9 +225,7 @@ def test_winsorized_clip_counts(spark, tmp_path):
     the winsorized mean sits strictly inside the raw extremes; a
     single-doc source degenerates to p05 = p95 = value with zero
     clipping. Cell-exact across engines."""
-    from map_reduce_implementation_spark.suite.corpus4 import (
-        SQL_QUALITY_WINSORIZED_STATS,
-    )
+    from map_reduce_implementation_spark.suite.corpus import SQL_QUALITY_WINSORIZED_STATS
 
     rows = [(i, "t", "en", "big", int(v)) for i, v in enumerate([1, *([100] * 20), 10000])]
     rows.append((99, "t", "en", "lone", 42))
@@ -264,7 +253,7 @@ def test_decontaminate_semantic_planted_leak(spark, tmp_path):
     """A training vector that IS an eval vector (cosine 1) is flagged;
     an orthogonal one is not — and the label rollup matches the
     oracle cell-for-cell."""
-    from map_reduce_implementation_spark.suite.corpus4 import (
+    from map_reduce_implementation_spark.suite.curation import (
         DECON_EVAL_N,
         SQL_DECONTAMINATE_SEMANTIC,
     )
@@ -316,9 +305,7 @@ def test_skyline_dominance_and_ties(spark, tmp_path):
     (price, date) points BOTH survive (mutual non-dominance), and the
     cheapest-ever + latest-ever points always survive. Cell-exact vs
     the definitional quadratic NOT-EXISTS oracle."""
-    from map_reduce_implementation_spark.suite.curation8 import (
-        SQL_PARETO_SKYLINE,
-    )
+    from map_reduce_implementation_spark.suite.sql import SQL_PARETO_SKYLINE
 
     d = lambda s: pd.Timestamp(s).date()  # noqa: E731 — DATE, not ns-timestamp
     rows = [
@@ -344,9 +331,7 @@ def test_cluster_representatives_keep_best(spark, tmp_path):
     """Two near-dup docs of different lengths: the representative is
     the LONGER one (not the min id), singletons don't appear, and the
     Spark iterative CC matches the recursive-CTE oracle."""
-    from map_reduce_implementation_spark.suite.curation8 import (
-        SQL_DEDUP_CLUSTER_REPRESENTATIVES,
-    )
+    from map_reduce_implementation_spark.suite.dedup import SQL_DEDUP_CLUSTER_REPRESENTATIVES
 
     a = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     b = a + " lambda"  # same 5-shingle prefix set, J >= 0.5, longer
@@ -370,9 +355,7 @@ def test_cluster_representatives_keep_best(spark, tmp_path):
 def test_burstiness_ratio_and_floor(spark, tmp_path):
     """cf/df orders bursty terms first; terms under the df floor are
     excluded entirely in both engines."""
-    from map_reduce_implementation_spark.suite.curation8 import (
-        SQL_TERM_BURSTINESS,
-    )
+    from map_reduce_implementation_spark.suite.corpus import SQL_TERM_BURSTINESS
 
     docs = [(i, "common bursty bursty bursty" if i == 0 else "common", "en", "s0", 20)
             for i in range(5)]
@@ -392,9 +375,7 @@ def test_value_moments_constant_and_skewed(spark, tmp_path):
     population moments."""
     import numpy as np
 
-    from map_reduce_implementation_spark.suite.curation8 import (
-        SQL_EVENTS_VALUE_MOMENTS,
-    )
+    from map_reduce_implementation_spark.suite.stats import SQL_EVENTS_VALUE_MOMENTS
 
     t = pd.Timestamp("2024-01-01")
     vals = [1.0, 1.0, 1.0, 1.0, 10.0]
@@ -424,9 +405,7 @@ def test_conditional_entropy_degenerate(spark, tmp_path):
     """A language whose docs have <2 tokens drops from the output; a
     single-repeated-bigram language scores exactly 0 on every entropy
     column in both engines."""
-    from map_reduce_implementation_spark.suite.stats4 import (
-        SQL_TEXT_CONDITIONAL_ENTROPY,
-    )
+    from map_reduce_implementation_spark.suite.corpus import SQL_TEXT_CONDITIONAL_ENTROPY
 
     p = _docs(
         tmp_path,
@@ -450,9 +429,7 @@ def test_conditional_entropy_degenerate(spark, tmp_path):
 def test_assortativity_star_graph(spark, tmp_path):
     """A star trade graph (one supplier, three customers) is perfectly
     disassortative: r = -1 in both engines."""
-    from map_reduce_implementation_spark.suite.stats4 import (
-        SQL_GRAPH_ASSORTATIVITY,
-    )
+    from map_reduce_implementation_spark.suite.graph import SQL_GRAPH_ASSORTATIVITY
 
     li = _write(
         tmp_path,
@@ -481,9 +458,7 @@ def test_assortativity_star_graph(spark, tmp_path):
 def test_fulfillment_latency_impossible_share(spark, tmp_path):
     """Planted ship-before-order rows land in impossible_share as an
     exact integer ratio; percentiles agree across engines."""
-    from map_reduce_implementation_spark.suite.stats4 import (
-        SQL_FULFILLMENT_LATENCY,
-    )
+    from map_reduce_implementation_spark.suite.tpch import SQL_FULFILLMENT_LATENCY
 
     d = lambda s: pd.Timestamp(s).date()  # noqa: E731
     lip = str(tmp_path / "lineitem.parquet")
@@ -512,9 +487,7 @@ def test_fulfillment_latency_impossible_share(spark, tmp_path):
 def test_seasonal_index_flat_year(spark, tmp_path):
     """Identical revenue every month -> every seasonal index is
     exactly 1.0 in both engines."""
-    from map_reduce_implementation_spark.suite.stats4 import (
-        SQL_ORDERS_SEASONAL_INDEX,
-    )
+    from map_reduce_implementation_spark.suite.tpch import SQL_ORDERS_SEASONAL_INDEX
 
     d = lambda s: pd.Timestamp(s).date()  # noqa: E731
     rows = [(m, 1, d(f"2020-{m:02d}-15"), 100.0) for m in range(1, 13)]
@@ -532,9 +505,7 @@ def test_centroid_drift_planted_shift(spark, tmp_path):
     """A label whose odd half is shifted +1 on dim 0 reads exactly
     l2_shift 1.0; an identical-halves label reads 0 with cosine 1;
     a label present in one half only is excluded — in both engines."""
-    from map_reduce_implementation_spark.suite.drift2 import (
-        SQL_EMBEDDING_CENTROID_DRIFT,
-    )
+    from map_reduce_implementation_spark.suite.embeddings import SQL_EMBEDDING_CENTROID_DRIFT
 
     rows = []
     for i in range(4):  # label 0: even half [1,0], odd half [2,0]
@@ -566,9 +537,7 @@ def test_centroid_drift_planted_shift(spark, tmp_path):
 def test_inflation_exact_copies(spark, tmp_path):
     """Three copies of a 4-token doc + one unique 2-token doc:
     inflation = (3*4 + 2) / (4 + 2) = 14/6 exactly, both engines."""
-    from map_reduce_implementation_spark.suite.drift2 import (
-        SQL_DEDUP_INFLATION_REPORT,
-    )
+    from map_reduce_implementation_spark.suite.quality import SQL_DEDUP_INFLATION_REPORT
 
     p = _docs(
         tmp_path,
@@ -589,7 +558,7 @@ def test_inflation_exact_copies(spark, tmp_path):
 def test_churn_hazard_planted_gaps(spark, tmp_path):
     """Gaps of 30 min, 2 h, and 2 days: exceedance shares walk down
     the thresholds as exact integer ratios in both engines."""
-    from map_reduce_implementation_spark.suite.drift2 import _hazard_oracle
+    from map_reduce_implementation_spark.suite.events import _hazard_oracle
 
     t0 = pd.Timestamp("2024-01-01 00:00:00")
     ts = [t0, t0 + pd.Timedelta(minutes=30), t0 + pd.Timedelta(minutes=30) + pd.Timedelta(hours=2),

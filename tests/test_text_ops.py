@@ -348,34 +348,6 @@ def test_kappa_degenerate_guards(spark, tmp_path):
     assert r2["kappa"] is None and pd.isna(o2["kappa"])
 
 
-def test_winnow_covers_every_long_doc(spark):
-    """Winnowing selects >= 1 fingerprint for every doc with at least
-    k + w - 1 tokens (the first full window exists)."""
-    from pyspark.sql import functions as F
-
-    from map_reduce_implementation_spark.functions import tokens
-    from map_reduce_implementation_spark.sources import table
-    from map_reduce_implementation_spark.suite.text import WN_K, WN_W
-
-    d = table(spark, SF0001, "documents")
-    long_docs = {
-        r["doc_id"]
-        for r in d.select(
-            "doc_id", F.size(tokens(F.col("text"))).alias("n")
-        ).collect()
-        if r["n"] >= WN_K + WN_W - 1
-    }
-    fp_docs = {
-        r["doc_id"]
-        for r in QS["text_winnow_graded"]
-        .build(spark, SF0001)
-        .select("doc_id")
-        .distinct()
-        .collect()
-    }
-    assert long_docs <= fp_docs
-
-
 def _tokens(text: str) -> list[str]:
     import re
 

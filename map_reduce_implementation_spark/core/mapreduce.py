@@ -22,8 +22,15 @@ per-partition logic. Declarative pipelines (jobs/, operators/) are the
 recommended path — Catalyst cannot see inside these Python functions, so
 nothing here is optimized, and at 100 TB the single-partition reduce is a
 deliberate bottleneck exactly like the reference's lone reduce worker
-(mapreduce.c:159-171). ``run_mapreduce`` therefore also accepts
-``reduce_parallelism > 1`` when the reduce function is key-partitionable.
+(mapreduce.c:159-171). The reduce function sees every map output line, so
+the reduce stays one partition: ``coalesce`` merges splits without
+routing by key, and two reduce tasks would each emit their own partial
+totals.
+
+The reference's unlinked ``mapreduce2.c`` variant (map worker 0 stays
+alive and becomes the reducer, signalled through a pipe) has the same
+output contract and needs no flag here: the narrow ``coalesce`` already
+streams each map split's output into the reduce function inside one task.
 """
 
 from __future__ import annotations
@@ -47,21 +54,6 @@ class MapReduceSpec:
     map_func: MapFunc
     reduce_func: ReduceFunc
     usr_data: object = None
-    reduce_parallelism: int = 1
-    # API parity with the reference's unlinked mapreduce2.c variant
-    # (mapreduce2.c:135-196): there, map-worker 0 stays alive after its
-    # map and becomes the reducer, blocking on a pipe until the parent
-    # signals — an overlap/pipelining experiment whose OUTPUT contract
-    # is identical to mapreduce.c. Under Spark the flag changes nothing
-    # at runtime because the overlap already happens: the narrow
-    # ``coalesce`` streams each map split's output into the reduce
-    # function inside the same task — the hand-off mapreduce2.c builds
-    # with fork+pipe.
-    # Accepted (and tested result-identical) so a mapreduce2 caller can
-    # switch without an API delta. mapreduce2.c's fixed-up child-write
-    # wart (result fields written in the child, lost to the parent,
-    # patched at :197) is deliberately not reproduced.
-    overlap: bool = False
 
 
 @dataclass
@@ -87,15 +79,13 @@ def run_mapreduce(
 ) -> MapReduceResult:
     """Execute the two-phase map/reduce lifecycle (mapreduce.c:99-191).
 
-    ``coalesce`` is narrow, so the map splits are not separate tasks: each
-    of the ``reduce_parallelism`` reduce tasks runs its share of the map
-    splits one after another, then reduces them. At the default
-    ``reduce_parallelism=1`` that is one task for the whole job, like the
-    reference, which ``waitpid``s inside its fork loop (mapreduce.c:136);
-    a traced 4-core run reads a busy ratio of 0.20–0.23. It is kept
-    because it preserves input order: the finder's lines come out as the
-    reference writes them to mr.rst. ``reduce_parallelism > 1`` runs that
-    many tasks in parallel, for a key-partitionable reduce function.
+    ``coalesce(1)`` is narrow, so the map splits are not separate tasks:
+    the one reduce task runs every map split one after another, then
+    reduces them. That is one task for the whole job, like the reference,
+    which ``waitpid``s inside its fork loop (mapreduce.c:136); a traced
+    4-core run reads a busy ratio of 0.20–0.23. It is kept because it
+    preserves input order: the finder's lines come out as the reference
+    writes them to mr.rst.
     """
     t0 = time.monotonic_ns()
     sc = spark.sparkContext
@@ -105,7 +95,7 @@ def run_mapreduce(
     rdd = sc.textFile(spec.input_data_filepath, minPartitions=spec.split_num)
     mapped = rdd.mapPartitions(lambda it: map_func(it, usr_data))
     n_map = mapped.getNumPartitions()
-    reduced = mapped.coalesce(spec.reduce_parallelism).mapPartitions(
+    reduced = mapped.coalesce(1).mapPartitions(
         lambda it: reduce_func(it, usr_data)
     )
 
@@ -121,7 +111,7 @@ def run_mapreduce(
         filepath=output_path,
         processing_time_us=(t1 - t0) // 1000,
         map_partitions=n_map,
-        reduce_partitions=spec.reduce_parallelism,
+        reduce_partitions=1,
         lines=lines,
     )
 

@@ -8,11 +8,12 @@ row-at-a-time Python overhead.
 
 Codec status: PNG and WAV(PCM) are decoded FOR REAL in pure
 stdlib+numpy (``png_decode`` — full IDAT inflate + scanline unfilter,
-not just header sniffing — and ``wav_decode``); the decode kernels
-dispatch on magic bytes, falling back to a clearly-marked deterministic
-fake for payloads that are not real media (the ``documents`` text bytes
-used as stand-ins). Heavier codecs (JPEG/MP4) would slot into the same
-dispatch; those libraries are not in this container.
+not just header sniffing — and ``wav_decode``); the one decode kernel,
+``decode_media``, dispatches on magic bytes, falling back to a
+clearly-marked deterministic fake for payloads that are not real media
+(the ``documents`` text bytes used as stand-ins). Heavier codecs
+(JPEG/MP4) would slot into the same dispatch; those libraries are not in
+this container.
 """
 
 from __future__ import annotations
@@ -23,17 +24,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-DECODED_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("byte_len", T.LongType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("n_channels", T.IntegerType()),
-        T.StructField("mean_intensity", T.DoubleType()),
-    ]
-)
 
 
 def with_binary_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -224,17 +214,7 @@ def _fake_decode(payload: bytes) -> tuple[int, int, int, float]:
     return width, height, 3, float(mean)
 
 
-def _decode_any(payload: bytes) -> tuple[int, int, int, float]:
-    """Magic-byte dispatch: real PNG decode when the payload IS a PNG,
-    deterministic fake otherwise (documents' text bytes standing in for
-    media). Production adds JPEG/WebP arms to the same dispatch."""
-    p = bytes(payload)
-    if p[:8] == PNG_MAGIC:
-        return png_decode(p)
-    return _fake_decode(p)
-
-
-MEDIA_DECODED_SCHEMA = T.StructType(
+MEDIA_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),
         T.StructField("kind", T.StringType()),
@@ -255,8 +235,9 @@ def decode_media(df_with_payload: DataFrame) -> DataFrame:
 
     - ``\\x89PNG`` → real PNG decode (zlib inflate + unfilter);
       ``stat`` = mean pixel intensity, image dims filled.
-    - ``RIFF``   → real WAVE parse (chunk walk, int16 PCM);
-      ``stat`` = sample RMS, audio fields filled.
+    - ``RIFF…WAVE`` → real WAVE parse (chunk walk, int16 PCM);
+      ``stat`` = sample RMS, audio fields filled. Other RIFF forms
+      (WebP, AVI) take the fake arm.
     - anything else → the clearly-marked deterministic fake (no
       mp4/jpeg codec in this container); image-shaped fields from the
       byte-length formula.
@@ -275,7 +256,7 @@ def decode_media(df_with_payload: DataFrame) -> DataFrame:
                 if p[:8] == PNG_MAGIC:
                     w, h, c, mean = png_decode(p)
                     rows.append((int(did), "png", w, h, c, None, None, float(mean)))
-                elif p[:4] == b"RIFF":
+                elif p[:4] == b"RIFF" and p[8:12] == b"WAVE":
                     rate, nch, n, rms = wav_decode(p)
                     rows.append(
                         (int(did), "wav", None, None, nch, n, rate, float(rms))
@@ -286,36 +267,10 @@ def decode_media(df_with_payload: DataFrame) -> DataFrame:
                         (int(did), "unknown", w, h, c, None, None, float(mean))
                     )
             yield pd.DataFrame(
-                rows, columns=[f.name for f in MEDIA_DECODED_SCHEMA.fields]
+                rows, columns=[f.name for f in MEDIA_SCHEMA.fields]
             )
 
-    return df_with_payload.mapInPandas(batches, MEDIA_DECODED_SCHEMA)
-
-
-def decode_stub(df_with_payload: DataFrame) -> DataFrame:
-    """Arrow-batched decode over the binary column via mapInPandas.
-
-    PNG payloads hit the REAL pure-python decoder (``png_decode``);
-    anything else falls back to the deterministic fake. The plumbing —
-    per-batch pandas iteration, explicit output schema, no driver
-    collect — is the production shape.
-    """
-
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            decoded = [_decode_any(p) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "byte_len": pdf["payload"].map(len).astype("int64"),
-                    "width": [d[0] for d in decoded],
-                    "height": [d[1] for d in decoded],
-                    "n_channels": [d[2] for d in decoded],
-                    "mean_intensity": [d[3] for d in decoded],
-                }
-            )
-
-    return df_with_payload.mapInPandas(decode_batches, DECODED_SCHEMA)
+    return df_with_payload.mapInPandas(batches, MEDIA_SCHEMA)
 
 
 RESIZE_PNG_SCHEMA = T.StructType(
@@ -404,7 +359,7 @@ def feature_extract_stub(df_with_payload: DataFrame, dim: int = 16) -> DataFrame
     return df_with_payload.mapInPandas(batches, FEATURE_SCHEMA)
 
 
-PNG_PAYLOAD_SCHEMA = T.StructType(
+PAYLOAD_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),
         T.StructField("payload", T.BinaryType()),
@@ -418,8 +373,8 @@ def with_png_payload(df_with_len: DataFrame) -> DataFrame:
     w = 16 + byte_len % 64, h = 16 + (byte_len // 64) % 64 (same dims
     as the typed-metadata struct). Only two int64 columns cross the
     Arrow boundary; the image synthesis + PNG encode run vectorized in
-    the kernel. Feeds decode_stub's real-PNG path for an
-    encode→inflate→unfilter→decode round trip with a closed-form
+    the kernel. Feeds ``decode_media``'s PNG arm (or ``resize_png``) for
+    an encode→inflate→unfilter→decode round trip with a closed-form
     oracle."""
     import numpy as np
 
@@ -438,15 +393,15 @@ def with_png_payload(df_with_len: DataFrame) -> DataFrame:
             )
 
     return df_with_len.select("doc_id", "byte_len").mapInPandas(
-        batches, PNG_PAYLOAD_SCHEMA
+        batches, PAYLOAD_SCHEMA
     )
 
 
 def with_wav_payload(df_ids: DataFrame, sample_rate: int = 16000) -> DataFrame:
     """Build a REAL mono 16-bit PCM WAV per row from doc_id —
     deterministic samples s[i] = ((i · (doc_id % 97 + 1)) % 201) − 100,
-    n = 1000 + doc_id % 500. Feeds audio_decode_stub's real-RIFF path;
-    the oracle recomputes the RMS closed-form in SQL."""
+    n = 1000 + doc_id % 500. Feeds ``decode_media``'s RIFF arm; the
+    oracle recomputes the RMS closed-form in SQL."""
     import numpy as np
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -462,19 +417,7 @@ def with_wav_payload(df_ids: DataFrame, sample_rate: int = 16000) -> DataFrame:
                 {"doc_id": pdf["doc_id"].astype("int64"), "payload": payloads}
             )
 
-    return df_ids.select("doc_id").mapInPandas(batches, PNG_PAYLOAD_SCHEMA)
-
-
-MEDIA_STRUCT = T.StructType(
-    [
-        T.StructField("modality", T.StringType()),
-        T.StructField("mime", T.StringType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("duration_ms", T.LongType()),
-        T.StructField("sample_rate", T.IntegerType()),
-    ]
-)
+    return df_ids.select("doc_id").mapInPandas(batches, PAYLOAD_SCHEMA)
 
 
 def with_media_metadata(df_with_payload: DataFrame) -> DataFrame:
@@ -508,50 +451,6 @@ def with_media_metadata(df_with_payload: DataFrame) -> DataFrame:
             F.when(is_aud, F.lit(16000)).alias("sample_rate"),
         ),
     )
-
-
-AUDIO_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("sample_rate", T.IntegerType()),
-        T.StructField("n_samples", T.LongType()),
-        T.StructField("rms", T.DoubleType()),
-    ]
-)
-
-
-def audio_decode_stub(df_with_payload: DataFrame, sample_rate: int = 16000) -> DataFrame:
-    """Audio decode over mapInPandas: RIFF/WAVE payloads hit the REAL
-    parser (``wav_decode`` — fmt/data chunk walk + int16 PCM via numpy);
-    other payloads fall back to a deterministic int8-PCM reinterpretation
-    so text stand-ins stay testable."""
-    import numpy as np
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            sr, ns, rms = [], [], []
-            for p in pdf["payload"]:
-                b = bytes(p)
-                if b[:4] == b"RIFF" and b[8:12] == b"WAVE":
-                    rate, _nch, n, r = wav_decode(b)
-                    sr.append(rate)
-                    ns.append(n)
-                    rms.append(r)
-                else:
-                    arr = np.frombuffer(b, dtype=np.int8).astype(np.float64)
-                    sr.append(sample_rate)
-                    ns.append(len(arr))
-                    rms.append(float(np.sqrt(np.mean(arr * arr))) if len(arr) else 0.0)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "sample_rate": sr,
-                    "n_samples": ns,
-                    "rms": rms,
-                }
-            )
-
-    return df_with_payload.mapInPandas(batches, AUDIO_SCHEMA)
 
 
 def frame_sample_stub(df_with_payload: DataFrame, every_n_bytes: int = 1024) -> DataFrame:

@@ -62,8 +62,18 @@ def revenue_expr() -> Column:
     return dec("l_extendedprice") * (F.lit(1).cast("decimal(18,2)") - dec("l_discount"))
 
 
+def bigrams(ts: Column) -> Column:
+    """Adjacent pairs of a token array as ``struct(prev, cur)``, formed
+    in-array by ``zip_with`` of two shifted slices (no shuffle)."""
+    n = F.size(ts)
+    return F.zip_with(
+        F.slice(ts, 1, F.greatest(n - 1, F.lit(0))),
+        F.slice(ts, 2, F.greatest(n - 1, F.lit(0))),
+        lambda a, b: F.struct(a.alias("prev"), b.alias("cur")),
+    )
+
+
 # SQL fragments mirroring the helpers above (keep in lockstep!)
-SQL_DEC = "CAST({col} AS DECIMAL(18,{scale}))"
 SQL_REVENUE = (
     "CAST(l_extendedprice AS DECIMAL(18,2))"
     " * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))"

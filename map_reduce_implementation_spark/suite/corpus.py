@@ -20,7 +20,14 @@ from pyspark.sql import functions as F
 
 from ..functions import tokens
 from ..sources import table
-from .base import SQL_TOKENS, SQL_UNIGRAM_NLL_CTE, Query, md5_bucket, unigram_avg_nll
+from .base import (
+    SQL_TOKENS,
+    SQL_UNIGRAM_NLL_CTE,
+    Query,
+    bigrams,
+    md5_bucket,
+    unigram_avg_nll,
+)
 
 
 def q_tfidf_top_terms(spark: SparkSession, sf: str) -> DataFrame:
@@ -192,13 +199,7 @@ def q_kneser_ney_logprob(spark: SparkSession, sf: str) -> DataFrame:
     total rides a 1-row broadcast frame; nothing collects."""
     d = table(spark, sf, "documents")
     ts = tokens(F.col("text"))
-    n = F.size(ts)
-    pair_structs = F.zip_with(
-        F.slice(ts, 1, F.greatest(n - 1, F.lit(0))),
-        F.slice(ts, 2, F.greatest(n - 1, F.lit(0))),
-        lambda a, b: F.struct(a.alias("prev"), b.alias("cur")),
-    )
-    pairs = d.select("doc_id", F.explode(pair_structs).alias("b")).select(
+    pairs = d.select("doc_id", F.explode(bigrams(ts)).alias("b")).select(
         "doc_id", "b.prev", "b.cur"
     )
     c2 = (
@@ -396,16 +397,10 @@ def q_ngram_saturation(spark: SparkSession, sf: str) -> DataFrame:
     the corpus."""
     d = table(spark, sf, "documents")
     ts = tokens(F.col("text"))
-    n = F.size(ts)
-    pair_structs = F.zip_with(
-        F.slice(ts, 1, F.greatest(n - 1, F.lit(0))),
-        F.slice(ts, 2, F.greatest(n - 1, F.lit(0))),
-        lambda a, b: F.struct(a.alias("prev"), b.alias("cur")),
-    )
 
     batch = md5_bucket("sat|", F.col("doc_id").cast("string"), SAT_BATCHES)
     grams = d.select(
-        batch.alias("batch"), F.explode(pair_structs).alias("b")
+        batch.alias("batch"), F.explode(bigrams(ts)).alias("b")
     ).select("batch", F.concat_ws(" ", "b.prev", "b.cur").alias("gram"))
     # ONE (batch, gram) cell aggregate (map-side combined) is materialized
     # and both model frames derive from it by exact integer identities
@@ -989,14 +984,8 @@ def q_bigram_logprob(spark: SparkSession, sf: str) -> DataFrame:
     """
     d = table(spark, sf, "documents")
     ts = tokens(F.col("text"))
-    n = F.size(ts)
-    pair_structs = F.zip_with(
-        F.slice(ts, 1, F.greatest(n - 1, F.lit(0))),
-        F.slice(ts, 2, F.greatest(n - 1, F.lit(0))),
-        lambda a, b: F.struct(a.alias("prev"), b.alias("cur")),
-    )
     pairs = (
-        d.select("doc_id", F.explode(pair_structs).alias("b"))
+        d.select("doc_id", F.explode(bigrams(ts)).alias("b"))
         .select("doc_id", "b.prev", "b.cur")
     )
     # 
@@ -1197,13 +1186,7 @@ def q_collocations_pmi(spark: SparkSession, sf: str) -> DataFrame:
     inputs to the single ln are exact integers."""
     d = table(spark, sf, "documents")
     ts = tokens(F.col("text"))
-    n = F.size(ts)
-    pair_structs = F.zip_with(
-        F.slice(ts, 1, F.greatest(n - 1, F.lit(0))),
-        F.slice(ts, 2, F.greatest(n - 1, F.lit(0))),
-        lambda a, b: F.struct(a.alias("prev"), b.alias("cur")),
-    )
-    pairs = d.select(F.explode(pair_structs).alias("b")).select(
+    pairs = d.select(F.explode(bigrams(ts)).alias("b")).select(
         "b.prev", "b.cur"
     )
     tok = d.select(F.explode(ts).alias("term"))
@@ -1303,14 +1286,8 @@ def q_text_conditional_entropy(spark: SparkSession, sf: str) -> DataFrame:
     output in both engines."""
     d = table(spark, sf, "documents")
     ts = tokens(F.col("text"))
-    n = F.size(ts)
-    pair_structs = F.zip_with(
-        F.slice(ts, 1, F.greatest(n - 1, F.lit(0))),
-        F.slice(ts, 2, F.greatest(n - 1, F.lit(0))),
-        lambda a, b: F.struct(a.alias("prev"), b.alias("cur")),
-    )
     pairs = d.select(
-        "lang", F.explode(pair_structs).alias("b")
+        "lang", F.explode(bigrams(ts)).alias("b")
     ).select("lang", "b.prev", "b.cur")
     # ``cells`` feeds three consumers (ctx, tot, joint) — lazily the corpus
     # tokenization + (lang, prev, cur) aggregate was replayed per consumer

@@ -997,7 +997,7 @@ WITH toks AS (
 segs AS (
   -- range bound = 100k segments (1.6M tokens/doc) >> the corpus max
   -- (~100 tokens); the Spark side's sequence() is unbounded, so the
-  -- bound must stay far above any real doc (curation5 precedent)
+  -- bound must stay far above any real doc
   SELECT doc_id, source, CAST(g.i AS INTEGER) AS seg_idx,
     array_to_string(ts[g.i*{SEG_TOKENS}+1 : g.i*{SEG_TOKENS}+{SEG_TOKENS}], ' ') AS seg
   FROM toks, range(0, 100000) g(i)

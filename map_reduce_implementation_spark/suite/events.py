@@ -1014,6 +1014,17 @@ FROM z GROUP BY event_type
 ACF_LAGS = (1, 2, 24)
 
 
+def _hourly_counts(spark: SparkSession, sf: str) -> DataFrame:
+    """DataFrame[h, y]: events per calendar hour, localCheckpoint'd — a
+    frame bounded by the stream's time span, not its volume."""
+    return (
+        table(spark, sf, "events")
+        .groupBy(F.date_trunc("hour", "ts").alias("h"))
+        .agg(F.count(F.lit(1)).alias("y"))
+        .localCheckpoint(eager=True)
+    )
+
+
 def q_events_autocorrelation(spark: SparkSession, sf: str) -> DataFrame:
     """Sample ACF of the hourly event-count series at lags
     {ACF_LAGS}: rₖ = Σ(yₜ−ȳ)(yₜ₊ₖ−ȳ) / Σ(yₜ−ȳ)², pairs matched on
@@ -1027,19 +1038,13 @@ def q_events_autocorrelation(spark: SparkSession, sf: str) -> DataFrame:
     the numerator to integer sums (Σyₜyₜ₊ₖ, Σyₜ, Σyₜ₊ₖ, pair count)
     so both engines do the identical double arithmetic on exact
     inputs; a constant series (zero variance) yields guarded NULLs."""
-    ev = table(spark, sf, "events")
-    hourly = (
-        ev.groupBy(F.date_trunc("hour", "ts").alias("h"))
-        .agg(F.count(F.lit(1)).alias("y"))
-        .localCheckpoint(eager=True)
-    )
+    hourly = _hourly_counts(spark, sf)
     # the scalar-moments aggregate is materialized once (it was replayed per
     # lag branch) and the three per-lag self-joins collapse into ONE join —
     # the a-side explodes each hour row into its |lags| shifted probes and a
     # single lag-keyed aggregate yields every lag's exact integer sums. A
     # literal lag spine left-join keeps zero-pair lags emitting the same
     # (np=0, NULL acf) row the empty per-lag aggregate produced.
-    spark = ev.sparkSession
     scalars = hourly.agg(
         F.count(F.lit(1)).alias("nh"),
         F.sum("y").alias("s"),
@@ -1142,12 +1147,7 @@ def q_events_changepoint_cusum(spark: SparkSession, sf: str) -> DataFrame:
     |hours| rows, the arg-max is a TakeOrderedAndProject(1)."""
     from pyspark.sql import Window
 
-    ev = table(spark, sf, "events")
-    hourly = (
-        ev.groupBy(F.date_trunc("hour", "ts").alias("h"))
-        .agg(F.count(F.lit(1)).alias("y"))
-        .localCheckpoint(eager=True)
-    )
+    hourly = _hourly_counts(spark, sf)
     scalars = hourly.agg(
         F.count(F.lit(1)).alias("nh"), F.sum("y").alias("s")
     )
@@ -1243,12 +1243,7 @@ def q_events_ema_hourly(spark: SparkSession, sf: str) -> DataFrame:
     ROW_NUMBER over it, one aggregate. Weights are pow() doubles of
     exact integer exponents — identical in both engines; ROUND 6
     absorbs summation order."""
-    ev = table(spark, sf, "events")
-    hourly = (
-        ev.groupBy(F.date_trunc("hour", "ts").alias("h"))
-        .agg(F.count(F.lit(1)).alias("y"))
-        .localCheckpoint(eager=True)
-    )
+    hourly = _hourly_counts(spark, sf)
     pos = hourly.select(
         "y", F.row_number().over(Window.orderBy("h")).alias("t")
     )

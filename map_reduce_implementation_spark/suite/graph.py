@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 from ..functions import tokens as _tokens
 from ..operators.graph import pagerank
 from ..sources import table
-from .base import SQL_TOKENS, Query
+from .base import SQL_TOKENS, Query, bigrams
 
 TR_ITERS = 3  # TextRank power iterations (the pagerank default)
 TR_DAMPING = 0.85
@@ -29,17 +29,11 @@ TR_TOP_K = 20  # keywords reported
 
 
 def _word_pairs(spark: SparkSession, sf: str) -> DataFrame:
-    """DataFrame[prev, cur] — adjacent-token pairs per document (the
-    zip_with idiom shared with ``corpus.q_bigram_logprob``)."""
+    """DataFrame[prev, cur] — adjacent-token pairs per document
+    (``base.bigrams``, as in ``corpus.q_bigram_logprob``)."""
     d = table(spark, sf, "documents")
     ts = _tokens(F.col("text"))
-    n = F.size(ts)
-    pair_structs = F.zip_with(
-        F.slice(ts, 1, F.greatest(n - 1, F.lit(0))),
-        F.slice(ts, 2, F.greatest(n - 1, F.lit(0))),
-        lambda a, b: F.struct(a.alias("prev"), b.alias("cur")),
-    )
-    return d.select(F.explode(pair_structs).alias("b")).select(
+    return d.select(F.explode(bigrams(ts)).alias("b")).select(
         "b.prev", "b.cur"
     )
 

@@ -257,19 +257,19 @@ def q_multimodal_png_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     the real PNG decoder (zlib inflate + scanline unfilter). The oracle
     recomputes width/height/mean closed-form in SQL, so a bug anywhere
     in chunk layout, compression, filtering, or pixel math fails the
-    hash — this is decode_stub's real-media path under driver grading."""
-    from ..operators.multimodal import decode_stub, with_png_payload
+    hash — this is ``decode_media``'s PNG arm under driver grading."""
+    from ..operators.multimodal import decode_media, with_png_payload
 
     d = table(spark, sf, "documents").select(
         "doc_id", F.octet_length("text").alias("byte_len")
     )
-    dec = decode_stub(with_png_payload(d))
+    dec = decode_media(with_png_payload(d))
     return dec.select(
         "doc_id",
         "width",
         "height",
         "n_channels",
-        F.round("mean_intensity", 6).alias("mean_intensity"),
+        F.round("stat", 6).alias("mean_intensity"),
     )
 
 
@@ -297,12 +297,12 @@ def q_multimodal_wav_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     """REAL audio round trip: mono int16 PCM WAV written by the RIFF
     encoder (deterministic sample pattern), parsed back by the real
     RIFF/fmt/data walker; RMS recomputed closed-form by the oracle."""
-    from ..operators.multimodal import audio_decode_stub, with_wav_payload
+    from ..operators.multimodal import decode_media, with_wav_payload
 
     d = table(spark, sf, "documents").select("doc_id")
-    dec = audio_decode_stub(with_wav_payload(d))
+    dec = decode_media(with_wav_payload(d))
     return dec.select(
-        "doc_id", "sample_rate", "n_samples", F.round("rms", 6).alias("rms")
+        "doc_id", "sample_rate", "n_samples", F.round("stat", 6).alias("rms")
     )
 
 
@@ -324,19 +324,18 @@ def q_multimodal_audio_decode(spark: SparkSession, sf: str) -> DataFrame:
     kernel, so only the audio third of the lake is synthesized/decoded;
     payloads are REAL RIFF/WAVE (deterministic PCM pattern) parsed by
     the real chunk walker, and rate/sample-count/RMS are recomputed
-    closed-form by the oracle. The int8-PCM fallback arm of
-    ``audio_decode_stub`` (for non-RIFF bytes) remains determinism-
-    tested in tests/test_multimodal_codec.py."""
+    closed-form by the oracle. The decode is ``decode_media``'s RIFF
+    arm."""
     from ..operators.multimodal import (
-        audio_decode_stub,
+        decode_media,
         with_media_metadata,
         with_wav_payload,
     )
 
     d = with_media_metadata(with_binary_payload(table(spark, sf, "documents")))
     aud = d.filter(F.col("media.modality") == "audio").select("doc_id")
-    out = audio_decode_stub(with_wav_payload(aud))
-    return out.select("doc_id", "sample_rate", "n_samples", F.round("rms", 6).alias("rms"))
+    out = decode_media(with_wav_payload(aud))
+    return out.select("doc_id", "sample_rate", "n_samples", F.round("stat", 6).alias("rms"))
 
 
 SQL_MULTIMODAL_AUDIO_DECODE = """

@@ -22,7 +22,16 @@ from pyspark.sql import functions as F
 
 from ..functions import tokens
 from ..sources import table
-from .base import QUERY_VEC_ID, SQL_TOKENS, STOPWORDS_EN, Query, dec, query_vec, shingles
+from .base import (
+    QUERY_VEC_ID,
+    SQL_TOKENS,
+    STOPWORDS_EN,
+    Query,
+    bigrams,
+    dec,
+    query_vec,
+    shingles,
+)
 
 
 def q_text_novelty_score(spark: SparkSession, sf: str) -> DataFrame:
@@ -647,14 +656,8 @@ def q_bleu_precision(spark: SparkSession, sf: str) -> DataFrame:
     lang-keyed over bigram types. Integer masses; one division."""
     d = table(spark, sf, "documents")
     ts = tokens(F.col("text"))
-    n = F.size(ts)
-    pair_structs = F.zip_with(
-        F.slice(ts, 1, F.greatest(n - 1, F.lit(0))),
-        F.slice(ts, 2, F.greatest(n - 1, F.lit(0))),
-        lambda a, b: F.struct(a.alias("prev"), b.alias("cur")),
-    )
     grams = d.select(
-        "lang", F.explode(pair_structs).alias("b")
+        "lang", F.explode(bigrams(ts)).alias("b")
     ).select("lang", F.concat_ws(" ", "b.prev", "b.cur").alias("gram"))
     counts = (
         grams.groupBy("lang", "gram")

@@ -1,6 +1,6 @@
 """Corpus statistics (``suite.corpus``): Python and numpy replays of the
-language-model, entropy, information and Zipf queries, and their
-degenerate-corpus guards."""
+language-model, entropy, information, readability, burstiness and
+Zipf/Good-Turing queries, and their degenerate-corpus guards."""
 
 from __future__ import annotations
 
@@ -11,6 +11,7 @@ import re
 import duckdb
 import numpy as np
 import pandas as pd
+import pytest
 
 from map_reduce_implementation_spark.sources import table
 from map_reduce_implementation_spark.suite import all_queries
@@ -366,3 +367,142 @@ def test_kneser_ney_short_docs(spark, tmp_path):
     assert list(odf["doc_id"]) == [1]
     assert got[0]["n_bigrams"] == int(odf["n_bigrams"][0]) == 4
     assert abs(got[0]["avg_nll_kn"] - odf["avg_nll_kn"][0]) < 1e-12
+
+
+def _write(tmp_path, name, pdf):
+    path = str(tmp_path / f"{name}.parquet")
+    pdf.to_parquet(path)
+    return path
+
+
+def _docs(tmp_path, rows):
+    return _write(
+        tmp_path,
+        "documents",
+        pd.DataFrame(rows, columns=["doc_id", "text", "lang", "source", "n_chars"]),
+    )
+
+
+def test_readability_no_tokens(spark, tmp_path):
+    """A language whose only doc has zero [a-z0-9] tokens → flesch
+    NULL in both engines (the Σw = 0 guard), other languages score."""
+    from map_reduce_implementation_spark.suite.corpus import SQL_TEXT_READABILITY
+
+    p = _docs(
+        tmp_path,
+        [
+            (1, "!!! ???", "xx", "s0", 7),
+            (2, "A plain sentence here. And one more!", "en", "s0", 36),
+        ],
+    )
+    out = {
+        r["lang"]: r
+        for r in QS["text_readability"].build(spark, str(tmp_path)).collect()
+    }
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{p}'")
+    odf = con.execute(SQL_TEXT_READABILITY).df().set_index("lang")
+    assert out["xx"]["flesch_score"] is None
+    assert pd.isna(odf.loc["xx", "flesch_score"])
+    assert out["en"]["flesch_score"] == pytest.approx(
+        float(odf.loc["en", "flesch_score"])
+    )
+    # closed-form spot check: 7 words, 2 sentences, syllable groups
+    w, s, syl = (
+        out["en"]["n_words"],
+        out["en"]["n_sentences"],
+        out["en"]["n_syllables"],
+    )
+    assert (w, s) == (7, 2)
+    expected = 206.835 - 1.015 * (w / s) - 84.6 * (syl / w)
+    assert out["en"]["flesch_score"] == pytest.approx(expected, abs=1e-6)
+
+
+def test_good_turing_single_term(spark, tmp_path):
+    """Single repeated term: N₁ = 0 → p0 = 0 and rstar_1 NULL in both
+    engines (no 0/0); the N₂-backed rstar also guards."""
+    from map_reduce_implementation_spark.suite.corpus import _gt_oracle
+
+    p = _docs(tmp_path, [(1, "word word word", "en", "s0", 14)])
+    r = QS["corpus_good_turing"].build(spark, str(tmp_path)).collect()[0]
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{p}'")
+    o = con.execute(_gt_oracle()).df().iloc[0]
+    assert r["n_tokens"] == int(o["n_tokens"]) == 3
+    assert r["vocab"] == int(o["vocab"]) == 1
+    assert r["p0_unseen"] == float(o["p0_unseen"]) == 0.0
+    for col in ("rstar_1", "rstar_2"):  # N1 = N2 = 0 -> guarded NULL
+        assert r[col] is None and pd.isna(o[col]), col
+    # N3 = 1 > 0 but N4 = 0 -> rstar_3 is a real 0, not NULL
+    assert r["rstar_3"] == float(o["rstar_3"]) == 0.0
+
+
+def test_jsd_bounds_and_identity(spark, tmp_path):
+    """JSD(p, p) = 0 for identical sources; disjoint-vocabulary
+    sources hit the ln 2 upper bound — in BOTH engines."""
+    from map_reduce_implementation_spark.suite.corpus import SQL_CORPUS_JSD_SOURCES
+
+    p = _docs(
+        tmp_path,
+        [
+            (1, "alpha beta alpha", "en", "sA", 16),
+            (2, "alpha beta alpha", "en", "sB", 16),
+            (3, "gamma delta gamma", "en", "sC", 17),
+        ],
+    )
+    rows = {
+        (r["source_a"], r["source_b"]): r["jsd_nats"]
+        for r in QS["corpus_jsd_sources"].build(spark, str(tmp_path)).collect()
+    }
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{p}'")
+    odf = con.execute(SQL_CORPUS_JSD_SOURCES).df()
+    orows = {
+        (a, b): v
+        for a, b, v in zip(odf["source_a"], odf["source_b"], odf["jsd_nats"])
+    }
+    assert rows == {k: pytest.approx(v) for k, v in orows.items()}
+    assert rows[("sA", "sB")] == 0.0
+    assert rows[("sA", "sC")] == pytest.approx(math.log(2), abs=1e-6)
+
+
+def test_burstiness_ratio_and_floor(spark, tmp_path):
+    """cf/df orders bursty terms first; terms under the df floor are
+    excluded entirely in both engines."""
+    from map_reduce_implementation_spark.suite.corpus import SQL_TERM_BURSTINESS
+
+    docs = [(i, "common bursty bursty bursty" if i == 0 else "common", "en", "s0", 20)
+            for i in range(5)]
+    p = _docs(tmp_path, docs)
+    rows = QS["term_burstiness"].build(spark, str(tmp_path)).collect()
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{p}'")
+    odf = con.execute(SQL_TERM_BURSTINESS).df()
+    # 'bursty' has df=1 < 5 -> excluded; only 'common' (df=5, cf=5) stays
+    assert [r["term"] for r in rows] == odf["term"].tolist() == ["common"]
+    assert rows[0]["burstiness"] == float(odf["burstiness"].iloc[0]) == 1.0
+
+
+def test_conditional_entropy_degenerate(spark, tmp_path):
+    """A language whose docs have <2 tokens drops from the output; a
+    single-repeated-bigram language scores exactly 0 on every entropy
+    column in both engines."""
+    from map_reduce_implementation_spark.suite.corpus import SQL_TEXT_CONDITIONAL_ENTROPY
+
+    p = _docs(
+        tmp_path,
+        [
+            (1, "one", "xx", "s0", 3),           # no bigrams -> drops
+            (2, "ab ab ab ab", "yy", "s0", 11),  # one bigram type
+        ],
+    )
+    rows = {r["lang"]: r for r in QS["text_conditional_entropy"].build(spark, str(tmp_path)).collect()}
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{p}'")
+    odf = con.execute(SQL_TEXT_CONDITIONAL_ENTROPY).df().set_index("lang")
+    assert set(rows) == set(odf.index) == {"yy"}
+    r = rows["yy"]
+    assert r["n_bigrams"] == 3
+    assert r["h_joint"] == r["h_context"] == r["h_rate"] == 0.0
+    assert r["perplexity"] == 1.0
+    assert float(odf.loc["yy", "h_rate"]) == 0.0

@@ -1,5 +1,6 @@
 """Deduplication queries (``suite.dedup``): span and line cuts, prefix
-filtering and incremental dedup, against Python replays."""
+filtering, incremental dedup, cluster census and the LSH band-geometry
+table, against Python replays."""
 
 from __future__ import annotations
 
@@ -140,3 +141,99 @@ def test_incremental_dedup_python_replay(spark):
         assert r["is_kept"] == (
             not r["is_exact_dup"] and r["near_dup_of"] is None
         ), r
+
+
+def _docs(spark):
+    from map_reduce_implementation_spark.sources import table
+
+    return sorted(
+        table(spark, SF0001, "documents").select(
+            "doc_id", "text", "lang", "source"
+        ).collect(),
+        key=lambda r: r["doc_id"],
+    )
+
+
+def test_cluster_stats_census_totals(spark):
+    """The census totals to the corpus: Σ n_docs == |documents|,
+    Σ n_clusters == distinct texts, Σ excess == docs dedup would drop
+    (cross-checked against dedup_exact), shares sum to 1."""
+    docs = _docs(spark)
+    from collections import Counter
+
+    sizes = Counter(Counter(r["text"] for r in docs).values())
+    rows = QS["dedup_cluster_stats"].build(spark, SF0001).collect()
+    assert {r["cluster_size"]: r["n_clusters"] for r in rows} == dict(sizes)
+    assert sum(r["n_docs"] for r in rows) == len(docs)
+    n_texts = len({r["text"] for r in docs})
+    assert sum(r["n_clusters"] for r in rows) == n_texts
+    assert sum(r["excess_docs"] for r in rows) == len(docs) - n_texts
+    assert abs(sum(r["corpus_share"] for r in rows) - 1.0) < 1e-4
+    exact = QS["dedup_exact"].build(spark, SF0001).collect()
+    assert sum(r["n_copies"] - 1 for r in exact) == sum(
+        r["excess_docs"] for r in rows
+    )
+
+
+def test_band_analysis_python_replay_and_monotone(spark):
+    """A pure-Python replay of the capped posting-list pair scan and
+    the S-curve P = 1-(1-J^r)^b reproduces every config's expected
+    counts; recall decreases as rows-per-band sharpens the curve."""
+    from collections import defaultdict
+    from itertools import combinations
+
+    from map_reduce_implementation_spark.suite.dedup import (
+        BAND_CONFIGS,
+        TUNE_MAX_DF,
+        TUNE_TARGET_J,
+    )
+
+    docs = _docs(spark)
+    doc_sh: dict[int, set[str]] = {}
+    posting = defaultdict(set)
+    for r in docs:
+        ts = _tokens(r["text"])
+        sh = {" ".join(ts[i : i + 5]) for i in range(len(ts) - 4)}
+        doc_sh[r["doc_id"]] = sh
+        for s in sh:
+            posting[s].add(r["doc_id"])
+    inter: dict[tuple[int, int], int] = defaultdict(int)
+    for s, ds in posting.items():
+        if 2 <= len(ds) <= TUNE_MAX_DF:
+            for a, b in combinations(sorted(ds), 2):
+                inter[(a, b)] += 1
+    js = [
+        i / (len(doc_sh[a]) + len(doc_sh[b]) - i)
+        for (a, b), i in inter.items()
+    ]
+    expect = {}
+    for r_, b_ in BAND_CONFIGS:
+        eh = sum(
+            round(1 - (1 - j**r_) ** b_, 9) for j in js if j >= TUNE_TARGET_J
+        )
+        el = sum(
+            round(1 - (1 - j**r_) ** b_, 9) for j in js if j < TUNE_TARGET_J
+        )
+        expect[(r_, b_)] = (
+            sum(1 for j in js if j >= TUNE_TARGET_J),
+            sum(1 for j in js if j < TUNE_TARGET_J),
+            eh,
+            el,
+        )
+
+    rows = sorted(
+        QS["minhash_band_analysis"].build(spark, SF0001).collect(),
+        key=lambda r: r["r"],
+    )
+    assert [(r["r"], r["bands"]) for r in rows] == sorted(BAND_CONFIGS)
+    for r in rows:
+        n_high, n_low, eh, el = expect[(r["r"], r["bands"])]
+        assert (r["n_high"], r["n_low"]) == (n_high, n_low)
+        assert abs(r["exp_found_high"] - eh) < 1e-4
+        assert abs(r["exp_found_low"] - el) < 1e-4
+        assert 0.0 <= r["expected_recall"] <= 1.0
+        assert r["expected_false_rate"] <= r["expected_recall"]
+    # sharper curves (more rows per band) trade recall down
+    recalls = [r["expected_recall"] for r in rows]  # ordered by r asc
+    assert recalls == sorted(recalls, reverse=True)
+    assert recalls[0] > 0.99  # the loosest config should catch ~all

@@ -7,6 +7,7 @@ from __future__ import annotations
 import math
 import re
 
+import duckdb
 import numpy as np
 import pandas as pd
 import pytest
@@ -898,3 +899,149 @@ def test_two_stage_ranks_and_candidate_containment(spark):
         for r in rs:
             assert cell_of(emb[r["vec_id"]]) in probe, (qid, r["vec_id"])
         assert sims[0] <= round(exact_best, 9) + 1e-9
+
+
+def test_threshold_sweep_monotone_and_matches_dedup(spark):
+    """Pair/doc counts are monotone non-increasing in the threshold,
+    and the 35% row prices EXACTLY what dedup_embedding_cosine commits
+    (same blocked pairs, same keep rule)."""
+    rows = sorted(
+        QS["similarity_threshold_sweep"].build(spark, SF0001).collect(),
+        key=lambda r: r["threshold_pct"],
+    )
+    assert [r["threshold_pct"] for r in rows] == [25, 30, 35, 40]
+    for a, b in zip(rows, rows[1:]):
+        assert a["n_pairs"] >= b["n_pairs"]
+        assert a["n_dup_docs"] >= b["n_dup_docs"]
+    assert rows[0]["n_pairs"] > 0  # loosest threshold sees candidates
+    dedup = QS["dedup_embedding_cosine"].build(spark, SF0001).collect()
+    at35 = next(r for r in rows if r["threshold_pct"] == 35)
+    assert at35["n_dup_docs"] == len({r["dup_vec_id"] for r in dedup})
+
+
+def test_index_delta_python_replay(spark):
+    """A numpy replay of the first-k quantizer and both assignments
+    reproduces every cell's occupancy; the delta batch never moves a
+    standing vector, totals tie out, and the split flag is the exact
+    integer rule."""
+    import numpy as np
+
+    from map_reduce_implementation_spark.sources import table
+    from map_reduce_implementation_spark.suite.similarity import DELTA_CELLS, DELTA_MOD
+
+    emb = sorted(
+        table(spark, SF0001, "embeddings").collect(), key=lambda r: r["vec_id"]
+    )
+    standing = [r for r in emb if r["vec_id"] % DELTA_MOD != 0]
+    delta = [r for r in emb if r["vec_id"] % DELTA_MOD == 0]
+    cents = np.array(
+        [[float(x) for x in r["embedding"]] for r in standing[:DELTA_CELLS]]
+    )
+
+    def assign(rows):
+        counts = [0] * DELTA_CELLS
+        for r in rows:
+            v = np.array([float(x) for x in r["embedding"]])
+            d2 = ((cents - v) ** 2).sum(axis=1)
+            counts[int(np.argmin(d2))] += 1  # ties: lowest index (argmin)
+        return counts
+
+    n_old, n_new = assign(standing), assign(delta)
+    rows = {r["cell"]: r for r in
+            QS["similarity_index_delta"].build(spark, SF0001).collect()}
+    total = sum(n_old) + sum(n_new)
+    for c in range(DELTA_CELLS):
+        if n_old[c] == 0 and n_new[c] == 0:
+            assert c not in rows  # a cell nothing was ever assigned to
+            continue
+        r = rows[c]
+        assert (r["n_old"], r["n_new"]) == (n_old[c], n_new[c])
+        assert r["n_total"] == n_old[c] + n_new[c]
+        if n_old[c] == 0:
+            assert r["growth"] is None  # standing-empty cell: no ratio
+        assert r["split_candidate"] == (
+            (n_old[c] + n_new[c]) * DELTA_CELLS > 2 * total
+        )
+    # the full-outer report loses NO arrivals and NO standing members
+    assert sum(r["n_old"] for r in rows.values()) == len(standing)
+    assert sum(r["n_new"] for r in rows.values()) == len(delta)
+
+
+def test_matryoshka_recall_numpy_replay(spark):
+    """A numpy replay of the per-prefix truncated-cosine rankings
+    reproduces every recall, and the full-dim row is exactly 1.0.
+    (Recall is NOT monotone in prefix length on this random fixture —
+    sf0.001 reads 0.2/0.1/0.0/1.0 — because untrained embeddings have
+    no MRL structure; only the exact per-dim hit counts are asserted.)"""
+    import numpy as np
+
+    from map_reduce_implementation_spark.sources import table
+    from map_reduce_implementation_spark.suite.base import QUERY_VEC_ID
+    from map_reduce_implementation_spark.suite.similarity import TOP_K
+    from map_reduce_implementation_spark.suite.similarity import MRL_DIMS
+
+    emb = sorted(
+        table(spark, SF0001, "embeddings").collect(), key=lambda r: r["vec_id"]
+    )
+    vecs = {r["vec_id"]: np.array([float(x) for x in r["embedding"]])
+            for r in emb}
+    qv = vecs[QUERY_VEC_ID]
+
+    def topk(d):
+        sims = []
+        for vid, v in vecs.items():
+            if vid == QUERY_VEC_ID:
+                continue
+            a, b = v[:d], qv[:d]
+            s = round(float(a @ b / (np.linalg.norm(a) * np.linalg.norm(b))), 9)
+            sims.append((-s, vid))
+        return {vid for _, vid in sorted(sims)[:TOP_K]}
+
+    full = topk(max(MRL_DIMS))
+    rows = {r["dim"]: r for r in
+            QS["similarity_matryoshka_recall"].build(spark, SF0001).collect()}
+    assert set(rows) == set(MRL_DIMS)
+    for d in MRL_DIMS:
+        expect = len(topk(d) & full)
+        assert rows[d]["hits"] == expect
+        assert abs(rows[d]["recall_at_k"] - expect / TOP_K) < 1e-9
+    assert rows[max(MRL_DIMS)]["recall_at_k"] == 1.0
+
+
+def _write(tmp_path, name, pdf):
+    path = str(tmp_path / f"{name}.parquet")
+    pdf.to_parquet(path)
+    return path
+
+
+def _docs(tmp_path, rows):
+    return _write(
+        tmp_path,
+        "documents",
+        pd.DataFrame(rows, columns=["doc_id", "text", "lang", "source", "n_chars"]),
+    )
+
+
+def test_cluster_representatives_keep_best(spark, tmp_path):
+    """Two near-dup docs of different lengths: the representative is
+    the LONGER one (not the min id), singletons don't appear, and the
+    Spark iterative CC matches the recursive-CTE oracle."""
+    from map_reduce_implementation_spark.suite.dedup import SQL_DEDUP_CLUSTER_REPRESENTATIVES
+
+    a = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    b = a + " lambda"  # same 5-shingle prefix set, J >= 0.5, longer
+    p = _docs(
+        tmp_path,
+        [(1, a, "en", "s0", len(a)), (2, b, "en", "s0", len(b)),
+         (3, "totally unrelated content words here", "en", "s0", 36)],
+    )
+    rows = QS["dedup_cluster_representatives"].build(spark, str(tmp_path)).collect()
+    assert len(rows) == 1
+    r = rows[0]
+    assert r["cluster_id"] == 1 and r["rep_doc_id"] == 2
+    assert r["cluster_size"] == 2
+    assert (r["min_n_chars"], r["max_n_chars"]) == (len(a), len(b))
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{p}'")
+    o = con.execute(SQL_DEDUP_CLUSTER_REPRESENTATIVES).df().iloc[0]
+    assert int(o["rep_doc_id"]) == 2 and int(o["cluster_size"]) == 2

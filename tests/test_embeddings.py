@@ -1,11 +1,13 @@
 """Embedding queries (``suite.embeddings``): int8 quantisation error,
-Mahalanobis outliers and whitening."""
+Mahalanobis outliers, whitening and centroid drift."""
 
 from __future__ import annotations
 
 import math
 
+import duckdb
 import numpy as np
+import pandas as pd
 
 from map_reduce_implementation_spark.sources import table
 from map_reduce_implementation_spark.suite import all_queries
@@ -88,3 +90,42 @@ def test_whitening_standardizes(spark):
     norms = np.asarray([r["whitened_norm"] for r in rows])
     # E[||w||^2] == DIM by construction (sum of unit variances)
     assert abs((norms**2).mean() - 64.0) < 1.0
+
+
+def _write(tmp_path, name, pdf):
+    path = str(tmp_path / f"{name}.parquet")
+    pdf.to_parquet(path)
+    return path
+
+
+def test_centroid_drift_planted_shift(spark, tmp_path):
+    """A label whose odd half is shifted +1 on dim 0 reads exactly
+    l2_shift 1.0; an identical-halves label reads 0 with cosine 1;
+    a label present in one half only is excluded — in both engines."""
+    from map_reduce_implementation_spark.suite.embeddings import SQL_EMBEDDING_CENTROID_DRIFT
+
+    rows = []
+    for i in range(4):  # label 0: even half [1,0], odd half [2,0]
+        rows.append((i, [1.0 + (i % 2), 0.0], 0))
+    for i in range(4, 8):  # label 1: identical halves [0,3]
+        rows.append((i, [0.0, 3.0], 1))
+    rows.append((8, [5.0, 5.0], 2))  # label 2: even half only
+    p = _write(
+        tmp_path,
+        "embeddings",
+        pd.DataFrame(rows, columns=["vec_id", "embedding", "label"]),
+    )
+    out = {
+        r["label"]: r
+        for r in QS["embedding_centroid_drift"].build(spark, str(tmp_path)).collect()
+    }
+    assert set(out) == {0, 1}
+    assert out[0]["centroid_l2_shift"] == 1.0
+    assert out[1]["centroid_l2_shift"] == 0.0
+    assert out[1]["centroid_cosine"] == 1.0
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW embeddings AS SELECT * FROM '{p}'")
+    odf = con.execute(SQL_EMBEDDING_CENTROID_DRIFT).df().set_index("label")
+    assert set(odf.index) == {0, 1}
+    assert float(odf.loc[0, "centroid_l2_shift"]) == 1.0
+    assert float(odf.loc[1, "centroid_cosine"]) == 1.0

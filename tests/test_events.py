@@ -1,8 +1,9 @@
-"""Event time-series queries (``suite.events``): autocorrelation, CUSUM
-and bursts."""
+"""Event time-series queries (``suite.events``): autocorrelation, CUSUM,
+bursts, inter-arrival gaps, EMA and churn hazard."""
 
 from __future__ import annotations
 
+import duckdb
 import numpy as np
 import pandas as pd
 
@@ -161,3 +162,88 @@ def test_burst_zscore_pandas_crosscheck(spark):
             assert r["max_z"] is None
         else:
             assert abs(r["max_z"] - round(max_z, 6)) < 1e-9, t
+
+
+def _write(tmp_path, name, pdf):
+    path = str(tmp_path / f"{name}.parquet")
+    pdf.to_parquet(path)
+    return path
+
+
+def _events(tmp_path, rows):
+    return _write(
+        tmp_path,
+        "events",
+        pd.DataFrame(
+            rows, columns=["event_id", "ts", "user_id", "event_type", "value", "props"]
+        ),
+    )
+
+
+def test_interarrival_zero_and_empty_gaps(spark, tmp_path):
+    """All-same-second events → Σg = 0 → cv/rate/loglik NULL in BOTH
+    engines (not a ln(0)=-inf vs NULL divergence); single-event users
+    produce no gaps at all → NULL row, not a crash."""
+    from map_reduce_implementation_spark.suite.events import SQL_EVENTS_INTERARRIVAL
+
+    t = pd.Timestamp("2024-01-01 00:00:00.500000")
+    p = _events(
+        tmp_path,
+        [(1, t, 7, "a", 0.0, "{}"), (2, t, 7, "a", 0.0, "{}"), (3, t, 9, "a", 0.0, "{}")],
+    )
+    r = QS["events_interarrival"].build(spark, str(tmp_path)).collect()[0]
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM '{p}'")
+    o = con.execute(SQL_EVENTS_INTERARRIVAL).df().iloc[0]
+    assert r["n_gaps"] == int(o["n_gaps"]) == 1
+    assert r["mean_gap_s"] == float(o["mean_gap_s"]) == 0.0
+    for col in ("cv", "mle_rate", "exp_loglik"):
+        assert r[col] is None and pd.isna(o[col]), col
+
+
+def test_ema_single_hour_and_constant_series(spark, tmp_path):
+    """One hour → EMA = y exactly (seed weight 1); a constant series →
+    EMA = level and ema_minus_mean = 0 in both engines."""
+    from map_reduce_implementation_spark.suite.events import SQL_EVENTS_EMA_HOURLY
+
+    rows = [(1, pd.Timestamp("2024-01-01 05:10:00"), 1, "a", 0.0, "{}")]
+    p = _events(tmp_path, rows)
+    r = QS["events_ema_hourly"].build(spark, str(tmp_path)).collect()[0]
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM '{p}'")
+    o = con.execute(SQL_EVENTS_EMA_HOURLY).df().iloc[0]
+    assert r["n_hours"] == int(o["n_hours"]) == 1
+    assert r["ema"] == float(o["ema"]) == 1.0
+
+    sub = tmp_path / "const"
+    sub.mkdir()
+    rows2 = [
+        (i, pd.Timestamp(f"2024-01-01 {h:02d}:00:00"), 1, "a", 0.0, "{}")
+        for i, h in enumerate(range(5))
+    ]
+    p2 = _events(sub, rows2)
+    r2 = QS["events_ema_hourly"].build(spark, str(sub)).collect()[0]
+    con2 = duckdb.connect()
+    con2.execute(f"CREATE VIEW events AS SELECT * FROM '{p2}'")
+    o2 = con2.execute(SQL_EVENTS_EMA_HOURLY).df().iloc[0]
+    assert r2["ema"] == float(o2["ema"]) == 1.0
+    assert r2["ema_minus_mean"] == float(o2["ema_minus_mean"]) == 0.0
+
+
+def test_churn_hazard_planted_gaps(spark, tmp_path):
+    """Gaps of 30 min, 2 h, and 2 days: exceedance shares walk down
+    the thresholds as exact integer ratios in both engines."""
+    from map_reduce_implementation_spark.suite.events import _hazard_oracle
+
+    t0 = pd.Timestamp("2024-01-01 00:00:00")
+    ts = [t0, t0 + pd.Timedelta(minutes=30), t0 + pd.Timedelta(minutes=30) + pd.Timedelta(hours=2),
+          t0 + pd.Timedelta(minutes=30) + pd.Timedelta(hours=2) + pd.Timedelta(days=2)]
+    p = _events(tmp_path, [(i, t, 1, "a", 0.0, "{}") for i, t in enumerate(ts)])
+    rows = {r["threshold_s"]: r for r in QS["events_churn_hazard"].build(spark, str(tmp_path)).collect()}
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM '{p}'")
+    odf = con.execute(_hazard_oracle()).df().set_index("threshold_s")
+    assert rows[3600]["n_exceed"] == int(odf.loc[3600, "n_exceed"]) == 2
+    assert rows[86400]["n_exceed"] == int(odf.loc[86400, "n_exceed"]) == 1
+    assert rows[259200]["n_exceed"] == 0
+    assert rows[3600]["exceed_share"] == float(odf.loc[3600, "exceed_share"]) == 2 / 3

@@ -1,6 +1,8 @@
-"""Semantic invariants for the round-5 governance wave — Python-replay
-checks proving the audits compute the RIGHT thing (the oracle gate only
-proves Spark == DuckDB)."""
+"""Governance and drift audits (``suite.quality``, ``suite.curation``,
+``suite.embeddings``): split leakage, k-anonymity, label noise,
+classifier buckets, drift, calibration and duplication inflation —
+Python-replay checks proving the audits compute the RIGHT thing (the
+oracle gate only proves Spark == DuckDB)."""
 
 from __future__ import annotations
 
@@ -374,3 +376,215 @@ def test_anomaly_mad_numpy_crosscheck(spark):
         assert abs(r["median_value"] - round(med, 9)) < 1e-12
         assert abs(r["mad"] - round(mad, 9)) < 1e-12
         assert r["n_outliers"] == n_out, t
+
+
+def test_classifier_apply_bucket_bounds_and_totals(spark):
+    """Bucket populations cover the corpus exactly once, bucket ids
+    are deciles, each bucket's mean sits inside its own bounds, and
+    positives total the corpus positives."""
+    from map_reduce_implementation_spark.sources import table
+
+    emb = table(spark, SF0001, "embeddings").collect()
+    rows = QS["quality_classifier_apply"].build(spark, SF0001).collect()
+    assert sum(r["n"] for r in rows) == len(emb)
+    assert sum(r["n_pos"] for r in rows) == sum(
+        1 for r in emb if r["label"] % 2 == 1
+    )
+    for r in rows:
+        assert 0 <= r["bucket"] <= 9
+        assert r["bucket"] / 10 - 1e-6 <= r["mean_score"] <= (r["bucket"] + 1) / 10 + 1e-6
+        assert 0 <= r["n_pos"] <= r["n"]
+
+
+def F_unix_micros_col():
+    from pyspark.sql import functions as F
+
+    return F.unix_micros("ts").alias("us")
+
+
+def test_drift_psi_python_replay(spark):
+    """A numpy replay (median split, reference deciles, Laplace
+    smoothing, term-by-term PSI) reproduces every type's PSI; PSI is
+    non-negative by construction."""
+    import numpy as np
+
+    from map_reduce_implementation_spark.sources import table
+    from map_reduce_implementation_spark.suite.quality import PSI_BINS
+
+    rows = table(spark, SF0001, "events").select(
+        "event_type", "value", F_unix_micros_col()
+    ).collect()
+    us = np.array([r["us"] for r in rows], dtype=np.float64)
+    m = np.percentile(us, 50, method="linear")
+    by_type: dict[str, tuple[list, list]] = {}
+    for r, u in zip(rows, us):
+        ref, cur = by_type.setdefault(r["event_type"], ([], []))
+        (ref if u < m else cur).append(r["value"])
+    out = {r["event_type"]: r for r in QS["events_drift_psi"].build(spark, SF0001).collect()}
+    assert set(out) == set(by_type)
+    for t, (ref, cur) in by_type.items():
+        cuts = np.percentile(
+            np.array(ref), [100 * i / PSI_BINS for i in range(1, PSI_BINS)],
+            method="linear",
+        )
+        def bins(vals):
+            c = [0] * PSI_BINS
+            for v in vals:
+                c[int(np.sum(v >= cuts))] += 1
+            return c
+        br, bc = bins(ref), bins(cur)
+        psi = 0.0
+        for i in range(PSI_BINS):
+            pr = (br[i] + 0.5) / (len(ref) + PSI_BINS * 0.5)
+            pc = (bc[i] + 0.5) / (len(cur) + PSI_BINS * 0.5)
+            psi += (pc - pr) * np.log(pc / pr)
+        r = out[t]
+        assert (r["n_ref"], r["n_cur"]) == (len(ref), len(cur))
+        assert abs(r["psi"] - psi) < 1e-6
+        assert r["psi"] >= 0.0
+        assert r["drifted"] == (r["psi"] >= 0.1)
+
+
+def test_drift_ks_python_replay(spark):
+    """A pure-Python two-sample empirical-CDF max-difference reproduces
+    every type's KS D; D is within [0, 1]."""
+    import numpy as np
+
+    from map_reduce_implementation_spark.sources import table
+
+    rows = table(spark, SF0001, "events").select(
+        "event_type", "value", F_unix_micros_col()
+    ).collect()
+    us = np.array([r["us"] for r in rows], dtype=np.float64)
+    m = np.percentile(us, 50, method="linear")
+    by_type: dict[str, tuple[list, list]] = {}
+    for r, u in zip(rows, us):
+        ref, cur = by_type.setdefault(r["event_type"], ([], []))
+        (ref if u < m else cur).append(r["value"])
+    out = {r["event_type"]: r for r in QS["events_drift_ks"].build(spark, SF0001).collect()}
+    for t, (ref, cur) in by_type.items():
+        vals = sorted(set(ref) | set(cur))
+        ra, ca = np.array(sorted(ref)), np.array(sorted(cur))
+        d = max(
+            abs(
+                np.searchsorted(ra, v, side="right") / len(ref)
+                - np.searchsorted(ca, v, side="right") / len(cur)
+            )
+            for v in vals
+        )
+        r = out[t]
+        assert (r["n_ref"], r["n_cur"]) == (len(ref), len(cur))
+        assert abs(r["ks_d"] - d) < 1e-9
+        assert 0.0 <= r["ks_d"] <= 1.0
+        assert r["drifted"] == (r["ks_d"] >= 0.05)
+
+
+def test_calibration_report_consistency(spark):
+    """The calibration table is consistent with the apply half (same
+    buckets, same populations), gaps equal mean_predicted −
+    frac_positive, ECE contributions are |gap|-weighted populations,
+    and the summed ECE is within [0, 1]."""
+    rows = {r["bucket"]: r for r in
+            QS["quality_calibration_report"].build(spark, SF0001).collect()}
+    apply_rows = {r["bucket"]: r for r in
+                  QS["quality_classifier_apply"].build(spark, SF0001).collect()}
+    assert set(rows) == set(apply_rows)
+    total = sum(r["n"] for r in rows.values())
+    ece = 0.0
+    for b, r in rows.items():
+        assert r["n"] == apply_rows[b]["n"]
+        assert abs(r["gap"] - (r["mean_predicted"] - r["frac_positive"])) < 2e-6
+        assert abs(r["ece_contrib"] - abs(r["gap"]) * r["n"] / total) < 1e-5
+        assert 0.0 <= r["frac_positive"] <= 1.0
+        ece += r["ece_contrib"]
+    assert 0.0 <= ece <= 1.0
+
+
+def test_drift_nulls_and_new_types_match_oracle(spark, tmp_path):
+    """Regression for the two drift edge cases the shipped data never
+    exercises: NULL values must not move the median boundary (both
+    engines filter BEFORE the percentile), and a type existing only in
+    one half is excluded from BOTH monitors in BOTH engines (an
+    existence change, not a drift statistic)."""
+    import datetime as dt
+
+    import duckdb
+    import pandas as pd
+
+    base = dt.datetime(2024, 1, 1)
+    rows = []
+    # type 'a': both halves, drifting values; plus NULLs scattered in
+    for i in range(40):
+        rows.append(("a", float(i % 7) + (10.0 if i >= 20 else 0.0),
+                     base + dt.timedelta(hours=i)))
+    for i in (3, 17, 33):
+        rows.append(("a", None, base + dt.timedelta(hours=i, minutes=30)))
+    # type 'newtype': second half only — must be absent from both reports
+    for i in range(25, 35):
+        rows.append(("newtype", float(i), base + dt.timedelta(hours=i)))
+    pdf = pd.DataFrame(rows, columns=["event_type", "value", "ts"])
+    pdf["event_id"] = range(len(pdf))
+    pdf["user_id"] = 0
+    pdf["props"] = "{}"
+    path = str(tmp_path / "events.parquet")
+    pdf.to_parquet(path)
+
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM '{path}'")
+    from map_reduce_implementation_spark.suite.quality import (
+        SQL_EVENTS_DRIFT_KS,
+        SQL_EVENTS_DRIFT_PSI,
+    )
+
+    for name in ("events_drift_psi", "events_drift_ks"):
+        sdf = QS[name].build(spark, str(tmp_path)).toPandas()
+        osql = SQL_EVENTS_DRIFT_PSI if name.endswith("psi") else SQL_EVENTS_DRIFT_KS
+        odf = con.execute(osql).df()
+        assert sorted(sdf["event_type"]) == sorted(odf["event_type"]) == ["a"]
+        s = sdf.sort_values("event_type").reset_index(drop=True)
+        o = odf.sort_values("event_type").reset_index(drop=True)
+        for col in s.columns:
+            for a, b in zip(s[col], o[col]):
+                assert a == b, (name, col, a, b)
+        # NULLs excluded from populations (25+15 = the 40 non-null 'a'
+        # rows; the global median sits inside newtype's late cluster)
+        assert int(s["n_ref"][0]) == 25 and int(s["n_cur"][0]) == 15
+    # the engineered jump in 'a' is strong enough to alert on both
+    psi = QS["events_drift_psi"].build(spark, str(tmp_path)).collect()[0]
+    ks = QS["events_drift_ks"].build(spark, str(tmp_path)).collect()[0]
+    assert psi["drifted"] and ks["drifted"]
+
+
+def _write(tmp_path, name, pdf):
+    path = str(tmp_path / f"{name}.parquet")
+    pdf.to_parquet(path)
+    return path
+
+
+def _docs(tmp_path, rows):
+    return _write(
+        tmp_path,
+        "documents",
+        pd.DataFrame(rows, columns=["doc_id", "text", "lang", "source", "n_chars"]),
+    )
+
+
+def test_inflation_exact_copies(spark, tmp_path):
+    """Three copies of a 4-token doc + one unique 2-token doc:
+    inflation = (3*4 + 2) / (4 + 2) = 14/6 exactly, both engines."""
+    from map_reduce_implementation_spark.suite.quality import SQL_DEDUP_INFLATION_REPORT
+
+    p = _docs(
+        tmp_path,
+        [(i, "a b c d", "en", "s0", 7) for i in range(3)]
+        + [(9, "x y", "en", "s0", 3)],
+    )
+    r = QS["dedup_inflation_report"].build(spark, str(tmp_path)).collect()[0]
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{p}'")
+    o = con.execute(SQL_DEDUP_INFLATION_REPORT).df().iloc[0]
+    assert r["n_docs"] == int(o["n_docs"]) == 4
+    assert r["n_unique"] == int(o["n_unique"]) == 2
+    assert r["total_tokens"] == int(o["total_tokens"]) == 14
+    assert r["unique_tokens"] == int(o["unique_tokens"]) == 6
+    assert r["inflation"] == float(o["inflation"]) == 14 / 6

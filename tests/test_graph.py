@@ -1,5 +1,5 @@
-"""Graph queries (``suite.graph``): shortest paths, TextRank and Markov
-chains against brute-force replays."""
+"""Graph queries (``suite.graph``): shortest paths, degree statistics,
+assortativity, TextRank and Markov chains against brute-force replays."""
 
 from __future__ import annotations
 
@@ -8,6 +8,7 @@ import re
 import duckdb
 import numpy as np
 import pandas as pd
+import pytest
 
 from map_reduce_implementation_spark.suite import all_queries
 
@@ -191,3 +192,51 @@ def test_markov_sink_only_state(spark, tmp_path):
     assert len(odf) == 1
     assert odf["event_type"][0] == "view"
     assert odf["stationary_prob"][0] == 0.0
+
+
+def test_degree_stats_mass_conservation(spark):
+    """The degree census conserves edge mass: Σ sum_deg over buckets =
+    2 × |undirected pair set| = |directed edge list|."""
+    from map_reduce_implementation_spark.suite.graph import _trade_edges
+
+    sf = "/root/testdata/sf0.001"
+    rows = QS["graph_degree_stats"].build(spark, sf).collect()
+    total = sum(r["sum_deg"] for r in rows)
+    assert total == _trade_edges(spark, sf).count()
+    assert all(r["min_deg"] >= 10 ** (r["digits"] - 1) for r in rows)
+    assert all(r["max_deg"] < 10 ** r["digits"] for r in rows)
+
+
+def _write(tmp_path, name, pdf):
+    path = str(tmp_path / f"{name}.parquet")
+    pdf.to_parquet(path)
+    return path
+
+
+def test_assortativity_star_graph(spark, tmp_path):
+    """A star trade graph (one supplier, three customers) is perfectly
+    disassortative: r = -1 in both engines."""
+    from map_reduce_implementation_spark.suite.graph import SQL_GRAPH_ASSORTATIVITY
+
+    li = _write(
+        tmp_path,
+        "lineitem",
+        pd.DataFrame(
+            [(k, 7) for k in range(3)], columns=["l_orderkey", "l_suppkey"]
+        ),
+    )
+    po = _write(
+        tmp_path,
+        "orders",
+        pd.DataFrame(
+            [(k, k) for k in range(3)], columns=["o_orderkey", "o_custkey"]
+        ),
+    )
+    r = QS["graph_assortativity"].build(spark, str(tmp_path)).collect()[0]
+    assert r["n_directed_edges"] == 6 and r["n_nodes"] == 4
+    assert r["assortativity"] == pytest.approx(-1.0, abs=1e-9)
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW lineitem AS SELECT * FROM '{li}'")
+    con.execute(f"CREATE VIEW orders AS SELECT * FROM '{po}'")
+    o = con.execute(SQL_GRAPH_ASSORTATIVITY).df().iloc[0]
+    assert float(o["assortativity"]) == pytest.approx(-1.0, abs=1e-9)

@@ -106,16 +106,6 @@ def test_mapreduce_word_finder_generated_corpus(spark, generated_corpus, word):
     assert run_mapreduce(spark, spec).lines == want
 
 
-def test_overlap_variant_generated_corpus(spark, generated_corpus):
-    """Generated-corpus twin of the mapreduce2.c overlap parity test."""
-    path, _ = generated_corpus
-    base = MapReduceSpec(path, 4, letter_counter_map, letter_counter_reduce)
-    over = MapReduceSpec(path, 4, letter_counter_map, letter_counter_reduce, overlap=True)
-    a, b = run_mapreduce(spark, base), run_mapreduce(spark, over)
-    assert a.lines == b.lines and len(a.lines) == 26
-    assert b.map_partitions == a.map_partitions
-
-
 @settings(max_examples=20, deadline=None)
 @given(
     text=st.lists(
@@ -159,18 +149,3 @@ def test_word_finder_map_matches_regex_oracle(lines, word):
     pat = re.compile(f"(^|[^0-9A-Za-z]){re.escape(word)}([^0-9A-Za-z]|$)")
     want = [ln for ln in lines if pat.search(ln)]
     assert got == want
-
-
-@requires_ref_corpus
-def test_overlap_variant_results_identical(spark):
-    """mapreduce2.c parity (mapreduce2.c:135-196): the overlap topology
-    changes scheduling, never output — a spec with overlap=True must be
-    result-identical to the blocking variant, lines and all."""
-    base = MapReduceSpec(ALICE, 4, letter_counter_map, letter_counter_reduce)
-    over = MapReduceSpec(
-        ALICE, 4, letter_counter_map, letter_counter_reduce, overlap=True
-    )
-    a = run_mapreduce(spark, base)
-    b = run_mapreduce(spark, over)
-    assert a.lines == b.lines and len(a.lines) == 26
-    assert b.map_partitions == a.map_partitions

@@ -1,5 +1,6 @@
 """Real PNG/WAV codec tests — the pure stdlib+numpy decode path behind
-``decode_stub`` / ``audio_decode_stub`` (operators/multimodal.py).
+``decode_media`` (operators/multimodal.py), and that kernel's three
+magic-byte arms.
 
 The PNG decoder must survive all five scanline filter types, not just
 the filter-0 stream our own encoder writes, so one test hand-builds a
@@ -18,7 +19,7 @@ import numpy as np
 
 from map_reduce_implementation_spark.operators.multimodal import (
     PNG_MAGIC,
-    _decode_any,
+    decode_media,
     png_decode,
     png_encode_gray,
     wav_decode,
@@ -92,11 +93,27 @@ def test_png_decode_rejects_non_png():
         pass
 
 
-def test_decode_any_dispatch():
-    img = np.zeros((4, 4), dtype=np.uint8)
-    assert _decode_any(png_encode_gray(img)) == (4, 4, 1, 0.0)
-    w, h, ch, _ = _decode_any(b"plain text payload")
-    assert ch == 3  # fake path
+def test_decode_media_three_arms(spark):
+    """One frame holding a PNG, a WAV, a plain-text and a non-WAVE RIFF
+    payload: each row takes its own arm. The fake arm's dims come from the
+    byte length n (width 16 + n % 64, height 16 + (n // 64) % 64, 3
+    channels) and its ``stat`` is the mean of the first 256 bytes."""
+    png = png_encode_gray(np.arange(15, dtype=np.uint8).reshape(3, 5))
+    wav = wav_encode_pcm16(np.array([3, -4], dtype=np.int16), 8000)
+    text = b"plain text payload " * 20
+    webp = b"RIFF" + struct.pack("<I", 4) + b"WEBP"
+    assert len(text) == 380
+    df = spark.createDataFrame(
+        [(i + 1, bytearray(p)) for i, p in enumerate([png, wav, text, webp])],
+        "doc_id long, payload binary",
+    )
+    rows = [tuple(r) for r in decode_media(df).orderBy("doc_id").collect()]
+    assert rows == [
+        (1, "png", 5, 3, 1, None, None, 7.0),
+        (2, "wav", None, None, 1, 2, 8000, 12.5**0.5),
+        (3, "unknown", 16 + 60, 16 + 5, 3, None, None, sum(text[:256]) / 256),
+        (4, "unknown", 16 + 12, 16, 3, None, None, sum(webp) / 12),
+    ]
 
 
 def test_wav_roundtrip_and_stdlib_crosscheck():

@@ -1,7 +1,12 @@
-"""Statistics queries (``suite.stats``): market-concentration bounds and
-a Python replay."""
+"""Statistics queries (``suite.stats``, ``suite.corpus``): concentration
+indices, Benford, winsorization and moments, with their degenerate-input
+guards."""
 
 from __future__ import annotations
+
+import duckdb
+import pandas as pd
+import pytest
 
 from map_reduce_implementation_spark.suite import all_queries
 
@@ -52,3 +57,136 @@ def test_hhi_bounds_and_replay(spark):
         assert abs(r["top_share"] - max(shares)) < 1e-5
         assert 1 / len(revs) - 1e-9 <= r["hhi"] <= 1.0 + 1e-9
         assert r["top_share"] ** 2 - 1e-6 <= r["hhi"] <= r["top_share"] + 1e-6
+
+
+def _write(tmp_path, name, pdf):
+    path = str(tmp_path / f"{name}.parquet")
+    pdf.to_parquet(path)
+    return path
+
+
+def test_gini_uniform_and_degenerate(spark, tmp_path):
+    """Equal revenues → Gini 0 via the same formula; a whale-heavy
+    ledger is strictly positive; both engines agree cell-for-cell."""
+    from map_reduce_implementation_spark.suite.stats import SQL_REVENUE_GINI
+
+    p = _write(
+        tmp_path,
+        "orders",
+        pd.DataFrame(
+            [(i, i % 4, 100.0) for i in range(8)],
+            columns=["o_orderkey", "o_custkey", "o_totalprice"],
+        ),
+    )
+    r = QS["revenue_gini"].build(spark, str(tmp_path)).collect()[0]
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW orders AS SELECT * FROM '{p}'")
+    o = con.execute(SQL_REVENUE_GINI).df().iloc[0]
+    assert r["n_customers"] == int(o["n_customers"]) == 4
+    assert r["gini"] == float(o["gini"]) == 0.0
+
+    sub = tmp_path / "whale"
+    sub.mkdir()
+    p2 = _write(
+        sub,
+        "orders",
+        pd.DataFrame(
+            [(1, 1, 1.0), (2, 2, 1.0), (3, 3, 998.0)],
+            columns=["o_orderkey", "o_custkey", "o_totalprice"],
+        ),
+    )
+    r2 = QS["revenue_gini"].build(spark, str(sub)).collect()[0]
+    con2 = duckdb.connect()
+    con2.execute(f"CREATE VIEW orders AS SELECT * FROM '{p2}'")
+    o2 = con2.execute(SQL_REVENUE_GINI).df().iloc[0]
+    assert r2["gini"] == float(o2["gini"]) > 0.6
+
+
+def test_benford_digits_complete(spark):
+    """On the shipped corpus: 9 digit rows, shares sum to 1, and the
+    synthetic totals FAIL Benford loudly (uniform 1-4) — the audit's
+    reason to exist."""
+    rows = QS["quality_benford_audit"].build(spark, "/root/testdata/sf0.001").collect()
+    assert [r["digit"] for r in rows] == list(range(1, 10))
+    assert sum(r["obs_share"] for r in rows) == pytest.approx(1.0, abs=1e-4)
+    chi2 = sum(r["chi2_term"] for r in rows)
+    assert chi2 > 100.0  # far beyond the 15.5 critical value at df=8
+
+
+def _docs(tmp_path, rows):
+    return _write(
+        tmp_path,
+        "documents",
+        pd.DataFrame(rows, columns=["doc_id", "text", "lang", "source", "n_chars"]),
+    )
+
+
+def test_winsorized_clip_counts(spark, tmp_path):
+    """An outlier-heavy source: the tails are clipped (counts > 0) and
+    the winsorized mean sits strictly inside the raw extremes; a
+    single-doc source degenerates to p05 = p95 = value with zero
+    clipping. Cell-exact across engines."""
+    from map_reduce_implementation_spark.suite.corpus import SQL_QUALITY_WINSORIZED_STATS
+
+    rows = [(i, "t", "en", "big", int(v)) for i, v in enumerate([1, *([100] * 20), 10000])]
+    rows.append((99, "t", "en", "lone", 42))
+    p = _docs(tmp_path, rows)
+    out = {
+        r["source"]: r
+        for r in QS["quality_winsorized_stats"].build(spark, str(tmp_path)).collect()
+    }
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{p}'")
+    odf = con.execute(SQL_QUALITY_WINSORIZED_STATS).df().set_index("source")
+    big, lone = out["big"], out["lone"]
+    assert big["n_clipped_low"] == int(odf.loc["big", "n_clipped_low"]) == 1
+    assert big["n_clipped_high"] == int(odf.loc["big", "n_clipped_high"]) == 1
+    assert 100.0 <= big["winsorized_mean"] < 10000.0
+    assert big["winsorized_mean"] == pytest.approx(
+        float(odf.loc["big", "winsorized_mean"])
+    )
+    assert lone["p05"] == lone["p95"] == 42.0
+    assert lone["n_clipped_low"] == lone["n_clipped_high"] == 0
+    assert lone["winsorized_mean"] == 42.0
+
+
+def _events(tmp_path, rows):
+    return _write(
+        tmp_path,
+        "events",
+        pd.DataFrame(
+            rows, columns=["event_id", "ts", "user_id", "event_type", "value", "props"]
+        ),
+    )
+
+
+def test_value_moments_constant_and_skewed(spark, tmp_path):
+    """A constant-value type -> zero variance -> guarded NULL moments
+    in both engines; a planted skewed sample matches the numpy
+    population moments."""
+    import numpy as np
+
+    from map_reduce_implementation_spark.suite.stats import SQL_EVENTS_VALUE_MOMENTS
+
+    t = pd.Timestamp("2024-01-01")
+    vals = [1.0, 1.0, 1.0, 1.0, 10.0]
+    rows = [(i, t, 1, "flat", 5.0, "{}") for i in range(4)] + [
+        (10 + i, t, 1, "skew", v, "{}") for i, v in enumerate(vals)
+    ]
+    p = _events(tmp_path, rows)
+    out = {
+        r["event_type"]: r
+        for r in QS["events_value_moments"].build(spark, str(tmp_path)).collect()
+    }
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM '{p}'")
+    odf = con.execute(SQL_EVENTS_VALUE_MOMENTS).df().set_index("event_type")
+    assert out["flat"]["skewness"] is None and pd.isna(odf.loc["flat", "skewness"])
+    q = np.array(vals) * 100
+    m = q.mean()
+    m2, m3, m4 = ((q - m) ** 2).mean(), ((q - m) ** 3).mean(), ((q - m) ** 4).mean()
+    assert out["skew"]["skewness"] == pytest.approx(m3 / m2**1.5, abs=1e-5)
+    assert out["skew"]["excess_kurtosis"] == pytest.approx(m4 / m2**2 - 3, abs=1e-5)
+    assert out["skew"]["skewness"] == pytest.approx(
+        float(odf.loc["skew", "skewness"])
+    )

@@ -188,8 +188,8 @@ def _trade_edges(
         # scans for one census). ``materialize=False`` keeps the fully lazy
         # plan for operators/graph.py::pagerank, whose loop-invariant edge
         # memo is keyed on plan identity (a fresh checkpoint RDD per build
-        # would defeat it), and for callers that checkpoint the whole edge
-        # list themselves (q_graph_shortest_paths, q_graph_assortativity).
+        # would defeat it), and for q_graph_assortativity, which
+        # checkpoints the whole edge list itself.
         pairs = pairs.localCheckpoint(eager=True)
     fwd = pairs.select(F.col("s").alias("src"), F.col("c").alias("dst"))
     rev = pairs.select(F.col("c").alias("src"), F.col("s").alias("dst"))
@@ -375,55 +375,78 @@ def q_graph_shortest_paths(spark: SparkSession, sf: str) -> DataFrame:
     values) and connected components (fixpoint on labels): BFS is the
     fixpoint on FRONTIERS.
 
-    Algorithm: textbook distributed BFS (Pregel-style) — per round,
-    join the hop-(k−1) frontier against the edge list (edge-keyed
-    shuffle), union the expansions into the distance frame, and keep
-    MIN(hops) per node. The frontier filter means each round's join
-    touches only newly-reached nodes; the distance frame is
-    localCheckpoint'd per round (the connected_components cadence), so
-    the plan stays round-sized instead of doubling per iteration (the
-    frame is referenced twice per round — frontier + union). All
-    arithmetic is integer → trivially hash-exact; the oracle unrolls
-    the identical rounds as a CTE chain (the pagerank convention,
-    since standard SQL cannot aggregate inside a recursive CTE).
+    Precondition: the graph is bipartite — every edge joins a supplier
+    (id ≥ 0) and a customer (id ≤ −1) — and the join keys are NOT NULL
+    (TPC-H declares them so). In a bipartite graph the source reaches
+    a node on the side of k's parity (customers odd, suppliers even)
+    by a walk of exactly k steps iff the node's distance is ≤ k, so
+    BFS becomes a chain of reach flags over the pair list
+    ``(s, c)`` of ``lineitem ⋈ orders``: ``r0 = (s = source)``, and
+    ``r_k`` is ``max(r_(k−1))`` over a window partitioned by ``c``
+    for odd k and by ``s`` for even k. A customer's hop is the first
+    odd k whose flag is set, a non-source supplier's the first even k.
+    ``row_number()`` in the last window of each side keeps one row per
+    node, ``stack`` turns the row into its customer and supplier
+    entries, and the histogram is one ``groupBy("hops")``. The hop-0
+    row is a constant, so a source with no edges still reports it.
+    Duplicate pairs change no flag, so there is no ``distinct``. All
+    arithmetic is integer → hash-exact against the oracle's unrolled
+    CTE chain (the pagerank convention, since standard SQL cannot
+    aggregate inside a recursive CTE).
 
-    The edge list is materialized ONCE (localCheckpoint) before the
-    loop — each round's frontier join would otherwise replay the
-    lineitem⋈orders+distinct edge build once per round (a cluster run
-    persists edges to storage, the move pagerank's cached-wedge memo
-    makes). At sf0.1 the win is modest (2.5 → ~2.2 s warm: the graph
-    saturates by hop 3, so the hop-3-frontier × edge-list expansion
-    dominates, not the edge build) — at 100 TB the edge build is the
-    corpus-sized part and replaying it per round would dominate. The
-    lazy edge build is checkpointed as a whole, so the union's two
-    branches share one join+distinct exchange and the build is one job,
-    not a pairs checkpoint plus an edge checkpoint."""
-    edges = _trade_edges(spark, sf, materialize=False).localCheckpoint(eager=True)
-    dist = spark.range(1).select(
-        F.lit(_BFS_SOURCE).cast("long").alias("node"),
-        F.lit(0).alias("hops"),
+    Job shape: one lazy plan, no checkpoint or cache, so building it
+    runs no job and the fact scans stay visible to the plan checks. At
+    ``local[4]`` on small tables the action runs 7 jobs (the join's
+    broadcast, four window shuffles, the histogram shuffle and the
+    result), where a checkpoint per round took 23, 21 of them in
+    build. The projections are SQL text (``selectExpr``, as in
+    ``exact_scores``): one py4j call per projection, however many
+    expressions it holds.
+
+    Scale: each round is one shuffle of the pair list, and round k
+    reads only round k−1, so the plan grows linearly with the hop
+    bound instead of doubling. A celebrity node (a supplier on most
+    orders) becomes one large window partition, which Spark's window
+    buffer spills to disk rather than holding in memory."""
+    li = table(spark, sf, "lineitem").select("l_orderkey", "l_suppkey")
+    orders = table(spark, sf, "orders").select("o_orderkey", "o_custkey")
+    pairs = li.join(orders, li["l_orderkey"] == orders["o_orderkey"]).selectExpr(
+        "l_suppkey AS s",
+        "-(o_custkey + 1) AS c",
+        f"l_suppkey = {_BFS_SOURCE} AS r0",
     )
+    whens: dict[str, list[str]] = {"c": [], "s": []}
     for k in range(1, _BFS_HOPS + 1):
-        frontier = dist.filter(F.col("hops") == k - 1)
-        expanded = edges.join(
-            frontier, edges["src"] == frontier["node"]
-        ).select(F.col("dst").alias("node"), F.lit(k).alias("hops"))
-        # the final round's checkpoint looks removable (its result is
-        # consumed exactly once by the closing aggregate) but a quiet
-        # A/B measured the no-checkpoint variant SLOWER (3.0 vs 2.7 s
-        # best-of-3 at sf0.1: the bigger AQE plan costs more than the
-        # extra job saves), so the checkpoint stays
-        dist = (
-            dist.unionAll(expanded)
-            .groupBy("node")
-            .agg(F.min("hops").alias("hops"))
-            .localCheckpoint(eager=True)
+        node, other = ("c", "s") if k % 2 else ("s", "c")
+        w = f"PARTITION BY {node} ORDER BY {other}"
+        cols = [
+            "*",
+            f"max(r{k - 1}) OVER ({w} ROWS BETWEEN UNBOUNDED PRECEDING"
+            f" AND UNBOUNDED FOLLOWING) AS r{k}",
+        ]
+        if k + 2 > _BFS_HOPS:  # this side's last window: one row per node
+            cols.append(f"row_number() OVER ({w}) = 1 AS first_{node}")
+        pairs = pairs.selectExpr(*cols)
+        whens[node].append(f"WHEN r{k} THEN {k}")
+    sides = [(n, " ".join(ws)) for n, ws in whens.items() if ws]
+    entries = ", ".join(f"IF(first_{n}, CASE {ws} END, NULL), {n}" for n, ws in sides)
+    hist = (
+        pairs.selectExpr(f"stack({len(sides)}, {entries}) AS (hops, node)")
+        .filter(f"hops IS NOT NULL AND node <> {_BFS_SOURCE}")
+        .groupBy("hops")
+        .agg(
+            F.expr("count(1) AS n_nodes"),
+            F.expr("min(node) AS min_node"),
+            F.expr("max(node) AS max_node"),
         )
-    return dist.groupBy("hops").agg(
-        F.count(F.lit(1)).alias("n_nodes"),
-        F.min("node").alias("min_node"),
-        F.max("node").alias("max_node"),
     )
+    source = spark.range(1, numPartitions=1).selectExpr(
+        "0 AS hops",
+        "CAST(1 AS BIGINT) AS n_nodes",
+        f"CAST({_BFS_SOURCE} AS BIGINT) AS min_node",
+        f"CAST({_BFS_SOURCE} AS BIGINT) AS max_node",
+    )
+    return source.unionAll(hist)
 
 
 def _shortest_paths_oracle(hops: int = _BFS_HOPS) -> str:
@@ -687,7 +710,7 @@ def q_graph_assortativity(spark: SparkSession, sf: str) -> DataFrame:
     its four plan references (edge list + three deg uses: 32 parquet
     scans / 48 exchanges at sf0.01) — at 100 TB that is eight fact
     scans for one statistic. Materialized: 2 scans, and the degree
-    joins run against a node-sized frame (the BFS/CC precedent)."""
+    joins run against a node-sized frame (the CC precedent)."""
     edges = _trade_edges(spark, sf, materialize=False).localCheckpoint(eager=True)
     deg = (
         edges.groupBy("src")

@@ -1011,7 +1011,7 @@ def q_embedding_linear_probe(spark: SparkSession, sf: str) -> DataFrame:
     64-row join to form the next weights. No driver round-trip for
     model state; the one bounded scalar is n (corpus size)."""
     e = _probe_input(spark, sf)
-    n = float(e.count())  # one bounded scalar (suite/text.py:361 precedent)
+    n = float(e.count())  # one bounded scalar
     w_df, w_row = _train_probe(e, n)
 
     acc = (
@@ -1107,7 +1107,7 @@ def q_quality_classifier_apply(spark: SparkSession, sf: str) -> DataFrame:
     vector; the report groupBy has <= 10 keys (map-side combined to
     nothing)."""
     e = _probe_input(spark, sf)
-    n = float(e.count())  # one bounded scalar (suite/text.py:361 precedent)
+    n = float(e.count())  # one bounded scalar
     _, w_row = _train_probe(e, n)
     scored = e.crossJoin(F.broadcast(w_row)).select(
         "y",
@@ -1166,7 +1166,7 @@ def q_quality_calibration_report(spark: SparkSession, sf: str) -> DataFrame:
     passes + ONE scoring scan) — the report is a second aggregation
     over the same <= 10-key groupBy output."""
     e = _probe_input(spark, sf)
-    n = float(e.count())  # one bounded scalar (suite/text.py:361 precedent)
+    n = float(e.count())  # one bounded scalar
     _, w_row = _train_probe(e, n)
     scored = e.crossJoin(F.broadcast(w_row)).select(
         "y",

@@ -17,6 +17,14 @@ requires_ref_corpus = pytest.mark.skipif(
 )
 
 
+def _write(tmp_path, name, pdf):
+    """Write ``pdf`` as ``<tmp_path>/<name>.parquet``, the layout
+    ``sources.table`` reads a table from; returns the path."""
+    path = str(tmp_path / f"{name}.parquet")
+    pdf.to_parquet(path)
+    return path
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark(app_name="tests", master="local[4]", shuffle_partitions=8)

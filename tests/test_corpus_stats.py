@@ -16,7 +16,7 @@ import pytest
 from map_reduce_implementation_spark.sources import table
 from map_reduce_implementation_spark.suite import all_queries
 
-from .conftest import SF0001
+from .conftest import SF0001, _write
 
 
 QS = all_queries()
@@ -367,12 +367,6 @@ def test_kneser_ney_short_docs(spark, tmp_path):
     assert list(odf["doc_id"]) == [1]
     assert got[0]["n_bigrams"] == int(odf["n_bigrams"][0]) == 4
     assert abs(got[0]["avg_nll_kn"] - odf["avg_nll_kn"][0]) < 1e-12
-
-
-def _write(tmp_path, name, pdf):
-    path = str(tmp_path / f"{name}.parquet")
-    pdf.to_parquet(path)
-    return path
 
 
 def _docs(tmp_path, rows):

@@ -1,6 +1,6 @@
 """Curation queries (``suite.curation``): dataset splits, DSIR slicing,
 n-gram overlap, filter cascades, token-budget mixing, boilerplate removal
-and semantic decontamination, replayed in Python or checked for
+and Bloom and semantic decontamination, replayed in Python or checked for
 invariants."""
 
 from __future__ import annotations
@@ -14,7 +14,7 @@ import pandas as pd
 from map_reduce_implementation_spark.sources import table
 from map_reduce_implementation_spark.suite import all_queries
 
-from .conftest import SF0001
+from .conftest import SF0001, _write
 
 
 QS = all_queries()
@@ -243,12 +243,6 @@ def test_boilerplate_removal_python_replay(spark):
         assert r["kept_hash"] == hashlib.md5(" ".join(kept).encode()).hexdigest()
 
 
-def _write(tmp_path, name, pdf):
-    path = str(tmp_path / f"{name}.parquet")
-    pdf.to_parquet(path)
-    return path
-
-
 def test_decontaminate_semantic_planted_leak(spark, tmp_path):
     """A training vector that IS an eval vector (cosine 1) is flagged;
     an orthogonal one is not — and the label rollup matches the
@@ -277,3 +271,13 @@ def test_decontaminate_semantic_planted_leak(spark, tmp_path):
     o = con.execute(SQL_DECONTAMINATE_SEMANTIC).df().iloc[0]
     assert (int(o["n_train"]), int(o["n_flagged"])) == (2, 1)
     assert float(o["hottest_sim"]) == 1.0
+
+
+def test_bloom_flagged_is_superset_of_exact(spark):
+    """Bloom filters have no false negatives: every exact overlap term
+    must also be Bloom-flagged (flagged >= exact, per doc)."""
+    rows = QS["bloom_decontaminate"].build(spark, SF0001).collect()
+    assert rows, "no training docs"
+    for r in rows:
+        assert r["n_bloom_flagged"] >= r["n_exact"], r
+        assert 0 <= r["n_exact"] <= r["n_terms"], r

@@ -1,6 +1,6 @@
 """Cross-checks for the rows-only (non-SQL-expressible) operators:
 MinHash-LSH vs exact Jaccard, SimHash self-consistency, ANN-LSH recall
-vs brute force, multimodal decode plumbing."""
+vs brute force, MaxSim top-k ranks, multimodal decode plumbing."""
 
 from __future__ import annotations
 
@@ -20,7 +20,7 @@ from map_reduce_implementation_spark.suite import all_queries
 from map_reduce_implementation_spark.suite.dedup import q_dedup_minhash_lsh, q_dedup_ngram_jaccard
 from map_reduce_implementation_spark.suite.multimodal import q_multimodal_decode_dispatch
 
-from .conftest import SF0001, SF001
+from .conftest import SF0001, SF001, _write
 
 
 def test_minhash_lsh_finds_high_jaccard_pairs(spark):
@@ -1008,12 +1008,6 @@ def test_matryoshka_recall_numpy_replay(spark):
     assert rows[max(MRL_DIMS)]["recall_at_k"] == 1.0
 
 
-def _write(tmp_path, name, pdf):
-    path = str(tmp_path / f"{name}.parquet")
-    pdf.to_parquet(path)
-    return path
-
-
 def _docs(tmp_path, rows):
     return _write(
         tmp_path,
@@ -1045,3 +1039,23 @@ def test_cluster_representatives_keep_best(spark, tmp_path):
     con.execute(f"CREATE VIEW documents AS SELECT * FROM '{p}'")
     o = con.execute(SQL_DEDUP_CLUSTER_REPRESENTATIVES).df().iloc[0]
     assert int(o["rep_doc_id"]) == 2 and int(o["cluster_size"]) == 2
+
+
+def test_maxsim_rank_and_bound_invariants(spark):
+    """MaxSim is a sum of 4 per-token max-cosines: every score lies in
+    [-4, 4], each query doc gets exactly 5 candidates ranked 1..5 with
+    non-increasing scores, and candidates come only from the corpus
+    side of the split (mdoc >= 3 — queries are mdocs 0-2, so a
+    candidate below 3 would mean the query/corpus split leaked)."""
+    rows = QS["similarity_maxsim_topk"].build(spark, SF0001).collect()
+    by_q = {}
+    for r in rows:
+        by_q.setdefault(r["q_mdoc"], []).append(r)
+        assert -4.0 <= r["maxsim_score"] <= 4.0, r
+        assert r["c_mdoc"] >= 3 > r["q_mdoc"], r
+    assert len(by_q) == 3
+    for q, rs in by_q.items():
+        rs.sort(key=lambda r: r["rank"])
+        assert [r["rank"] for r in rs] == [1, 2, 3, 4, 5]
+        scores = [r["maxsim_score"] for r in rs]
+        assert scores == sorted(scores, reverse=True), (q, scores)

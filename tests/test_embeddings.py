@@ -1,5 +1,5 @@
 """Embedding queries (``suite.embeddings``): int8 quantisation error,
-Mahalanobis outliers, whitening and centroid drift."""
+Mahalanobis outliers, PCA power iteration, whitening and centroid drift."""
 
 from __future__ import annotations
 
@@ -12,7 +12,7 @@ import pandas as pd
 from map_reduce_implementation_spark.sources import table
 from map_reduce_implementation_spark.suite import all_queries
 
-from .conftest import SF0001
+from .conftest import SF0001, _write
 
 
 QS = all_queries()
@@ -92,12 +92,6 @@ def test_whitening_standardizes(spark):
     assert abs((norms**2).mean() - 64.0) < 1.0
 
 
-def _write(tmp_path, name, pdf):
-    path = str(tmp_path / f"{name}.parquet")
-    pdf.to_parquet(path)
-    return path
-
-
 def test_centroid_drift_planted_shift(spark, tmp_path):
     """A label whose odd half is shifted +1 on dim 0 reads exactly
     l2_shift 1.0; an identical-halves label reads 0 with cosine 1;
@@ -129,3 +123,14 @@ def test_centroid_drift_planted_shift(spark, tmp_path):
     assert set(odf.index) == {0, 1}
     assert float(odf.loc[0, "centroid_l2_shift"]) == 1.0
     assert float(odf.loc[1, "centroid_cosine"]) == 1.0
+
+
+def test_pca_power_is_unit_vector(spark):
+    """The returned component has unit L2 norm (it was normalized by
+    the final iteration) and a positive eigenvalue estimate."""
+    rows = QS["embedding_pca_power"].build(spark, SF0001).collect()
+    assert len(rows) == 64
+    norm2 = sum(r["pc1"] ** 2 for r in rows)
+    assert abs(norm2 - 1.0) < 1e-6
+    eigs = {r["eigenvalue"] for r in rows}
+    assert len(eigs) == 1 and eigs.pop() > 0

@@ -9,7 +9,7 @@ import pandas as pd
 
 from map_reduce_implementation_spark.suite import all_queries
 
-from .conftest import SF0001
+from .conftest import SF0001, _write
 
 
 QS = all_queries()
@@ -162,12 +162,6 @@ def test_burst_zscore_pandas_crosscheck(spark):
             assert r["max_z"] is None
         else:
             assert abs(r["max_z"] - round(max_z, 6)) < 1e-9, t
-
-
-def _write(tmp_path, name, pdf):
-    path = str(tmp_path / f"{name}.parquet")
-    pdf.to_parquet(path)
-    return path
 
 
 def _events(tmp_path, rows):

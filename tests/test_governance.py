@@ -1,8 +1,9 @@
 """Governance and drift audits (``suite.quality``, ``suite.curation``,
 ``suite.embeddings``): split leakage, k-anonymity, label noise,
-classifier buckets, drift, calibration and duplication inflation —
-Python-replay checks proving the audits compute the RIGHT thing (the
-oracle gate only proves Spark == DuckDB)."""
+classifier buckets, the linear probe, the Gopher gate on zero-token
+docs, drift, calibration and duplication inflation — Python-replay
+checks proving the audits compute the RIGHT thing (the oracle gate only
+proves Spark == DuckDB)."""
 
 from __future__ import annotations
 
@@ -16,7 +17,7 @@ import pandas as pd
 
 from map_reduce_implementation_spark.suite import all_queries
 
-from .conftest import SF0001
+from .conftest import SF0001, _write
 
 
 QS = all_queries()
@@ -555,12 +556,6 @@ def test_drift_nulls_and_new_types_match_oracle(spark, tmp_path):
     assert psi["drifted"] and ks["drifted"]
 
 
-def _write(tmp_path, name, pdf):
-    path = str(tmp_path / f"{name}.parquet")
-    pdf.to_parquet(path)
-    return path
-
-
 def _docs(tmp_path, rows):
     return _write(
         tmp_path,
@@ -588,3 +583,51 @@ def test_inflation_exact_copies(spark, tmp_path):
     assert r["total_tokens"] == int(o["total_tokens"]) == 14
     assert r["unique_tokens"] == int(o["unique_tokens"]) == 6
     assert r["inflation"] == float(o["inflation"]) == 14 / 6
+
+
+def test_linear_probe_output_sane(spark):
+    """Probe returns one weight per dimension, finite values, and a
+    single accuracy in [0, 1] (0.5 = chance for the balanced target)."""
+    rows = QS["embedding_linear_probe"].build(spark, SF0001).collect()
+    assert len(rows) == 64
+    accs = {r["train_accuracy"] for r in rows}
+    assert len(accs) == 1
+    assert 0.0 <= accs.pop() <= 1.0
+    assert all(abs(r["weight"]) < 1e3 for r in rows)
+
+
+def test_gopher_gate_survives_zero_token_docs(spark, tmp_path):
+    """A doc with no [a-z0-9] tokens (pure punctuation — exactly what a
+    quality gate exists to drop) must yield NULL ratios and keep=false
+    in BOTH engines, not an ANSI DIVIDE_BY_ZERO (latent: the generated
+    corpora contain no such docs)."""
+    import duckdb
+
+    sf = str(tmp_path)
+    spark.createDataFrame(
+        [
+            (1, "### !!! …", "en", "web", 9),
+            (2, "the and for with that this are was has not one data", "en", "web", 52),
+        ],
+        "doc_id long, text string, lang string, source string, n_chars long",
+    ).coalesce(1).write.parquet(f"{sf}/documents.parquet")
+    from map_reduce_implementation_spark.sources import invalidate
+
+    invalidate(spark, sf)
+    rows = {r["doc_id"]: r for r in QS["gopher_quality_gate"].build(spark, sf).collect()}
+    assert rows[1]["n_words"] == 0
+    assert rows[1]["mean_word_len"] is None
+    assert rows[1]["symbol_ratio"] is None
+    assert rows[1]["keep"] is False
+
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{sf}/documents.parquet/*.parquet'")
+    orows = {
+        r[0]: r
+        for r in con.execute(QS["gopher_quality_gate"].oracle).fetchall()
+    }
+    cols = [d[0] for d in con.execute(QS["gopher_quality_gate"].oracle).description]
+    o1 = dict(zip(cols, orows[1]))
+    assert o1["mean_word_len"] is None and o1["symbol_ratio"] is None
+    assert bool(o1["keep"]) is False
+    invalidate(spark, sf)

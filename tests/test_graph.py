@@ -1,9 +1,11 @@
-"""Graph queries (``suite.graph``): shortest paths, degree statistics,
-assortativity, TextRank and Markov chains against brute-force replays."""
+"""Graph queries (``suite.graph``): PageRank, triangles, shortest paths,
+degree statistics, assortativity, TextRank and Markov chains against
+brute-force replays and hand-built graphs."""
 
 from __future__ import annotations
 
 import re
+from itertools import combinations
 
 import duckdb
 import numpy as np
@@ -12,7 +14,7 @@ import pytest
 
 from map_reduce_implementation_spark.suite import all_queries
 
-from .conftest import SF0001
+from .conftest import SF0001, _write
 
 
 QS = all_queries()
@@ -60,6 +62,76 @@ def test_shortest_paths_python_bfs(spark):
         assert r["n_nodes"] == len(nodes)
         assert r["min_node"] == min(nodes)
         assert r["max_node"] == max(nodes)
+
+
+def _bfs_tables(tmp_path, orders, lineitems):
+    """Write ``orders`` as (orderkey, custkey) and ``lineitems`` as
+    (orderkey, suppkey) rows, the only columns the trade graph reads."""
+    _write(tmp_path, "orders", pd.DataFrame(orders, columns=["o_orderkey", "o_custkey"]))
+    _write(
+        tmp_path, "lineitem", pd.DataFrame(lineitems, columns=["l_orderkey", "l_suppkey"])
+    )
+    return str(tmp_path)
+
+
+def _bfs_against_oracle(spark, sf):
+    """Run the BFS query on ``sf`` and its DuckDB oracle on the same
+    tables; assert they agree exactly and return the sorted rows."""
+    from map_reduce_implementation_spark.plans.audit import fingerprint, formatted_plan
+    from map_reduce_implementation_spark.suite.graph import _shortest_paths_oracle
+    from tools.check_values import compare_frames
+
+    df = QS["graph_shortest_paths"].build(spark, sf)
+    # one lazy plan: the fact scans sit in the final plan, not in a checkpoint
+    assert fingerprint(formatted_plan(df))["table_scans"] == {"lineitem": 1, "orders": 1}
+    got = df.toPandas()
+    con = duckdb.connect()
+    for t in ("lineitem", "orders"):
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
+    verdict, detail = compare_frames(got, con.execute(_shortest_paths_oracle()).df())
+    assert verdict == "exact", detail
+    return sorted(tuple(int(v) for v in r) for r in got.itertuples(index=False))
+
+
+def test_shortest_paths_every_round_against_oracle(spark, tmp_path):
+    """A hand-built graph with a node at each of hops 1-4 (node ids:
+    supplier s, customer -(custkey + 1)). Customer 2 sits at hop 5, past
+    the bound; suppliers 0 and 7 with customer 9 form a component the
+    source never reaches; the pair (supplier 1, customer 3) comes from
+    three lineitems, two in one order. Supplier 4 and customer 1 are
+    also reachable by longer walks, so only the shortest must count."""
+    from map_reduce_implementation_spark.suite.graph import _BFS_HOPS, _BFS_SOURCE
+
+    assert (_BFS_SOURCE, _BFS_HOPS) == (1, 4)
+    sf = _bfs_tables(
+        tmp_path,
+        orders=[(1, 0), (2, 3), (3, 3), (4, 1), (5, 2), (6, 9)],
+        lineitems=[
+            (1, 1), (1, 2), (1, 4),
+            (2, 1), (2, 1), (3, 1),
+            (4, 2), (4, 4), (4, 3),
+            (5, 3),
+            (6, 0), (6, 7),
+        ],
+    )
+    assert _bfs_against_oracle(spark, sf) == [
+        (0, 1, 1, 1),
+        (1, 2, -4, -1),  # customers 0 and 3
+        (2, 2, 2, 4),  # suppliers 2 and 4
+        (3, 1, -2, -2),  # customer 1
+        (4, 1, 3, 3),  # supplier 3
+    ]
+
+
+def test_shortest_paths_source_without_lineitems(spark, tmp_path):
+    """A source supplier with no lineitems still reports its hop-0 row,
+    and nothing else."""
+    sf = _bfs_tables(
+        tmp_path,
+        orders=[(1, 0), (2, 5)],
+        lineitems=[(1, 2), (1, 3), (2, 3)],
+    )
+    assert _bfs_against_oracle(spark, sf) == [(0, 1, 1, 1)]
 
 
 def _docs(spark, sf):
@@ -207,12 +279,6 @@ def test_degree_stats_mass_conservation(spark):
     assert all(r["max_deg"] < 10 ** r["digits"] for r in rows)
 
 
-def _write(tmp_path, name, pdf):
-    path = str(tmp_path / f"{name}.parquet")
-    pdf.to_parquet(path)
-    return path
-
-
 def test_assortativity_star_graph(spark, tmp_path):
     """A star trade graph (one supplier, three customers) is perfectly
     disassortative: r = -1 in both engines."""
@@ -240,3 +306,64 @@ def test_assortativity_star_graph(spark, tmp_path):
     con.execute(f"CREATE VIEW orders AS SELECT * FROM '{po}'")
     o = con.execute(SQL_GRAPH_ASSORTATIVITY).df().iloc[0]
     assert float(o["assortativity"]) == pytest.approx(-1.0, abs=1e-9)
+
+
+def test_triangle_count_matches_bruteforce(spark):
+    """Degree-oriented wedge join == brute-force triangle enumeration
+    on the (small) sf0.001 co-occurrence graph."""
+    from pyspark.sql import functions as F
+
+    from map_reduce_implementation_spark.sources import table
+
+    li = (
+        table(spark, SF0001, "lineitem")
+        .select("l_orderkey", "l_partkey")
+        .distinct()
+        .collect()
+    )
+    by_order: dict[int, set[int]] = {}
+    for r in li:
+        by_order.setdefault(r["l_orderkey"], set()).add(r["l_partkey"])
+    edges = set()
+    for parts in by_order.values():
+        for a, b in combinations(sorted(parts), 2):
+            edges.add((a, b))
+    adj: dict[int, set[int]] = {}
+    for a, b in edges:
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    expected: dict[int, int] = {}
+    for a, b in edges:
+        for c in adj[a] & adj[b]:
+            if c > b:  # a < b < c: count each triangle once
+                for n in (a, b, c):
+                    expected[n] = expected.get(n, 0) + 1
+    got = {
+        r["node_id"]: r["n_triangles"]
+        for r in QS["graph_triangle_count"].build(spark, SF0001).collect()
+    }
+    assert got == expected
+
+
+def test_pagerank_zero_indegree_and_empty_graph(spark):
+    """Nodes nobody links to keep their teleport rank (the vector spine
+    union), sum(pr) stays 1, an empty edge list returns empty, and the
+    session memo never conflates different in-memory graphs."""
+    from map_reduce_implementation_spark.operators.graph import (
+        pagerank,
+        pagerank_release,
+    )
+
+    e = spark.createDataFrame([(1, 2), (2, 1), (3, 1)], "src long, dst long")
+    rows = {r["node"]: r["pr"] for r in pagerank(e, iterations=2).collect()}
+    assert set(rows) == {1, 2, 3}
+    assert abs(sum(rows.values()) - 1.0) < 1e-9
+    assert abs(rows[3] - 0.05) < 1e-9  # teleport-only rank, d=0.85, n=3
+
+    empty = spark.createDataFrame([], "src long, dst long")
+    assert pagerank(empty).count() == 0
+
+    other = spark.createDataFrame([(7, 8), (8, 7)], "src long, dst long")
+    got = {r["node"] for r in pagerank(other, iterations=1).collect()}
+    assert got == {7, 8}  # not conflated with the 3-node graph's memo
+    pagerank_release(spark)

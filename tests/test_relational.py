@@ -11,7 +11,7 @@ import pytest
 from map_reduce_implementation_spark.sources import table
 from map_reduce_implementation_spark.suite import all_queries
 
-from .conftest import SF0001
+from .conftest import SF0001, _write
 
 
 QS = all_queries()
@@ -25,12 +25,6 @@ def test_skew_audit_order_statistics(spark):
     assert r["max_key_rows"] >= r["p99_key_rows"] >= r["p50_key_rows"] > 0
     assert 1.0 <= r["skew_ratio"]
     assert abs(r["avg_key_rows"] - r["n_rows"] / r["n_keys"]) < 1e-4
-
-
-def _write(tmp_path, name, pdf):
-    path = str(tmp_path / f"{name}.parquet")
-    pdf.to_parquet(path)
-    return path
 
 
 def _orders(tmp_path, rows):

@@ -1,6 +1,6 @@
-"""Statistics queries (``suite.stats``, ``suite.corpus``): concentration
-indices, Benford, winsorization and moments, with their degenerate-input
-guards."""
+"""Statistics and sketch queries (``suite.stats``, ``suite.corpus``): HLL,
+CMS, MinHash and SimHash bounds and merge laws, concentration indices,
+Benford, winsorization and moments, with their degenerate-input guards."""
 
 from __future__ import annotations
 
@@ -10,7 +10,7 @@ import pytest
 
 from map_reduce_implementation_spark.suite import all_queries
 
-from .conftest import SF0001
+from .conftest import SF0001, _write
 
 
 QS = all_queries()
@@ -57,12 +57,6 @@ def test_hhi_bounds_and_replay(spark):
         assert abs(r["top_share"] - max(shares)) < 1e-5
         assert 1 / len(revs) - 1e-9 <= r["hhi"] <= 1.0 + 1e-9
         assert r["top_share"] ** 2 - 1e-6 <= r["hhi"] <= r["top_share"] + 1e-6
-
-
-def _write(tmp_path, name, pdf):
-    path = str(tmp_path / f"{name}.parquet")
-    pdf.to_parquet(path)
-    return path
 
 
 def test_gini_uniform_and_degenerate(spark, tmp_path):
@@ -190,3 +184,110 @@ def test_value_moments_constant_and_skewed(spark, tmp_path):
     assert out["skew"]["skewness"] == pytest.approx(
         float(odf.loc["skew", "skewness"])
     )
+
+
+def test_minhash_graded_pairs_have_high_jaccard_bands(spark):
+    """Every candidate pair collides on 1..4 bands, doc_a < doc_b, and
+    no pair is duplicated."""
+    rows = QS["dedup_minhash_graded"].build(spark, SF0001).collect()
+    seen = set()
+    for r in rows:
+        assert r["doc_a"] < r["doc_b"]
+        assert 1 <= r["n_bands"] <= 4
+        key = (r["doc_a"], r["doc_b"])
+        assert key not in seen
+        seen.add(key)
+
+
+def test_simhash_graded_hamming_bound(spark):
+    """Every reported pair is within the hamming threshold and ordered."""
+    from map_reduce_implementation_spark.suite.stats import SH_MAX_HAMMING
+
+    rows = QS["dedup_simhash_graded"].build(spark, SF0001).collect()
+    for r in rows:
+        assert r["doc_a"] < r["doc_b"]
+        assert 0 <= r["hamming"] <= SH_MAX_HAMMING
+
+
+def test_hll_estimate_within_expected_error(spark):
+    """HLL with m=256 registers has relative standard error
+    1.04/sqrt(256) ~= 6.5%; assert every per-type estimate lands within
+    4 sigma of the exact distinct count, and the register/bucket
+    accounting stays inside the sketch's bounds."""
+    rows = QS["hll_distinct_graded"].build(spark, SF0001).collect()
+    assert rows, "no event types"
+    for r in rows:
+        assert 0 < r["observed_buckets"] <= 256, r
+        assert r["hll_estimate"] > 0, r
+        rel = abs(r["hll_estimate"] - r["exact_distinct"]) / r["exact_distinct"]
+        assert rel < 4 * 1.04 / 16, r
+
+
+def test_hll_registers_merge_by_max(spark):
+    """The 100 TB mergeability claim, exercised: HLL registers built on
+    two disjoint halves of the event stream, merged by bucket-wise MAX,
+    must equal the registers built on the full stream in one pass."""
+    from pyspark.sql import functions as F
+
+    from map_reduce_implementation_spark.sources import table
+    from map_reduce_implementation_spark.suite.stats import hll_registers
+
+    e = table(spark, SF0001, "events")
+    full = hll_registers(e, "event_type", F.col("user_id"))
+    half_a = hll_registers(
+        e.filter(F.col("event_id") % 2 == 0), "event_type", F.col("user_id")
+    )
+    half_b = hll_registers(
+        e.filter(F.col("event_id") % 2 == 1), "event_type", F.col("user_id")
+    )
+    merged = (
+        half_a.unionByName(half_b)
+        .groupBy("event_type", "bucket")
+        .agg(F.max("mreg").alias("mreg"))
+    )
+    key = lambda rows: sorted((r["event_type"], r["bucket"], r["mreg"]) for r in rows)
+    assert key(merged.collect()) == key(full.collect())
+
+
+def test_minhash_jaccard_est_identity_invariants(spark):
+    """MinHash identity checks: estimates are multiples of 1/16 in
+    [0,1]; identical token sets (exact Jaccard 1.0) force identical
+    signatures, so the estimate must be exactly 1.0 there."""
+    rows = QS["dedup_minhash_jaccard_est"].build(spark, SF0001).collect()
+    assert rows, "no candidate pairs"
+    for r in rows:
+        k = r["est_jaccard"] * 16
+        assert abs(k - round(k)) < 1e-9 and 0.0 <= r["est_jaccard"] <= 1.0, r
+        assert 0.0 <= r["exact_jaccard"] <= 1.0, r
+        if r["exact_jaccard"] == 1.0:
+            assert r["est_jaccard"] == 1.0, r
+
+
+def test_cms_cells_merge_by_sum(spark):
+    """CMS mergeability, exercised: cells built on two disjoint halves
+    of the corpus, merged by cell-wise SUM, must equal the cells built
+    on the full corpus in one pass."""
+    from pyspark.sql import functions as F
+
+    from map_reduce_implementation_spark.functions import tokens as _tokens
+    from map_reduce_implementation_spark.sources import table
+    from map_reduce_implementation_spark.suite.stats import cms_cells
+
+    d = table(spark, SF0001, "documents")
+
+    def counts(df):
+        return (
+            df.select(F.explode(_tokens(F.col("text"))).alias("term"))
+            .groupBy("term")
+            .agg(F.count(F.lit(1)).alias("exact_cnt"))
+        )
+
+    full = cms_cells(counts(d))
+    merged = (
+        cms_cells(counts(d.filter(F.col("doc_id") % 2 == 0)))
+        .unionByName(cms_cells(counts(d.filter(F.col("doc_id") % 2 == 1))))
+        .groupBy("d", "bucket")
+        .agg(F.sum("cnt").alias("cnt"))
+    )
+    key = lambda rows: sorted((r["d"], r["bucket"], r["cnt"]) for r in rows)
+    assert key(merged.collect()) == key(full.collect())

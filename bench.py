@@ -1011,9 +1011,10 @@ def main() -> int:
             except Exception as exc:
                 print(f"bench {name} failed: {exc}", file=sys.stderr)
                 results[name] = float("nan")
-            # storage hygiene BETWEEN queries (never inside a query's
-            # warm runs): operators that cache internally (pagerank,
-            # semdedup) must not skew later queries via storage pressure
+            # no query leaves a cached frame behind when it returns, but
+            # one that fails between its own cache() and unpersist() (the
+            # MinHash signature table) must not leave that storage to the
+            # queries after it
             spark.catalog.clearCache()
 
     sf = os.path.basename(SF_DIR.rstrip("/")).replace("sf", "")

@@ -8,8 +8,9 @@ over declarative join+agg steps, NOT a driver-side loop over rows.
 100 TB design notes
 -------------------
 - The out-degree join is loop-invariant, so it is folded into the edge
-  list ONCE and cached (``wedges``); a real cluster would use a parquet
-  checkpoint instead of executor storage.
+  list ONCE per call and cached (``wedges``); a real cluster would use a
+  parquet checkpoint instead of executor storage. Nothing is kept
+  between calls: each call reads its edges afresh.
 - ``wedges`` is hash-partitioned AND sorted by ``src`` at cache time, and
   the rank vector exits each iteration hash-partitioned on its node id
   (the agg's own shuffle), so the per-iteration join is exchange-free on
@@ -31,8 +32,6 @@ over declarative join+agg steps, NOT a driver-side loop over rows.
 - Shuffles key on graph ids — uniform unless the graph has celebrity
   nodes, in which case the standard fix is to split high-out-degree
   vertices (same salting trick as ``operators/skew.py``).
-- For long runs, truncate lineage with ``checkpoint_every`` exactly as
-  the connected-components loop does (``operators/dedup.py``).
 - The rank vector never touches the driver; only the node count N does
   (one scalar).
 """
@@ -43,31 +42,6 @@ import math
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-# Per-session memo of the loop-invariant PageRank state. Lookup uses
-# the analyzed plan's ``sameResult`` (the exact equivalence Spark's own
-# cache manager uses): it normalizes expression IDs, so two independent
-# builds of the same logical edges (re-runs, damping sweeps, benchmarks
-# — which rebuild the DataFrame every call) hit the same entry, while
-# plans over different DATA never conflate (a canonicalized-toString
-# key would collide two in-memory relations with the same schema — the
-# string omits LocalRelation data; the raw analyzed string used before
-# that embedded fresh expr IDs and never hit at all). Python-local
-# DataFrames (createDataFrame) wrap a fresh RDD per build and always
-# MISS — the safe direction; hits serve the table/file-backed edges
-# the suite and bench actually rebuild. Held
-# deliberately: a miss rebuilds the co-partitioned cached edge list —
-# measured 6.0 s vs 2.0 s warm at sf0.1. The memo assumes STATIC edges
-# per plan within a session; storage is spillable, survives
-# spark.catalog.clearCache() via lazy re-cache, is LRU-capped at
-# _PR_MEMO_CAP distinct graphs (evicted entries unpersist — the
-# sameResult scan is over at most that many plans), and is released
-# explicitly with ``pagerank_release(spark)``. A plain dict keyed by
-# session, not a WeakKeyDictionary: the cached DataFrames hold strong
-# references to their session anyway (weak keys would never collect),
-# and a stopped session's executor storage dies with its JVM.
-_PR_STATE: dict = {}
-_PR_MEMO_CAP = 4
 
 # The loop's partition count is derived from the measured edge count
 # (~PR_EDGES_PER_PART edge rows ≈ a few MB per task) instead of pinning
@@ -80,18 +54,10 @@ _PR_MEMO_CAP = 4
 PR_EDGES_PER_PART = 262144
 
 
-def pagerank_release(spark) -> None:
-    """Unpersist all memoized PageRank edge state for this session."""
-    for _, deg, wedges, _n, _p in _PR_STATE.pop(spark, []):
-        deg.unpersist()
-        wedges.unpersist()
-
-
 def pagerank(
     edges: DataFrame,
     iterations: int = 3,
     damping: float = 0.85,
-    checkpoint_every: int | None = None,
 ) -> DataFrame:
     """PageRank over a directed edge list ``DataFrame[src, dst]``.
 
@@ -103,30 +69,35 @@ def pagerank(
     rank and keep contributing instead of silently dropping out of the
     vector. Returns ``DataFrame[node, pr]`` with ``sum(pr) == 1`` up
     to float error, materialized (the iterative job has already run
-    when this returns). An empty edge list returns an empty result.
+    when this returns), and leaves nothing cached behind. An empty edge
+    list returns an empty result.
+
+    ``edges`` is read twice (the degree count, then the degree-joined
+    edge list), so a caller with an expensive edge upstream checkpoints
+    it first, as the suite's trade and word graphs do.
     """
     spark = edges.sparkSession
     max_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    # Loop-invariant state from the session memo (see _PR_STATE above).
-    # deg is node-sized (one row per vertex) — cached so n_nodes and the
-    # rank init read materialized rows instead of re-running the edge
-    # upstream (a join+distinct pipeline for the suite's trade graph).
-    plan = edges._jdf.queryExecution().analyzed()
-    entries = _PR_STATE.setdefault(spark, [])  # list of (plan, deg, wedges, n)
-    hit = None
-    for i, entry in enumerate(entries):
-        if plan.sameResult(entry[0]):
-            hit = entries.pop(i)  # LRU touch: re-append below
-            break
-    if hit is None:
-        deg = edges.groupBy("src").agg(F.count("*").alias("outdeg")).cache()
+    # Loop-invariant state, cached for this call only: the finally below
+    # unpersists it once the final checkpoint holds the ranks. deg is
+    # node-sized (one row per vertex) — cached so n_nodes and the rank
+    # init read materialized rows instead of re-running the edge upstream.
+    deg = edges.groupBy("src").agg(F.count("*").alias("outdeg")).cache()
+    wedges = None
+    # NOTE: the set/restore below flips a SESSION-global conf for the
+    # loop's duration — a query planned concurrently on the same
+    # SparkSession during that window would silently lose AQE. Safe for
+    # the suite/bench (single-threaded driver); concurrent callers
+    # should pass a dedicated session or accept the window.
+    aqe_prev = spark.conf.get("spark.sql.adaptive.enabled")
+    sp_prev = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
         # two bounded scalars from one job; ranks never collect
         sizes = deg.agg(
             F.count(F.lit(1)).alias("nn"), F.sum("outdeg").alias("ne")
         ).collect()[0]
         n_nodes = sizes["nn"]
         if n_nodes == 0:
-            deg.unpersist()
             return edges.select(
                 F.col("src").alias("node"), F.lit(0.0).alias("pr")
             ).limit(0)
@@ -138,41 +109,19 @@ def pagerank(
             .sortWithinPartitions("src")
             .cache()
         )
-        if len(entries) >= _PR_MEMO_CAP:  # LRU eviction, oldest first
-            _, odeg, owedges, _n, _p = entries.pop(0)
-            odeg.unpersist()
-            owedges.unpersist()
-        hit = (plan, deg, wedges, n_nodes, nparts)
-    entries.append(hit)
-    _, deg, wedges, n_nodes, nparts = hit
-    # spark.catalog.clearCache() deregisters cached plans entirely —
-    # re-cache on miss so a memo hit after a cache flush still runs the
-    # loop against materialized, co-partitioned edges.
-    if not deg.is_cached:
-        deg.cache()
-    if not wedges.is_cached:
-        wedges.cache()
-    pr = deg.select(F.col("src").alias("node"), F.lit(1.0 / n_nodes).alias("pr"))
-    base = (1.0 - damping) / n_nodes
-    # NOTE: the set/restore below flips a SESSION-global conf for the
-    # loop's duration — a query planned concurrently on the same
-    # SparkSession during that window would silently lose AQE. Safe for
-    # the suite/bench (single-threaded driver); concurrent callers
-    # should pass a dedicated session or accept the window.
-    aqe_prev = spark.conf.get("spark.sql.adaptive.enabled")
-    sp_prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    # the rank aggregate must land on the SAME partition count as the
-    # size-derived wedges layout or the loop join regrows an exchange
-    spark.conf.set("spark.sql.shuffle.partitions", str(nparts))
-    try:
+        pr = deg.select(F.col("src").alias("node"), F.lit(1.0 / n_nodes).alias("pr"))
+        base = (1.0 - damping) / n_nodes
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        # the rank aggregate must land on the SAME partition count as the
+        # size-derived wedges layout or the loop join regrows an exchange
+        spark.conf.set("spark.sql.shuffle.partitions", str(nparts))
         # node spine with zero contribution, unioned into every
         # iteration's aggregate: a node nobody links to would otherwise
         # vanish from the rank vector after iteration 1 (losing its own
         # outgoing mass with it). The union adds |V| rows to the ONE
         # shuffle the iteration already pays — no extra join.
         zeros = deg.select(F.col("src").alias("dst"), F.lit(0.0).alias("w"))
-        for i in range(iterations):
+        for _ in range(iterations):
             contrib = wedges.join(pr, wedges["src"] == pr["node"]).select(
                 "dst", (F.col("pr") / F.col("outdeg")).alias("w")
             )
@@ -182,13 +131,11 @@ def pagerank(
                 .agg((F.lit(base) + F.lit(damping) * F.sum("w")).alias("pr"))
                 .select(F.col("dst").alias("node"), "pr")
             )
-            if checkpoint_every and (i + 1) % checkpoint_every == 0:
-                pr = pr.localCheckpoint(eager=False)
         # run the loop's job under the scoped conf; callers see data
-        pr = pr.localCheckpoint(eager=True)
+        return pr.localCheckpoint(eager=True)
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", aqe_prev)
         spark.conf.set("spark.sql.shuffle.partitions", sp_prev)
-    # deg/wedges stay cached in the session memo (bounded: one entry
-    # per distinct edge plan); call pagerank_release(spark) to drop.
-    return pr
+        deg.unpersist()
+        if wedges is not None:
+            wedges.unpersist()

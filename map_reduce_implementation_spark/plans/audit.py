@@ -58,6 +58,34 @@ def formatted_plan(df: DataFrame) -> str:
     return buf.getvalue()
 
 
+@contextlib.contextmanager
+def recording_checkpoints():
+    """Within the block, record the formatted plan of every frame that is
+    ``localCheckpoint``ed, eagerly or not; yields the list they land in.
+    Those are the build jobs of a query: its final plan shows each one
+    only as ``Scan ExistingRDD``, so the table scans inside it are
+    read here.
+
+    Patches the classic (JVM-backed) ``DataFrame``: on Spark 4
+    ``pyspark.sql.DataFrame`` is its parent class, whose
+    ``localCheckpoint`` the classic class overrides, so patching the
+    parent records nothing."""
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+
+    plans: list[str] = []
+    checkpoint = ClassicDataFrame.localCheckpoint
+
+    def recording(self, *args, **kwargs):
+        plans.append(formatted_plan(self))
+        return checkpoint(self, *args, **kwargs)
+
+    ClassicDataFrame.localCheckpoint = recording
+    try:
+        yield plans
+    finally:
+        ClassicDataFrame.localCheckpoint = checkpoint
+
+
 def table_scans(plan_text: str) -> dict[str, int]:
     """Parquet scans per table. The formatted scan operator line carries
     no path; the details section has one ``Location: ...
@@ -78,10 +106,10 @@ def fingerprint(plan_text: str) -> dict:
     parquet scans per table, so a query that gains a scan of a table
     moves its fingerprint.
 
-    Known gap: only the final plan is read. Frames a query materializes
-    while it builds (``localCheckpoint``/``cache`` in eager build jobs)
-    appear as ``Scan ExistingRDD``, and the table scans inside those jobs
-    are invisible here."""
+    Only the final plan is read. Frames a query ``localCheckpoint``s
+    while it builds appear as ``Scan ExistingRDD``, and the table scans
+    inside those jobs are invisible here; ``recording_checkpoints``
+    captures their plans."""
 
     def n(pat: str) -> int:
         return len(re.findall(pat, plan_text))

@@ -45,12 +45,12 @@ def q_textrank_keywords(spark: SparkSession, sf: str) -> DataFrame:
     dropped), top-{TR_TOP_K} words by rank.
 
     Plan: edge building is one corpus pass ending in a
-    vocabulary²-bounded distinct; the iteration machinery is
-    ``operators/graph.py::pagerank`` unchanged (one edge-keyed shuffle
-    + one node-keyed agg per round, rank vector never on the driver),
-    so TextRank inherits its celebrity-node and checkpoint-cadence
-    story. The top-k is a TakeOrderedAndProject on (rounded score,
-    term) and the rank window runs on {TR_TOP_K} rows."""
+    vocabulary²-bounded distinct, checkpointed; the iteration machinery
+    is ``operators/graph.py::pagerank`` unchanged (one edge-keyed
+    shuffle + one node-keyed agg per round, rank vector never on the
+    driver), so TextRank inherits its celebrity-node story. The top-k
+    is a TakeOrderedAndProject on (rounded score, term) and the rank
+    window runs on {TR_TOP_K} rows."""
     und = (
         _word_pairs(spark, sf)
         .filter(F.col("prev") != F.col("cur"))
@@ -58,7 +58,7 @@ def q_textrank_keywords(spark: SparkSession, sf: str) -> DataFrame:
     )
     edges = und.unionAll(
         und.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct()
+    ).distinct().localCheckpoint(eager=True)  # pagerank reads it twice
     pr = pagerank(edges, iterations=TR_ITERS, damping=TR_DAMPING)
     top = (
         pr.select(
@@ -169,11 +169,14 @@ FROM deg GROUP BY 1 ORDER BY 1
 _ITERS = 3
 
 
-def _trade_edges(
-    spark: SparkSession, sf: str, materialize: bool = True
-) -> DataFrame:
+def _trade_edges(spark: SparkSession, sf: str) -> DataFrame:
     li = table(spark, sf, "lineitem").select("l_orderkey", "l_suppkey")
     orders = table(spark, sf, "orders").select("o_orderkey", "o_custkey")
+    # the join+distinct feeds BOTH union branches, and pagerank and
+    # assortativity read the edge list more than once — lazily every
+    # consumer ran the fact join per reference (graph_degree_stats: 8
+    # parquet scans for one census). Checkpointed, each call scans
+    # lineitem and orders once.
     pairs = (
         li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
         .select(
@@ -181,16 +184,8 @@ def _trade_edges(
             (-(F.col("o_custkey") + F.lit(1))).alias("c"),
         )
         .distinct()
+        .localCheckpoint(eager=True)
     )
-    if materialize:
-        # the join+distinct feeds BOTH union branches — lazily every
-        # consumer ran the fact join twice (graph_degree_stats: 8 parquet
-        # scans for one census). ``materialize=False`` keeps the fully lazy
-        # plan for operators/graph.py::pagerank, whose loop-invariant edge
-        # memo is keyed on plan identity (a fresh checkpoint RDD per build
-        # would defeat it), and for q_graph_assortativity, which
-        # checkpoints the whole edge list itself.
-        pairs = pairs.localCheckpoint(eager=True)
     fwd = pairs.select(F.col("s").alias("src"), F.col("c").alias("dst"))
     rev = pairs.select(F.col("c").alias("src"), F.col("s").alias("dst"))
     return fwd.unionAll(rev)
@@ -201,12 +196,8 @@ def q_graph_pagerank(spark: SparkSession, sf: str) -> DataFrame:
     shuffle join + one dst-keyed agg per iteration; the rank vector
     stays distributed (only N reaches the driver). See
     ``operators/graph.py`` for the 100 TB notes (celebrity-node salting,
-    localCheckpoint cadence for long runs)."""
-    pr = pagerank(
-        _trade_edges(spark, sf, materialize=False),
-        iterations=_ITERS,
-        damping=0.85,
-    )
+    the co-partitioned loop)."""
+    pr = pagerank(_trade_edges(spark, sf), iterations=_ITERS, damping=0.85)
     return pr.select(
         F.col("node").alias("node_id"), F.round("pr", 9).alias("pagerank")
     )
@@ -704,19 +695,17 @@ def q_graph_assortativity(spark: SparkSession, sf: str) -> DataFrame:
     shuffles — the deg frame is node-sized, never collected), one
     global aggregate.
 
-    the edge list is materialized
-    ONCE (localCheckpoint) and so is the degree frame. Lazily, the
-    lineitem⋈orders+distinct edge build was replayed for every one of
-    its four plan references (edge list + three deg uses: 32 parquet
-    scans / 48 exchanges at sf0.01) — at 100 TB that is eight fact
-    scans for one statistic. Materialized: 2 scans, and the degree
-    joins run against a node-sized frame (the CC precedent)."""
-    edges = _trade_edges(spark, sf, materialize=False).localCheckpoint(eager=True)
-    deg = (
-        edges.groupBy("src")
-        .agg(F.count(F.lit(1)).alias("deg"))
-        .localCheckpoint(eager=True)
-    )
+    The trade pairs are materialized ONCE (``_trade_edges``'s
+    localCheckpoint). Lazily, the lineitem⋈orders+distinct edge build
+    was replayed for every one of its four plan references (edge list
+    + three deg uses: 32 parquet scans / 48 exchanges at sf0.01) — at
+    100 TB that is eight fact scans for one statistic. Materialized:
+    one scan of each table. The degree aggregate stays lazy: over the
+    materialized pairs it costs no table scan, and checkpointing it
+    too measured one more shuffle (9 vs 8 at sf0.01, build jobs
+    included)."""
+    edges = _trade_edges(spark, sf)
+    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     dj = (
         edges.join(deg.withColumnRenamed("src", "s_"), F.col("src") == F.col("s_"))
         .select("src", "dst", F.col("deg").alias("j"))

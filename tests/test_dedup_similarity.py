@@ -204,6 +204,30 @@ def test_semantic_dedup_keep_rule_invariants(spark):
     assert out2 == {(r.vec_id, r.cell, r.is_kept) for r in rows}
 
 
+def test_semantic_dedup_reads_fresh_centroids_after_invalidate(spark, tmp_path):
+    """dedup_semantic trains its centroids on every call: after the
+    embeddings table is rewritten and ``sources.invalidate`` drops its
+    memoized plan, the query equals a computation that never saw the
+    old vectors (a centroid memo keyed on the directory would keep
+    assigning cells with the old table's centroids)."""
+    from map_reduce_implementation_spark.operators.dedup import semantic_dedup
+    from map_reduce_implementation_spark.sources import invalidate
+
+    sf = str(tmp_path)
+    pdf = pd.read_parquet(f"{SF001}/embeddings.parquet")
+    q = QS["dedup_semantic"]
+    _write(tmp_path, "embeddings", pdf)
+    assert q.build(spark, sf).count() == len(pdf)
+
+    pdf["embedding"] = pdf["embedding"].to_numpy()[::-1]
+    _write(tmp_path, "embeddings", pdf)
+    invalidate(spark, sf)
+    got = sorted(tuple(r) for r in q.build(spark, sf).collect())
+    emb = spark.read.parquet(f"{sf}/embeddings.parquet")
+    fresh = semantic_dedup(emb, k=8, threshold=0.25).collect()
+    assert got == sorted(tuple(r) for r in fresh)
+
+
 def test_short_docs_yield_zero_shingles_not_errors(spark, tmp_path):
     """Docs with fewer tokens than the shingle/window width must produce
     ZERO shingles/windows, not crash: Spark's sequence(1, 0) is a

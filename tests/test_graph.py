@@ -347,12 +347,8 @@ def test_triangle_count_matches_bruteforce(spark):
 
 def test_pagerank_zero_indegree_and_empty_graph(spark):
     """Nodes nobody links to keep their teleport rank (the vector spine
-    union), sum(pr) stays 1, an empty edge list returns empty, and the
-    session memo never conflates different in-memory graphs."""
-    from map_reduce_implementation_spark.operators.graph import (
-        pagerank,
-        pagerank_release,
-    )
+    union), sum(pr) stays 1, and an empty edge list returns empty."""
+    from map_reduce_implementation_spark.operators.graph import pagerank
 
     e = spark.createDataFrame([(1, 2), (2, 1), (3, 1)], "src long, dst long")
     rows = {r["node"]: r["pr"] for r in pagerank(e, iterations=2).collect()}
@@ -365,5 +361,26 @@ def test_pagerank_zero_indegree_and_empty_graph(spark):
 
     other = spark.createDataFrame([(7, 8), (8, 7)], "src long, dst long")
     got = {r["node"] for r in pagerank(other, iterations=1).collect()}
-    assert got == {7, 8}  # not conflated with the 3-node graph's memo
-    pagerank_release(spark)
+    assert got == {7, 8}
+
+
+def test_pagerank_leaves_nothing_cached(spark):
+    """pagerank caches its degree and edge frames for the call only:
+    once it returns, no cached plan is left and the only new persisted
+    RDD is the returned rank vector's own checkpoint."""
+    from map_reduce_implementation_spark.operators.graph import pagerank
+
+    spark.catalog.clearCache()
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    jsc = spark.sparkContext._jsc
+
+    def persisted():  # getPersistentRDDs() returns a snapshot
+        return set(jsc.getPersistentRDDs().keySet())
+
+    before = persisted()
+    e = spark.createDataFrame([(1, 2), (2, 1), (3, 1)], "src long, dst long")
+    pr = pagerank(e, iterations=2)
+    assert cache_manager.isEmpty()
+    result_rdd = pr._jdf.queryExecution().analyzed().rdd().id()
+    assert persisted() - before == {result_rdd}
+    assert pr.count() == 3

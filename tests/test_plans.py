@@ -133,3 +133,15 @@ def test_fingerprint_counts_scans_per_table(spark):
     two = one.join(li.select("l_orderkey", "l_suppkey"), "l_orderkey")
     assert fingerprint(formatted_plan(one))["table_scans"] == {"lineitem": 1}
     assert fingerprint(formatted_plan(two))["table_scans"] == {"lineitem": 2}
+
+
+def test_audit_reports_build_job_scans(spark):
+    """graph_assortativity reads lineitem and orders only inside the
+    eager checkpoint job of its edge build, so its final plan shows no
+    table scan; ``tools/plans.py audit`` reports the build job's scans
+    as ``build_table_scans``."""
+    from tools.plans import audit_rows
+
+    (row,) = audit_rows(spark, SF001, ["graph_assortativity"])
+    assert row["table_scans"] == {}
+    assert row["build_table_scans"] == {"lineitem": 1, "orders": 1}

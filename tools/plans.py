@@ -16,6 +16,10 @@ Usage:
 parquet table and the redundant scans among them. A query whose plan
 shows N scans of one table replays a subtree N times; at sf0.1 that
 costs milliseconds, at 100 TB N-1 extra fact-table passes.
+``build_table_scans`` counts the scans per table in the frames the
+query ``localCheckpoint``s while it builds (its eager build jobs),
+which the final plan shows only as ``Scan ExistingRDD``; a query's
+table passes are the two counts added.
 
 ``dump`` writes ``plans/<round>/<query>_<tag>.txt`` (round from
 ``$SPARK_GRAFT_PLAN_ROUND``, default r13), the before/after evidence of
@@ -37,20 +41,27 @@ SF001 = "/root/testdata/sf0.01"
 
 
 def plan_texts(spark, sf_dir: str, names: list[str]):
-    """Yield ``(name, plan_text, error)`` per name; one failing query is
-    recorded, not fatal to the sweep."""
-    from map_reduce_implementation_spark.plans import formatted_plan
+    """Yield ``(name, plan_text, build_plans, error)`` per name, where
+    ``build_plans`` are the plans of the frames the build
+    ``localCheckpoint``ed; one failing query is recorded, not fatal to
+    the sweep."""
+    from map_reduce_implementation_spark.plans.audit import (
+        formatted_plan,
+        recording_checkpoints,
+    )
     from map_reduce_implementation_spark.suite import all_queries
 
     qs = all_queries()
     for name in names:
         if name not in qs:
-            yield name, None, "unknown"
+            yield name, None, [], "unknown"
             continue
         try:
-            yield name, formatted_plan(qs[name].build(spark, sf_dir)), None
+            with recording_checkpoints() as build_plans:
+                df = qs[name].build(spark, sf_dir)
+            yield name, formatted_plan(df), build_plans, None
         except Exception as ex:  # noqa: BLE001 — record, don't abort the sweep
-            yield name, None, str(ex)
+            yield name, None, [], str(ex)
 
 
 def snapshot() -> int:
@@ -62,7 +73,7 @@ def snapshot() -> int:
     spark = get_spark(app_name="plans_snapshot", master="local[4]", shuffle_partitions=8)
     snap = {
         name: fingerprint(text) if err is None else {"error": err[:200]}
-        for name, text, err in plan_texts(spark, sf_dir, list(all_queries()))
+        for name, text, _, err in plan_texts(spark, sf_dir, list(all_queries()))
     }
     with open(SNAPSHOT_PATH, "w") as f:
         json.dump(snap, f, indent=1, sort_keys=True)
@@ -74,9 +85,31 @@ def snapshot() -> int:
     return 0
 
 
+def audit_rows(spark, sf_dir: str, names: list[str]):
+    """Yield the ``audit`` row of each query."""
+    from collections import Counter
+
+    from map_reduce_implementation_spark.plans import PlanAudit
+
+    for name, text, build_plans, err in plan_texts(spark, sf_dir, names):
+        row: dict = {"query": name}
+        if err is None:
+            a = PlanAudit(text)
+            build = sum(
+                (Counter(PlanAudit(p).table_scans) for p in build_plans), Counter()
+            )
+            row.update(
+                a.operators,
+                build_table_scans=dict(sorted(build.items())),
+                redundant_scans=a.redundant_scans,
+            )
+        else:
+            row["error"] = err[:200]
+        yield row
+
+
 def audit(args: list[str]) -> int:
     from bench import HEADLINE
-    from map_reduce_implementation_spark.plans import PlanAudit
     from map_reduce_implementation_spark.session import get_spark
     from map_reduce_implementation_spark.suite import all_queries
 
@@ -86,13 +119,7 @@ def audit(args: list[str]) -> int:
         names = sorted(qs) if "--all" in args else [n for n in HEADLINE if n in qs]
     spark = get_spark(app_name="plans_audit")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", SF001)
-    for name, text, err in plan_texts(spark, sf_dir, names):
-        row: dict = {"query": name}
-        if err is None:
-            a = PlanAudit(text)
-            row.update(a.operators, redundant_scans=a.redundant_scans)
-        else:
-            row["error"] = err[:200]
+    for row in audit_rows(spark, sf_dir, names):
         print(json.dumps(row), flush=True)
     return 0
 
@@ -108,7 +135,7 @@ def dump(tag: str, names: list[str]) -> int:
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark(app_name=f"plans_dump_{tag}")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", SF001)
-    for name, text, err in plan_texts(spark, sf_dir, names):
+    for name, text, _, err in plan_texts(spark, sf_dir, names):
         if err == "unknown":
             print(f"unknown query {name}", file=sys.stderr)
             continue
